@@ -265,7 +265,7 @@ def append_to_delta(df, path, merge_schema=False):
     committed version."""
     jvm = df.sparkSession._jvm
     dx = jvm.graft.sources.DeltaInterop
-    return dx.appendToDelta(df._jdf, path, 20, jvm.scala.Option.empty(),
+    return dx.appendToDelta(df._jdf, path, jvm.scala.Option.empty(),
                             bool(merge_schema))
 
 
@@ -277,7 +277,7 @@ def append_to_delta_txn(df, path, app_id, txn_version):
     with the stream's batch id as txn_version for exactly-once
     streaming into a foreign Delta table."""
     dx = df.sparkSession._jvm.graft.sources.DeltaInterop
-    return dx.appendToDeltaTxn(df._jdf, path, app_id, int(txn_version), 20)
+    return dx.appendToDeltaTxn(df._jdf, path, app_id, int(txn_version))
 
 
 def last_delta_txn_version(spark, path, app_id):
@@ -296,7 +296,7 @@ def delete_from_delta(spark, path, condition_col):
     (or, for a no-match delete, the current) version."""
     dx = spark._jvm.graft.sources.DeltaInterop
     return dx.deleteFromDelta(spark._jsparkSession, path,
-                              condition_col._jc, 20)
+                              condition_col._jc)
 
 
 def append_to_iceberg(df, path, merge_schema=False):
@@ -309,7 +309,7 @@ def append_to_iceberg(df, path, merge_schema=False):
     partition spec. Returns the committed snapshot id."""
     jvm = df.sparkSession._jvm
     ix = jvm.graft.sources.IcebergInterop
-    return ix.appendToIceberg(df._jdf, path, 20, jvm.scala.Option.empty(),
+    return ix.appendToIceberg(df._jdf, path, jvm.scala.Option.empty(),
                               bool(merge_schema))
 
 
@@ -330,7 +330,7 @@ def append_to_iceberg_txn(df, path, app_id, txn_version):
     A replayed epoch at-or-below the watermark commits nothing."""
     ix = df.sparkSession._jvm.graft.sources.IcebergInterop
     return ix.appendToIcebergTxn(df._jdf, path, app_id,
-                                 int(txn_version), 20)
+                                 int(txn_version))
 
 
 def last_iceberg_txn_version(spark, path, app_id):
@@ -347,7 +347,7 @@ def delete_from_iceberg(spark, path, condition_col):
     committed (or, for a no-match delete, the current) snapshot id."""
     ix = spark._jvm.graft.sources.IcebergInterop
     return ix.deleteFromIceberg(spark._jsparkSession, path,
-                                condition_col._jc, 20)
+                                condition_col._jc)
 
 
 def update_delta(spark, path, condition_col, assignments):
@@ -362,7 +362,7 @@ def update_delta(spark, path, condition_col, assignments):
         m = m.updated(k, v._jc)
     dx = jvm.graft.sources.DeltaInterop
     return dx.updateDelta(spark._jsparkSession, path, condition_col._jc,
-                          m, 20)
+                          m)
 
 
 def merge_delta(source_df, path, keys):
@@ -376,7 +376,7 @@ def merge_delta(source_df, path, keys):
     committed version."""
     spark = source_df.sparkSession
     dx = spark._jvm.graft.sources.DeltaInterop
-    return dx.mergeDelta(source_df._jdf, path, _seq(spark, keys), 20)
+    return dx.mergeDelta(source_df._jdf, path, _seq(spark, keys))
 
 
 def optimize_delta(spark, path, target_file_bytes=128 << 20,
@@ -392,7 +392,7 @@ def optimize_delta(spark, path, target_file_bytes=128 << 20,
     compacting, the current) version."""
     dx = spark._jvm.graft.sources.DeltaInterop
     return dx.optimizeDelta(spark._jsparkSession, path,
-                            int(target_file_bytes), 20,
+                            int(target_file_bytes),
                             _seq(spark, zorder_by or []))
 
 
@@ -406,7 +406,7 @@ def cluster_by_delta(spark, path, cols):
     the protocol. Returns the committed version."""
     dx = spark._jvm.graft.sources.DeltaInterop
     return dx.clusterByDelta(spark._jsparkSession, path,
-                             _seq(spark, cols), 20)
+                             _seq(spark, cols))
 
 
 def clone_delta(spark, source, target):
@@ -458,7 +458,7 @@ def expire_iceberg_snapshots(spark, path, keep_last):
     number of files deleted."""
     ix = spark._jvm.graft.sources.IcebergInterop
     return ix.expireIcebergSnapshots(spark._jsparkSession, path,
-                                     int(keep_last), 20)
+                                     int(keep_last))
 
 
 def convert_parquet_to_delta(spark, path):
@@ -489,7 +489,7 @@ def merge_iceberg(source_df, path, keys):
     committed snapshot id."""
     spark = source_df.sparkSession
     ix = spark._jvm.graft.sources.IcebergInterop
-    return ix.mergeIceberg(source_df._jdf, path, _seq(spark, keys), 20)
+    return ix.mergeIceberg(source_df._jdf, path, _seq(spark, keys))
 
 
 def compact_iceberg(spark, path, target_file_bytes=128 << 20,
@@ -502,7 +502,7 @@ def compact_iceberg(spark, path, target_file_bytes=128 << 20,
     committed (or current) snapshot id."""
     ix = spark._jvm.graft.sources.IcebergInterop
     return ix.compactIceberg(spark._jsparkSession, path,
-                             int(target_file_bytes), 20,
+                             int(target_file_bytes),
                              _seq(spark, zorder_by or []))
 
 
@@ -520,7 +520,7 @@ def update_iceberg(spark, path, condition_col, assignments):
         m = m.updated(k, v._jc)
     ix = jvm.graft.sources.IcebergInterop
     return ix.updateIceberg(spark._jsparkSession, path, condition_col._jc,
-                            m, 20)
+                            m)
 
 
 def read_iceberg_changes(spark, path, from_snapshot_id, to_snapshot_id=None):
@@ -572,7 +572,7 @@ def restore_delta(spark, path, version):
     Vacuumed files and cross-schema restores refuse loudly. Returns
     the committed version."""
     dx = spark._jvm.graft.sources.DeltaInterop
-    return dx.restoreDelta(spark._jsparkSession, path, int(version), 20)
+    return dx.restoreDelta(spark._jsparkSession, path, int(version))
 
 
 def rollback_iceberg(spark, path, snapshot_id):
@@ -582,7 +582,7 @@ def rollback_iceberg(spark, path, snapshot_id):
     published metadata version."""
     ix = spark._jvm.graft.sources.IcebergInterop
     return ix.rollbackIceberg(spark._jsparkSession, path,
-                              int(snapshot_id), 20)
+                              int(snapshot_id))
 
 
 def tag_iceberg(spark, path, name, snapshot_id=None):
@@ -591,7 +591,7 @@ def tag_iceberg(spark, path, name, snapshot_id=None):
     while the tag lives. Returns the tagged snapshot id."""
     ix = spark._jvm.graft.sources.IcebergInterop
     return ix.tagIceberg(spark._jsparkSession, path, name,
-                         _opt_long(spark, snapshot_id), 20)
+                         _opt_long(spark, snapshot_id))
 
 
 def branch_iceberg(spark, path, name, snapshot_id=None):
@@ -600,14 +600,14 @@ def branch_iceberg(spark, path, name, snapshot_id=None):
     Returns the snapshot id."""
     ix = spark._jvm.graft.sources.IcebergInterop
     return ix.branchIceberg(spark._jsparkSession, path, name,
-                            _opt_long(spark, snapshot_id), 20)
+                            _opt_long(spark, snapshot_id))
 
 
 def drop_iceberg_ref(spark, path, name):
     """Drop a tag/branch ref; its snapshot stays retained until the
     next expire_iceberg_snapshots."""
     ix = spark._jvm.graft.sources.IcebergInterop
-    ix.dropIcebergRef(spark._jsparkSession, path, name, 20)
+    ix.dropIcebergRef(spark._jsparkSession, path, name)
 
 
 def iceberg_ref_snapshot(spark, path, name):
@@ -691,7 +691,7 @@ def add_column_to_delta(spark, path, name, ddl_type):
     jvm = spark._jvm
     dt = jvm.org.apache.spark.sql.types.DataType.fromDDL(ddl_type)
     dx = jvm.graft.sources.DeltaInterop
-    return dx.addColumnToDelta(spark._jsparkSession, path, name, dt, 20)
+    return dx.addColumnToDelta(spark._jsparkSession, path, name, dt)
 
 
 def set_delta_properties(spark, path, props):
@@ -699,14 +699,14 @@ def set_delta_properties(spark, path, props):
     commit; identity/schema/layout preserved)."""
     dx = spark._jvm.graft.sources.DeltaInterop
     return dx.setDeltaProperties(spark._jsparkSession, path,
-                                 _smap(spark, props), 20)
+                                 _smap(spark, props))
 
 
 def unset_delta_properties(spark, path, keys):
     """UNSET TBLPROPERTIES on a foreign Delta table."""
     dx = spark._jvm.graft.sources.DeltaInterop
     return dx.unsetDeltaProperties(spark._jsparkSession, path,
-                                   _seq(spark, keys), 20)
+                                   _seq(spark, keys))
 
 
 def add_column_to_iceberg(spark, path, name, ddl_type):
@@ -716,7 +716,7 @@ def add_column_to_iceberg(spark, path, name, ddl_type):
     jvm = spark._jvm
     dt = jvm.org.apache.spark.sql.types.DataType.fromDDL(ddl_type)
     ix = jvm.graft.sources.IcebergInterop
-    return ix.addColumnToIceberg(spark._jsparkSession, path, name, dt, 20)
+    return ix.addColumnToIceberg(spark._jsparkSession, path, name, dt)
 
 
 def rename_iceberg_column(spark, path, old, new):
@@ -724,21 +724,21 @@ def rename_iceberg_column(spark, path, old, new):
     field ids never change, so every existing data file keeps reading
     under the new name."""
     ix = spark._jvm.graft.sources.IcebergInterop
-    return ix.renameIcebergColumn(spark._jsparkSession, path, old, new, 20)
+    return ix.renameIcebergColumn(spark._jsparkSession, path, old, new)
 
 
 def set_iceberg_properties(spark, path, props):
     """SET TBLPROPERTIES on a file-based Iceberg table."""
     ix = spark._jvm.graft.sources.IcebergInterop
     return ix.setIcebergProperties(spark._jsparkSession, path,
-                                   _smap(spark, props), 20)
+                                   _smap(spark, props))
 
 
 def remove_iceberg_properties(spark, path, keys):
     """UNSET TBLPROPERTIES on a file-based Iceberg table."""
     ix = spark._jvm.graft.sources.IcebergInterop
     return ix.removeIcebergProperties(spark._jsparkSession, path,
-                                      _seq(spark, keys), 20)
+                                      _seq(spark, keys))
 
 
 def convert_delta_to_iceberg(spark, path):
@@ -853,7 +853,7 @@ def write_iceberg_statistics(spark, path, columns=None, nominal=4096):
     ix = spark._jvm.graft.sources.IcebergInterop
     cols = _seq(spark, columns or [])
     jmap = ix.writeIcebergStatistics(spark._jsparkSession, path, cols,
-                                     nominal, 20)
+                                     nominal)
     out = {}
     it = jmap.iterator()
     while it.hasNext():
@@ -884,7 +884,7 @@ def delete_from_iceberg_by_key(key_rows_df, path):
     guard). Returns the committed snapshot id."""
     spark = key_rows_df.sparkSession
     ix = spark._jvm.graft.sources.IcebergInterop
-    return ix.deleteFromIcebergByKey(key_rows_df._jdf, path, 20)
+    return ix.deleteFromIcebergByKey(key_rows_df._jdf, path)
 
 
 def read_iceberg_filtered(spark, path, condition_col):

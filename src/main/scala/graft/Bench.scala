@@ -136,8 +136,12 @@ object Bench {
     // drop under the threshold, up to SPARK_GRAFT_BENCH_LOAD_WAIT
     // seconds (default 300; 0 disables). If it never quiets, run
     // anyway and stamp load_label:"contended" so the artifact is
-    // self-labeling rather than silently wrong.
-    val quietLimit = 1.5 * (Runtime.getRuntime.availableProcessors() / 32.0)
+    // self-labeling rather than silently wrong. The band scales with
+    // the core count but never drops below one busy core's worth: on
+    // a few-core host 1.5 × nproc/32 is under the load of any other
+    // single process.
+    val quietLimit = math.max(1.0,
+      1.5 * (Runtime.getRuntime.availableProcessors() / 32.0))
     val maxWaitSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_WAIT", "300").toInt
     val waitDeadline = System.nanoTime() + maxWaitSec * 1000000000L
     while (loadAvg > quietLimit && System.nanoTime() < waitDeadline) {

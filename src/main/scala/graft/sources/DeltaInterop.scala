@@ -1922,13 +1922,7 @@ object DeltaInterop {
         f.metadata.getBoolean("delta.identity.allowExplicit"))
   }
 
-  /** TEST SEAM: runs once after an append's files are staged and
-    * before its first commit attempt — lets a spec land a concurrent
-    * writer's version in the exact stage-to-commit window (the race
-    * re-validation's only deterministic entry point). */
-  private[graft] var appendRaceHook: Option[() => Unit] = None
-
-  def appendToDelta(df: DataFrame, path: String, maxRetries: Int = 20,
+  def appendToDelta(df: DataFrame, path: String,
       txn: Option[(String, Long)] = None,
       mergeSchema: Boolean = false): Long = {
     val spark = df.sparkSession
@@ -2192,8 +2186,8 @@ object DeltaInterop {
     // parts into place (the hive layout from partitionBy IS the
     // destination layout; part names carry task UUIDs, so no
     // collisions) ----
-    val stagingName = s"_graft_append_${java.util.UUID.randomUUID()}"
-    val staging = new HPath(root, stagingName)
+    val pub = new StagedPublish(fs, root)
+    val staging = pub.staging("append")
     val ordered =
       if (!mapped) dfW.select(schema.fieldNames.map(col).toSeq: _*)
       else dfW.select(schema.fields.zip(physSchema.fields).map {
@@ -2208,33 +2202,8 @@ object DeltaInterop {
       try DeltaStats.writeWithStats(ordered, staging.toString,
         physPartCols, physDataSchema)
       finally persistedInput.foreach(_.unpersist(false))
-    def listParquetRec(dir: HPath, rel: String): Seq[(String, Long, Long)] =
-      fs.listStatus(dir).toSeq.flatMap { stat =>
-        val name = stat.getPath.getName
-        val childRel = if (rel.isEmpty) name else s"$rel/$name"
-        if ((name.startsWith("_") || name.startsWith(".")) && !name.contains("="))
-          Nil
-        else if (stat.isDirectory) listParquetRec(stat.getPath, childRel)
-        else if (name.endsWith(".parquet"))
-          Seq((childRel, stat.getLen, stat.getModificationTime))
-        else Nil
-      }
-    val staged = listParquetRec(staging, "")
-    val moved = scala.collection.mutable.Buffer[String]()
-    def cleanup(): Unit = {
-      moved.foreach(p => fs.delete(new HPath(root, p), false))
-      fs.delete(staging, true)
-    }
-    try {
-      staged.foreach { case (rel, _, _) =>
-        val dst = new HPath(root, rel)
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(new HPath(staging, rel), dst))
-          throw new java.io.IOException(
-            s"could not move staged append file $rel into $path")
-        moved += rel
-      }
-      fs.delete(staging, true)
+    val committed = OptimisticCommit.cleaningUp(pub.cleanup()) {
+      val staged = pub.publish(staging)
 
       val now = System.currentTimeMillis()
       val actions = Seq.newBuilder[String]
@@ -2261,7 +2230,7 @@ object DeltaInterop {
       // races, so the row-tracking half re-renders per attempt.
       val rowTracking = st.writerFeatures.contains("rowTracking")
       lazy val recordsOf: Map[String, Long] = staged.map {
-        case (rel, _, _) =>
+        case (rel, _) =>
           rel -> statsMap.get(rel)
             .flatMap(DeltaStats.parse(_, physDataSchema))
             .flatMap(_.numRecords)
@@ -2275,7 +2244,7 @@ object DeltaInterop {
       def bytesFor(stNow: DeltaSnapshot, v: Long): Array[Byte] = {
         val tail = Seq.newBuilder[String]
         var wm = stNow.rowIdHighWaterMark.getOrElse(-1L)
-        staged.foreach { case (rel, size, _) =>
+        staged.foreach { case (rel, size) =>
           val pv = hivePartitionValues(rel, physPartCols)
           val pvJson = pv.map { case (k, vv) =>
             "\"" + jsonEscape(k) + "\":\"" + jsonEscape(vv) + "\""
@@ -2298,77 +2267,61 @@ object DeltaInterop {
       }
 
       // ---- optimistic commit: claim version slots until one lands ----
-      // test seam: lets a spec land a concurrent writer's version in
-      // the exact stage-to-commit window (one-shot)
-      appendRaceHook.foreach { h => appendRaceHook = None; h() }
       var v = st.version + 1
-      var attempts = 0
-      var committed = -1L
-      while (committed < 0) {
-        try {
-          io.writeExclusive(new HPath(logDir, f"$v%020d.json"),
+      OptimisticCommit.retry("appendToDelta", path) { lost =>
+        // a peer landed version v: re-validate (its commit may have
+        // changed schema or protocol) and take the next slot. The
+        // staged files were written under the PRE-RACE physical layout
+        // — a peer changing the column mapping mid-race would make
+        // them wrong, so that also refuses.
+        if (lost > 0) st = validate()
+        if (lost > 0 && alreadyApplied) {
+          // the peer WAS this appId's batch (a restarted twin): drop
+          // our copy of the data — committing it would double-apply
+          // the batch
+          pub.cleanup()
+          st.version
+        } else {
+          if (lost > 0) {
+            // the peer must not have changed the TABLE's schema or
+            // mapping (under mergeSchema, compare against the
+            // pre-widen state — our metaData action still declares the
+            // correct union over pure-append peers). The compare is
+            // over the FULL logical schema, METADATA INCLUDED, on
+            // mapped and unmapped tables alike: a physical-layout-only
+            // compare (physicalField strips field metadata) would let
+            // a peer's delta.identity.highWaterMark advance slip
+            // through on mapped tables, and this writer would then
+            // commit stale beyond-watermark identity values AND
+            // regress the watermark. Same-mode + logical-equality
+            // implies physical-layout equality, so nothing the old
+            // check caught is lost.
+            val freshLogical =
+              DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
+            require((st.colMapMode != "none") == mapped &&
+                freshLogical == tableSchema,
+              s"table at $path changed its schema or column mapping " +
+                "during the append — retry the append against the new state")
+            v = math.max(v + 1, st.version + 1)
+          }
+          OptimisticCommit.claim(io, new HPath(logDir, f"$v%020d.json"),
             bytesFor(st, v))
-          committed = v
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            attempts += 1
-            if (attempts > maxRetries)
-              throw new IllegalStateException(
-                s"appendToDelta lost $maxRetries version races at $path — " +
-                  "giving up")
-            // a peer landed this version: re-validate (its commit may
-            // have changed schema or protocol) and take the next slot.
-            // The staged files were written under the PRE-RACE physical
-            // layout — a peer changing the column mapping mid-race
-            // would make them wrong, so that also refuses.
-            st = validate()
-            if (alreadyApplied) {
-              // the peer WAS this appId's batch (a restarted twin):
-              // drop our copy of the data — committing it would
-              // double-apply the batch
-              cleanup()
-              committed = st.version
-            } else {
-              // the peer must not have changed the TABLE's schema or
-              // mapping (under mergeSchema, compare against the
-              // pre-widen state — our metaData action still declares
-              // the correct union over pure-append peers). The compare
-              // is over the FULL logical schema, METADATA INCLUDED, on
-              // mapped and unmapped tables alike: a physical-layout-
-              // only compare (physicalField strips field metadata)
-              // would let a peer's delta.identity.highWaterMark
-              // advance slip through on mapped tables, and this
-              // writer would then commit stale beyond-watermark
-              // identity values AND regress the watermark. Same-mode +
-              // logical-equality implies physical-layout equality, so
-              // nothing the old check caught is lost.
-              val freshLogical =
-                DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
-              require((st.colMapMode != "none") == mapped &&
-                  freshLogical == tableSchema,
-                s"table at $path changed its schema or column mapping " +
-                  "during the append — retry the append against the new state")
-              v = math.max(v + 1, st.version + 1)
-            }
+          v
         }
       }
-      // honor an EXPLICIT delta.checkpointInterval (real writers
-      // checkpoint every N commits so the JSON tail stays bounded);
-      // best-effort — a checkpoint refusal (v2 policy, domainMetadata)
-      // or race never fails the landed append
-      st.configuration.get("delta.checkpointInterval")
-        .flatMap(s => scala.util.Try(s.toLong).toOption)
-        .filter(i => i > 0 && committed > 0 && committed % i == 0)
-        .foreach { _ =>
-          try checkpointDelta(spark, path)
-          catch { case _: Exception => () }
-        }
-      committed
-    } catch {
-      case e: Throwable =>
-        try cleanup() catch { case _: Exception => () }
-        throw e
     }
+    // honor an EXPLICIT delta.checkpointInterval (real writers
+    // checkpoint every N commits so the JSON tail stays bounded);
+    // best-effort — a checkpoint refusal (v2 policy, domainMetadata)
+    // or race never fails the landed append
+    st.configuration.get("delta.checkpointInterval")
+      .flatMap(s => scala.util.Try(s.toLong).toOption)
+      .filter(i => i > 0 && committed > 0 && committed % i == 0)
+      .foreach { _ =>
+        try checkpointDelta(spark, path)
+        catch { case _: Exception => () }
+      }
+    committed
   }
 
   /** IDEMPOTENT append — [[appendToDelta]] with the protocol's
@@ -2382,8 +2335,8 @@ object DeltaInterop {
     * This is exactly Delta's `txnAppId`/`txnVersion` idempotent-write
     * contract, which [[exactlyOnceDeltaAppender]] builds on. */
   def appendToDeltaTxn(df: DataFrame, path: String, appId: String,
-      txnVersion: Long, maxRetries: Int = 20): Long =
-    appendToDelta(df, path, maxRetries, Some((appId, txnVersion)))
+      txnVersion: Long): Long =
+    appendToDelta(df, path, Some((appId, txnVersion)))
 
   /** The appId's last committed `setTransaction` version at `path`, or
     * -1 when the app never committed — the read half of the
@@ -2454,10 +2407,10 @@ object DeltaInterop {
     * conditional-put protocol; a lost race RESTARTS the whole
     * operation against the peer's state (a delete's read set is the
     * table, so re-validation alone is not enough), bounded by
-    * `maxRetries`. A no-match delete commits nothing and returns the
-    * current version. Returns the committed (or current) version. */
-  def deleteFromDelta(spark: SparkSession, path: String, condition: Column,
-      maxRetries: Int = 20): Long = {
+    * [[OptimisticCommit]]. A no-match delete commits nothing and returns
+    * the current version. Returns the committed (or current) version. */
+  def deleteFromDelta(spark: SparkSession, path: String,
+      condition: Column): Long = {
     val root = new HPath(path)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = root.getFileSystem(conf)
@@ -2506,9 +2459,7 @@ object DeltaInterop {
 
     def qualified(p: String): String = fileMetaPath(p, conf)
 
-    var attempts = 0
-    var result = -1L
-    while (result < 0) {
+    OptimisticCommit.retry("deleteFromDelta", path) { _ =>
       val st = validate()
       val schema = DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
       val partCols = st.partCols
@@ -2553,21 +2504,9 @@ object DeltaInterop {
         removeWhole = st.active.collect {
           case (p, (pv, _)) if matchedPvs(pv) => (p, pv)
         }
-        if (removeWhole.isEmpty) result = st.version
-        else {
-          try {
-            result = commitDelete(io, logDir, st,
-              System.currentTimeMillis(), condition.toString, removeWhole,
-              Nil, Nil, partCols.map(physPartOf))
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              attempts += 1
-              if (attempts > maxRetries)
-                throw new IllegalStateException(
-                  s"deleteFromDelta lost $maxRetries version races at " +
-                    s"$path — giving up")
-          }
-        }
+        if (removeWhole.isEmpty) st.version
+        else commitDelete(io, logDir, st, System.currentTimeMillis(),
+          condition.toString, removeWhole, Nil, Nil, partCols.map(physPartOf))
       } else {
         // one distributed detection scan — over the STATS-PRUNED
         // candidates only (per-file min/max vs the predicate's
@@ -2599,7 +2538,6 @@ object DeltaInterop {
         }
         removeWhole = rm.result()
         rewriteFiles = rw.result()
-        if (removeWhole.isEmpty && rewriteFiles.isEmpty) result = st.version
 
         // helper reused for the rewrite write and the cdc write
         def affectedScan(keep: Column, extra: Seq[(String, Column)])
@@ -2613,17 +2551,10 @@ object DeltaInterop {
           out
         }
 
-        if (result < 0) {
         val now0 = System.currentTimeMillis()
-        val staging = new HPath(root, s"_graft_delete_${java.util.UUID.randomUUID()}")
-        val cdcStaging = new HPath(root,
-          s"_graft_cdc_${java.util.UUID.randomUUID()}")
-        val moved = scala.collection.mutable.Buffer[String]()
-        def cleanupStaged(): Unit = {
-          moved.foreach(p => fs.delete(new HPath(root, p), false))
-          fs.delete(staging, true); fs.delete(cdcStaging, true)
-        }
-        try {
+        val pub = new StagedPublish(fs, root)
+        if (removeWhole.isEmpty && rewriteFiles.isEmpty) st.version
+        else OptimisticCommit.cleaningUp(pub.cleanup()) {
           // MERGE-ON-READ mode (delta.enableDeletionVectors=true): a
           // partially-matched file is re-added with a fresh deletion
           // vector covering (old DV ∪ newly matched rows) — O(deleted
@@ -2646,7 +2577,7 @@ object DeltaInterop {
                 condition, lit(false)))
               .select(col("__file"), col("__pos"))
             dvAdds = writeMergedDvs(spark, root, dataSchema,
-              rewriteFiles, newly, moved)
+              rewriteFiles, newly, pub)
           }
           // rewrite survivors of partially-matched files; the write
           // tasks collect each rewritten file's stats in-flight. On a
@@ -2672,20 +2603,11 @@ object DeltaInterop {
             }
             val (physSurv, physPartCols, physDataSchema) =
               physicalWrite(spark, st, schema, partCols, survivors)
+            val staging = pub.staging("delete")
             addStats = DeltaStats.writeWithStats(
               Sizing.distributeForWrite(physSurv, physPartCols),
               staging.toString, physPartCols, physDataSchema)
-            val staged = listStagedParquet(fs, staging)
-            staged.foreach { case (rel, _) =>
-              val dst = new HPath(root, rel)
-              fs.mkdirs(dst.getParent)
-              if (!fs.rename(new HPath(staging, rel), dst))
-                throw new java.io.IOException(
-                  s"could not move rewritten file $rel into $path")
-              moved += rel
-            }
-            fs.delete(staging, true)
-            adds = staged
+            adds = pub.publish(staging)
           }
           // cdc files: ALL deleted rows of the commit (cdc is
           // authoritative once present), only when the commit rewrites
@@ -2697,46 +2619,19 @@ object DeltaInterop {
                 col("_change_type")).toSeq: _*)
             val (physDeleted, cdcPartCols, _) =
               physicalWrite(spark, st, schema, partCols, deleted)
-            if (partCols.nonEmpty)
-              physDeleted.write.partitionBy(cdcPartCols: _*)
-                .parquet(cdcStaging.toString)
-            else physDeleted.write.parquet(cdcStaging.toString)
-            val staged = listStagedParquet(fs, cdcStaging)
-            staged.foreach { case (rel, _) =>
-              val dst = new HPath(root, s"_change_data/$rel")
-              fs.mkdirs(dst.getParent)
-              if (!fs.rename(new HPath(cdcStaging, rel), dst))
-                throw new java.io.IOException(
-                  s"could not move cdc file $rel into $path")
-              moved += s"_change_data/$rel"
-            }
-            fs.delete(cdcStaging, true)
-            cdcAdds = staged
+            cdcAdds = writeCdc(pub, physDeleted, cdcPartCols)
           }
           // tombstone the fully-matched files AND the rewritten (or
           // DV-re-added) sources; rewritten survivors carry the fresh
           // in-flight stats, DV re-adds the original file's
           // (still-valid bounds — a DV only strikes rows)
-          result = commitDelete(io, logDir, st, now0, condition.toString,
+          commitDelete(io, logDir, st, now0, condition.toString,
             removeWhole ++ rewriteFiles.map { case (p, (pv, _)) => (p, pv) },
             adds, cdcAdds, partCols.map(physPartOf), dvAdds = dvAdds,
             statsOf = p => addStats.get(p).orElse(st.stats.get(p)))
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            cleanupStaged()
-            attempts += 1
-            if (attempts > maxRetries)
-              throw new IllegalStateException(
-                s"deleteFromDelta lost $maxRetries version races at $path " +
-                  "— giving up")
-          case e: Throwable =>
-            try cleanupStaged() catch { case _: Exception => () }
-            throw e
-        }
         }
       }
     }
-    result
   }
 
   /** UPDATE the rows matching `condition` in an existing Delta table
@@ -2769,7 +2664,7 @@ object DeltaInterop {
     * version race restarts the whole operation; a no-match update
     * commits nothing. Returns the committed (or current) version. */
   def updateDelta(spark: SparkSession, path: String, condition: Column,
-      assignments: Map[String, Column], maxRetries: Int = 20): Long = {
+      assignments: Map[String, Column]): Long = {
     require(assignments.nonEmpty, "updateDelta needs at least one SET assignment")
     val root = new HPath(path)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -2824,9 +2719,7 @@ object DeltaInterop {
 
     def qualified(p: String): String = fileMetaPath(p, conf)
 
-    var attempts = 0
-    var result = -1L
-    while (result < 0) {
+    OptimisticCommit.retry("updateDelta", path) { _ =>
       val st = validate()
       val schema = DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
       val partCols = st.partCols
@@ -2861,154 +2754,110 @@ object DeltaInterop {
       val affected = liveScan(candidates)
         .where(matchedTrue)
         .select(col("__file")).distinct().collect().map(_.getString(0))
-      if (affected.isEmpty) { result = st.version }
-      else {
-        val entries = affected.toSeq.map(byQualified)
-        val staging = new HPath(root,
-          s"_graft_update_${java.util.UUID.randomUUID()}")
-        val cdcStaging = new HPath(root,
-          s"_graft_cdc_${java.util.UUID.randomUUID()}")
-        val moved = scala.collection.mutable.Buffer[String]()
-        def cleanupStaged(): Unit = {
-          moved.foreach(p => fs.delete(new HPath(root, p), false))
-          fs.delete(staging, true); fs.delete(cdcStaging, true)
-        }
-        try {
-          val now = System.currentTimeMillis()
-          // MERGE-ON-READ mode (delta.enableDeletionVectors=true):
-          // strike the matched rows with merged deletion vectors and
-          // append ONLY the transformed rows — O(changed rows),
-          // Delta's own modern UPDATE. Otherwise CoW-rewrite the
-          // affected files whole.
-          val dvMode = st.configuration
-            .get("delta.enableDeletionVectors").contains("true")
-          // GUARANTEED row-tracking tables MATERIALIZE: carried rows
-          // keep (id, commit version), updated rows keep the id and
-          // null the version (it inherits the new add's)
-          val mat = rowIdMaterialization(spark, root, st, schema,
-            partCols, dataSchema, refuseW)
-          def matCols(idN: String, rcvN: String)
-              : Seq[org.apache.spark.sql.Column] = Seq(
-            col("__rowid").as(idN),
-            org.apache.spark.sql.functions.when(matchedTrue,
-              lit(null).cast("long"))
-              .otherwise(col("__rowrcv")).as(rcvN))
-          var dvAdds: Seq[(String, Map[String, String], Long,
-            DeletionVectors.Descriptor)] = Nil
-          val rewritten =
-            if (!dvMode) mat match {
+      val entries = affected.toSeq.map(byQualified)
+      val pub = new StagedPublish(fs, root)
+      if (affected.isEmpty) st.version
+      else OptimisticCommit.cleaningUp(pub.cleanup()) {
+        val now = System.currentTimeMillis()
+        // MERGE-ON-READ mode (delta.enableDeletionVectors=true):
+        // strike the matched rows with merged deletion vectors and
+        // append ONLY the transformed rows — O(changed rows),
+        // Delta's own modern UPDATE. Otherwise CoW-rewrite the
+        // affected files whole.
+        val dvMode = st.configuration
+          .get("delta.enableDeletionVectors").contains("true")
+        // GUARANTEED row-tracking tables MATERIALIZE: carried rows
+        // keep (id, commit version), updated rows keep the id and
+        // null the version (it inherits the new add's)
+        val mat = rowIdMaterialization(spark, root, st, schema,
+          partCols, dataSchema, refuseW)
+        def matCols(idN: String, rcvN: String)
+            : Seq[org.apache.spark.sql.Column] = Seq(
+          col("__rowid").as(idN),
+          org.apache.spark.sql.functions.when(matchedTrue,
+            lit(null).cast("long"))
+            .otherwise(col("__rowrcv")).as(rcvN))
+        var dvAdds: Seq[(String, Map[String, String], Long,
+          DeletionVectors.Descriptor)] = Nil
+        val rewritten =
+          if (!dvMode) mat match {
+            case Some((idN, rcvN, matScan)) =>
+              val d = matScan(entries)
+              d.select(schema.fields.map { f =>
+                assignments.get(f.name) match {
+                  case Some(v) =>
+                    org.apache.spark.sql.functions.when(matchedTrue,
+                      v.cast(f.dataType)).otherwise(col(f.name))
+                      .as(f.name)
+                  case None => col(f.name)
+                }
+              }.toSeq ++ matCols(idN, rcvN): _*)
+            case None =>
+              applied(liveScan(entries)).drop("__file")
+                .select(schema.fieldNames.map(col).toSeq: _*)
+          }
+          else {
+            val livePos = liveMutationScan(spark, root, st, schema,
+              partCols, dataSchema, withPos = true)
+            mat match {
               case Some((idN, rcvN, matScan)) =>
-                val d = matScan(entries)
-                d.select(schema.fields.map { f =>
+                val matchedRows = matScan(entries).where(matchedTrue)
+                dvAdds = writeMergedDvs(spark, root, dataSchema, entries,
+                  matchedRows.select(col("__file"), col("__pos")), pub)
+                // transformed rows append with their PRESERVED ids
+                matchedRows.select(schema.fields.map { f =>
                   assignments.get(f.name) match {
-                    case Some(v) =>
-                      org.apache.spark.sql.functions.when(matchedTrue,
-                        v.cast(f.dataType)).otherwise(col(f.name))
-                        .as(f.name)
+                    case Some(v) => v.cast(f.dataType).as(f.name)
                     case None => col(f.name)
                   }
-                }.toSeq ++ matCols(idN, rcvN): _*)
+                }.toSeq ++ Seq(col("__rowid").as(idN),
+                  lit(null).cast("long").as(rcvN)): _*)
               case None =>
-                applied(liveScan(entries)).drop("__file")
+                val matchedRows = livePos(entries).where(matchedTrue)
+                dvAdds = writeMergedDvs(spark, root, dataSchema, entries,
+                  matchedRows.select(col("__file"), col("__pos")), pub)
+                applied(matchedRows.drop("__pos")).drop("__file")
                   .select(schema.fieldNames.map(col).toSeq: _*)
             }
-            else {
-              val livePos = liveMutationScan(spark, root, st, schema,
-                partCols, dataSchema, withPos = true)
-              mat match {
-                case Some((idN, rcvN, matScan)) =>
-                  val matchedRows = matScan(entries).where(matchedTrue)
-                  dvAdds = writeMergedDvs(spark, root, dataSchema, entries,
-                    matchedRows.select(col("__file"), col("__pos")), moved)
-                  // transformed rows append with their PRESERVED ids
-                  matchedRows.select(schema.fields.map { f =>
-                    assignments.get(f.name) match {
-                      case Some(v) => v.cast(f.dataType).as(f.name)
-                      case None => col(f.name)
-                    }
-                  }.toSeq ++ Seq(col("__rowid").as(idN),
-                    lit(null).cast("long").as(rcvN)): _*)
-                case None =>
-                  val matchedRows = livePos(entries).where(matchedTrue)
-                  dvAdds = writeMergedDvs(spark, root, dataSchema, entries,
-                    matchedRows.select(col("__file"), col("__pos")), moved)
-                  applied(matchedRows.drop("__pos")).drop("__file")
-                    .select(schema.fieldNames.map(col).toSeq: _*)
-              }
-            }
-          // the table's declared obligations hold for what this UPDATE
-          // writes — one aggregate pass, refusing before any file lands
-          // (assigned NOT NULL columns and generated-column consistency
-          // ride it too)
-          enforceChecks(rewritten,
-            tableChecks(st, schema, refuseW) ++
-              generatedConsistencyChecks(schema, "UPDATE") ++
-              notNullChecks(schema, schema.fields.toSeq.collect {
-                case f if !f.nullable &&
-                    assignments.contains(f.name) => f.name
-              }), refuseW)
-          val (physRewritten, physPartCols, physDataSchema) =
-            physicalWrite(spark, st, schema, partCols, rewritten)
-          val addStats = DeltaStats.writeWithStats(
-            Sizing.distributeForWrite(physRewritten, physPartCols),
-            staging.toString, physPartCols, physDataSchema)
-          val staged = listStagedParquet(fs, staging)
-          staged.foreach { case (rel, _) =>
-            val dst = new HPath(root, rel)
-            fs.mkdirs(dst.getParent)
-            if (!fs.rename(new HPath(staging, rel), dst))
-              throw new java.io.IOException(
-                s"could not move rewritten file $rel into $path")
-            moved += rel
           }
-          fs.delete(staging, true)
+        // the table's declared obligations hold for what this UPDATE
+        // writes — one aggregate pass, refusing before any file lands
+        // (assigned NOT NULL columns and generated-column consistency
+        // ride it too)
+        enforceChecks(rewritten,
+          tableChecks(st, schema, refuseW) ++
+            generatedConsistencyChecks(schema, "UPDATE") ++
+            notNullChecks(schema, schema.fields.toSeq.collect {
+              case f if !f.nullable &&
+                  assignments.contains(f.name) => f.name
+            }), refuseW)
+        val (physRewritten, physPartCols, physDataSchema) =
+          physicalWrite(spark, st, schema, partCols, rewritten)
+        val staging = pub.staging("update")
+        val addStats = DeltaStats.writeWithStats(
+          Sizing.distributeForWrite(physRewritten, physPartCols),
+          staging.toString, physPartCols, physDataSchema)
+        val staged = pub.publish(staging)
 
-          var cdcAdds: Seq[(String, Long)] = Nil
-          if (cdfEnabled) {
-            val matchedRows = liveScan(entries).where(matchedTrue)
-            val pre = matchedRows.drop("__file")
-              .select(schema.fieldNames.map(col).toSeq: _*)
-              .withColumn("_change_type", lit("update_preimage"))
-            val post = applied(matchedRows).drop("__file")
-              .select(schema.fieldNames.map(col).toSeq: _*)
-              .withColumn("_change_type", lit("update_postimage"))
-            val (cdc, cdcPartCols, _) = physicalWrite(spark, st, schema,
-              partCols, pre.unionByName(post))
-            if (partCols.nonEmpty)
-              cdc.write.partitionBy(cdcPartCols: _*)
-                .parquet(cdcStaging.toString)
-            else cdc.write.parquet(cdcStaging.toString)
-            val cstaged = listStagedParquet(fs, cdcStaging)
-            cstaged.foreach { case (rel, _) =>
-              val dst = new HPath(root, s"_change_data/$rel")
-              fs.mkdirs(dst.getParent)
-              if (!fs.rename(new HPath(cdcStaging, rel), dst))
-                throw new java.io.IOException(
-                  s"could not move cdc file $rel into $path")
-              moved += s"_change_data/$rel"
-            }
-            fs.delete(cdcStaging, true)
-            cdcAdds = cstaged
-          }
-          result = commitDelete(io, logDir, st, now, condition.toString,
-            entries.map { case (p, (pv, _)) => (p, pv) }, staged, cdcAdds,
-            physPartCols, operation = "UPDATE", dvAdds = dvAdds,
-            statsOf = p => addStats.get(p).orElse(st.stats.get(p)))
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            cleanupStaged()
-            attempts += 1
-            if (attempts > maxRetries)
-              throw new IllegalStateException(
-                s"updateDelta lost $maxRetries version races at $path — " +
-                  "giving up")
-          case e: Throwable =>
-            try cleanupStaged() catch { case _: Exception => () }
-            throw e
+        var cdcAdds: Seq[(String, Long)] = Nil
+        if (cdfEnabled) {
+          val matchedRows = liveScan(entries).where(matchedTrue)
+          val pre = matchedRows.drop("__file")
+            .select(schema.fieldNames.map(col).toSeq: _*)
+            .withColumn("_change_type", lit("update_preimage"))
+          val post = applied(matchedRows).drop("__file")
+            .select(schema.fieldNames.map(col).toSeq: _*)
+            .withColumn("_change_type", lit("update_postimage"))
+          val (cdc, cdcPartCols, _) = physicalWrite(spark, st, schema,
+            partCols, pre.unionByName(post))
+          cdcAdds = writeCdc(pub, cdc, cdcPartCols)
         }
+        commitDelete(io, logDir, st, now, condition.toString,
+          entries.map { case (p, (pv, _)) => (p, pv) }, staged, cdcAdds,
+          physPartCols, operation = "UPDATE", dvAdds = dvAdds,
+          statsOf = p => addStats.get(p).orElse(st.stats.get(p)))
       }
     }
-    result
   }
 
   /** MERGE (upsert) `source` into an existing Delta table (foreign or
@@ -3029,12 +2878,10 @@ object DeltaInterop {
     * This is [[mergeDeltaClauses]] with the classic clause pair
     * `WHEN MATCHED THEN UPDATE SET * / WHEN NOT MATCHED THEN
     * INSERT *` — see there for the full contract. */
-  def mergeDelta(source: DataFrame, path: String, keys: Seq[String],
-      maxRetries: Int = 20): Long =
+  def mergeDelta(source: DataFrame, path: String, keys: Seq[String]): Long =
     mergeDeltaClauses(source, path, keys,
       matched = Seq(Merge.MatchedUpdate()),
-      notMatched = Seq(Merge.NotMatchedInsert()),
-      maxRetries = maxRetries)
+      notMatched = Seq(Merge.NotMatchedInsert()))
 
   /** Full-clause MERGE into an existing Delta table (foreign or
     * mirrored) on `keys` — conditional clauses, partial `SET`,
@@ -3084,8 +2931,7 @@ object DeltaInterop {
       keys: Seq[String],
       matched: Seq[Merge.MatchedClause] = Nil,
       notMatched: Seq[Merge.NotMatchedInsert] = Nil,
-      notMatchedBySource: Seq[Merge.BySourceClause] = Nil,
-      maxRetries: Int = 20): Long = {
+      notMatchedBySource: Seq[Merge.BySourceClause] = Nil): Long = {
     require(keys.nonEmpty, "mergeDeltaClauses needs at least one key column")
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty, "MERGE needs at least one clause")
@@ -3203,9 +3049,7 @@ object DeltaInterop {
 
     import org.apache.spark.sql.functions.{coalesce, when}
 
-    var attempts = 0
-    var result = -1L
-    while (result < 0) {
+    OptimisticCommit.retry("mergeDelta", path) { _ =>
       val st = validate()
       val schema = DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
       val partCols = st.partCols
@@ -3377,16 +3221,8 @@ object DeltaInterop {
         }
 
       val entries = affected.toSeq.map(byQualified)
-      val staging = new HPath(root,
-        s"_graft_merge_${java.util.UUID.randomUUID()}")
-      val cdcStaging = new HPath(root,
-        s"_graft_cdc_${java.util.UUID.randomUUID()}")
-      val moved = scala.collection.mutable.Buffer[String]()
-      def cleanupStaged(): Unit = {
-        moved.foreach(p => fs.delete(new HPath(root, p), false))
-        fs.delete(staging, true); fs.delete(cdcStaging, true)
-      }
-      try {
+      val pub = new StagedPublish(fs, root)
+      try OptimisticCommit.cleaningUp(pub.cleanup()) {
         val now = System.currentTimeMillis()
         // rewritten = affected files with clause-deleted rows dropped
         // and clause-updated rows transformed, plus the inserts
@@ -3443,7 +3279,7 @@ object DeltaInterop {
                 val dd = disposed(matScan(entries))
                 dvAdds = writeMergedDvs(spark, root, dataSchema, entries,
                   dd.where(col("__mi") =!= -1 || col("__si") =!= -1)
-                    .select(col("__file"), col("__pos")), moved)
+                    .select(col("__file"), col("__pos")), pub)
                 dd.where(updHit)
                   .select(schema.fields.map(newVal).toSeq ++ Seq(
                     col("__rowid").as(idN),
@@ -3453,7 +3289,7 @@ object DeltaInterop {
                 val dd = disposed(livePos(entries))
                 dvAdds = writeMergedDvs(spark, root, dataSchema, entries,
                   dd.where(col("__mi") =!= -1 || col("__si") =!= -1)
-                    .select(col("__file"), col("__pos")), moved)
+                    .select(col("__file"), col("__pos")), pub)
                 dd.where(updHit)
                   .select(schema.fields.map(newVal).toSeq: _*)
                   .unionByName(inserts)
@@ -3473,24 +3309,15 @@ object DeltaInterop {
 
         val (physRewritten, physPartCols, physDataSchema) =
           physicalWrite(spark, st, schema, partCols, rewritten)
+        val staging = pub.staging("merge")
         val addStats = DeltaStats.writeWithStats(
           Sizing.distributeForWrite(physRewritten, physPartCols),
           staging.toString, physPartCols, physDataSchema)
-        val staged = listStagedParquet(fs, staging)
+        val staged = pub.publish(staging)
         if (staged.isEmpty && entries.isEmpty) {
           // empty source, nothing matched: no-op
-          fs.delete(staging, true)
-          result = st.version
+          st.version
         } else {
-          staged.foreach { case (rel, _) =>
-            val dst = new HPath(root, rel)
-            fs.mkdirs(dst.getParent)
-            if (!fs.rename(new HPath(staging, rel), dst))
-              throw new java.io.IOException(
-                s"could not move staged merge file $rel into $path")
-            moved += rel
-          }
-          fs.delete(staging, true)
 
           var cdcAdds: Seq[(String, Long)] = Nil
           if (cdfEnabled) {
@@ -3513,21 +3340,7 @@ object DeltaInterop {
             val (cdc, cdcPartCols, _) = physicalWrite(spark, st, schema,
               partCols, (pre.toSeq ++ post.toSeq ++ dels.toSeq :+ ins)
                 .reduce(_.unionByName(_)))
-            if (partCols.nonEmpty)
-              cdc.write.partitionBy(cdcPartCols: _*)
-                .parquet(cdcStaging.toString)
-            else cdc.write.parquet(cdcStaging.toString)
-            val cstaged = listStagedParquet(fs, cdcStaging)
-            cstaged.foreach { case (rel, _) =>
-              val dst = new HPath(root, s"_change_data/$rel")
-              fs.mkdirs(dst.getParent)
-              if (!fs.rename(new HPath(cdcStaging, rel), dst))
-                throw new java.io.IOException(
-                  s"could not move cdc file $rel into $path")
-              moved += s"_change_data/$rel"
-            }
-            fs.delete(cdcStaging, true)
-            cdcAdds = cstaged
+            cdcAdds = writeCdc(pub, cdc, cdcPartCols)
           }
           val metaAction =
             if (identityWm.isEmpty) None
@@ -3542,29 +3355,17 @@ object DeltaInterop {
               Some(metaDataActionJson(schemaWithWm, partCols,
                 st.configuration, mergeColl, now))
             }
-          result = commitDelete(io, logDir, st, now,
+          commitDelete(io, logDir, st, now,
             s"merge on (${keys.mkString(", ")})",
             entries.map { case (p, (pv, _)) => (p, pv) }, staged, cdcAdds,
             physPartCols, operation = "MERGE", dvAdds = dvAdds,
             statsOf = p => addStats.get(p).orElse(st.stats.get(p)),
             metaDataAction = metaAction)
         }
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          cleanupStaged()
-          attempts += 1
-          if (attempts > maxRetries)
-            throw new IllegalStateException(
-              s"mergeDelta lost $maxRetries version races at $path — " +
-                "giving up")
-        case e: Throwable =>
-          try cleanupStaged() catch { case _: Exception => () }
-          throw e
       } finally {
         pinnedInserts.foreach(_.unpersist(false))
       }
     }
-    result
   }
 
 
@@ -3618,7 +3419,7 @@ object DeltaInterop {
   }
 
   def optimizeDelta(spark: SparkSession, path: String,
-      targetFileBytes: Long = 128L << 20, maxRetries: Int = 20,
+      targetFileBytes: Long = 128L << 20,
       zorderBy: Seq[String] = Nil): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     require(zorderBy.distinct.size == zorderBy.size,
@@ -3636,9 +3437,7 @@ object DeltaInterop {
           "a full Delta client")
     val Harmless = HarmlessWriterFeatures
 
-    var attempts = 0
-    var result = -1L
-    while (result < 0) {
+    OptimisticCommit.retry("optimizeDelta", path) { _ =>
       val coll = new CheckpointCollector()
       val st = replaySnapshot(spark, path, None, Some(coll))
       // Delta liquid clustering: with no explicit zorderBy, a CLUSTER BY
@@ -3714,7 +3513,7 @@ object DeltaInterop {
       }
       val rewriteAll = zCols.nonEmpty && st.active.nonEmpty
       if (binOf.isEmpty && !rewriteAll) {
-        result = st.version // nothing to compact
+        st.version // nothing to compact
       } else {
         val byPath = st.active.toMap
         val entries =
@@ -3761,53 +3560,27 @@ object DeltaInterop {
               (partCols.map(col) :+ col("__z")): _*)
             .select(outCols: _*)
         }
-        val staging = new HPath(root,
-          s"_graft_optimize_${java.util.UUID.randomUUID()}")
-        val moved = scala.collection.mutable.Buffer[String]()
-        def cleanupStaged(): Unit = {
-          moved.foreach(p => fs.delete(new HPath(root, p), false))
-          fs.delete(staging, true)
-        }
-        try {
+        val pub = new StagedPublish(fs, root)
+        OptimisticCommit.cleaningUp(pub.cleanup()) {
           val now = System.currentTimeMillis()
           // fresh in-flight stats per compacted file — after a Z-order
           // rewrite these are what make the clustering skippable
           val (physCompacted, physPartCols, physDataSchema) =
             physicalWrite(spark, st, schema, partCols, compacted)
+          val staging = pub.staging("optimize")
           val addStats = DeltaStats.writeWithStats(physCompacted,
             staging.toString, physPartCols, physDataSchema)
-          val staged = listStagedParquet(fs, staging)
-          staged.foreach { case (rel, _) =>
-            val dst = new HPath(root, rel)
-            fs.mkdirs(dst.getParent)
-            if (!fs.rename(new HPath(staging, rel), dst))
-              throw new java.io.IOException(
-                s"could not move staged optimize file $rel into $path")
-            moved += rel
-          }
-          fs.delete(staging, true)
-          result = commitDelete(io, logDir, st, now,
+          val staged = pub.publish(staging)
+          commitDelete(io, logDir, st, now,
             s"optimize targetSize=$targetFileBytes" +
               (if (zCols.nonEmpty)
                 s" zOrderBy=[${zCols.mkString(",")}]" else ""),
             entries.map { case (p, (pv, _)) => (p, pv) }, staged, Nil,
             physPartCols, operation = "OPTIMIZE", dataChange = false,
             statsOf = addStats.get)
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            cleanupStaged()
-            attempts += 1
-            if (attempts > maxRetries)
-              throw new IllegalStateException(
-                s"optimizeDelta lost $maxRetries version races at $path — " +
-                  "giving up")
-          case e: Throwable =>
-            try cleanupStaged() catch { case _: Exception => () }
-            throw e
         }
       }
     }
-    result
   }
 
   /** Z-clustering key over `cols` of `df`: one column sorts by its
@@ -4468,13 +4241,12 @@ object DeltaInterop {
     * positions ∪ `newlyStruck`), returning the dvAdds rows for
     * [[commitDelete]]. Payload ∝ struck rows — no data file is read
     * beyond the old-DV position recovery, none is rewritten. Written
-    * DV files are registered in `moved` for crash cleanup. */
+    * DV files are registered with `pub` for cleanup. */
   private def writeMergedDvs(spark: SparkSession, root: HPath,
       dataSchema: StructType,
       entries: Seq[(String, (Map[String, String],
         Option[DeletionVectors.Descriptor]))],
-      newlyStruck: DataFrame,
-      moved: scala.collection.mutable.Buffer[String])
+      newlyStruck: DataFrame, pub: StagedPublish)
       : Seq[(String, Map[String, String], Long,
         DeletionVectors.Descriptor)] = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -4509,7 +4281,7 @@ object DeltaInterop {
       ub.putLong(uuid.getLeastSignificantBits)
       val (off, size) = DeletionVectors.writeDvFileData(conf,
         new HPath(root, s"deletion_vector_$uuid.bin"), data)
-      moved += s"deletion_vector_$uuid.bin"
+      pub.wrote(s"deletion_vector_$uuid.bin")
       val fileSize =
         fs.getFileStatus(new HPath(resolveFile(root, p))).getLen
       (p, pv, fileSize, DeletionVectors.Descriptor("u",
@@ -4617,25 +4389,71 @@ object DeltaInterop {
       actions += s"""{"domainMetadata":{"domain":"delta.rowTracking","configuration":"{\\"rowIdHighWaterMark\\":$wm}","removed":false}}"""
     val bytes = actions.result().mkString("", "\n", "\n")
       .getBytes(StandardCharsets.UTF_8)
-    io.writeExclusive(new HPath(logDir, f"$v%020d.json"), bytes)
+    OptimisticCommit.claim(io, new HPath(logDir, f"$v%020d.json"), bytes)
     v
   }
 
-  /** Relative (path, size) of every data parquet under a staging dir,
-    * recursing through hive `col=value` subdirectories. */
-  private def listStagedParquet(fs: org.apache.hadoop.fs.FileSystem,
-      staging: HPath): Seq[(String, Long)] = {
-    def rec(dir: HPath, rel: String): Seq[(String, Long)] =
-      fs.listStatus(dir).toSeq.flatMap { stat =>
-        val name = stat.getPath.getName
-        val childRel = if (rel.isEmpty) name else s"$rel/$name"
-        if ((name.startsWith("_") || name.startsWith(".")) && !name.contains("="))
-          Nil
-        else if (stat.isDirectory) rec(stat.getPath, childRel)
-        else if (name.endsWith(".parquet")) Seq((childRel, stat.getLen))
-        else Nil
+  /** Write a commit's cdc rows through a staging dir into
+    * `_change_data/`; returns their (path under it, size). */
+  private def writeCdc(pub: StagedPublish, cdc: DataFrame,
+      partCols: Seq[String]): Seq[(String, Long)] = {
+    val staging = pub.staging("cdc")
+    (if (partCols.nonEmpty) cdc.write.partitionBy(partCols: _*)
+     else cdc.write).parquet(staging.toString)
+    pub.publish(staging, "_change_data/")
+  }
+
+  /** The files one Delta write attempt lands under the table root:
+    * staged parquet published out of `_graft_<kind>_<uuid>` staging
+    * dirs, plus deletion-vector files written in place. [[cleanup]]
+    * removes them and every staging dir, so an attempt that loses its
+    * version slot (or fails) leaves nothing behind. */
+  private final class StagedPublish(fs: org.apache.hadoop.fs.FileSystem,
+      root: HPath) {
+    private val landed = scala.collection.mutable.Buffer[String]()
+    private val dirs = scala.collection.mutable.Buffer[HPath]()
+
+    def staging(kind: String): HPath = {
+      val d = new HPath(root, s"_graft_${kind}_${java.util.UUID.randomUUID()}")
+      dirs += d
+      d
+    }
+
+    /** Record a file the attempt wrote straight into the root. */
+    def wrote(rel: String): Unit = landed += rel
+
+    /** Move every data parquet under `staging` (recursing through hive
+      * `col=value` subdirectories) to the same relative path under
+      * `root/<into>`, then drop the staging dir. Returns the relative
+      * (path, size) of each. */
+    def publish(staging: HPath, into: String = ""): Seq[(String, Long)] = {
+      def rec(dir: HPath, rel: String): Seq[(String, Long)] =
+        fs.listStatus(dir).toSeq.flatMap { stat =>
+          val name = stat.getPath.getName
+          val childRel = if (rel.isEmpty) name else s"$rel/$name"
+          if ((name.startsWith("_") || name.startsWith(".")) && !name.contains("="))
+            Nil
+          else if (stat.isDirectory) rec(stat.getPath, childRel)
+          else if (name.endsWith(".parquet")) Seq((childRel, stat.getLen))
+          else Nil
+        }
+      val staged = rec(staging, "")
+      staged.foreach { case (rel, _) =>
+        val dst = new HPath(root, into + rel)
+        fs.mkdirs(dst.getParent)
+        if (!fs.rename(new HPath(staging, rel), dst))
+          throw new java.io.IOException(
+            s"could not move staged file $rel into $root")
+        landed += into + rel
       }
-    rec(staging, "")
+      fs.delete(staging, true)
+      staged
+    }
+
+    def cleanup(): Unit = {
+      landed.foreach(p => fs.delete(new HPath(root, p), false))
+      dirs.foreach(fs.delete(_, true))
+    }
   }
 
   /** RESTORE a foreign Delta table to an earlier `version` — Delta's
@@ -4660,8 +4478,7 @@ object DeltaInterop {
     * Lost version races re-diff against the winner and retry. Returns
     * the committed version (or the current one when the diff is
     * empty). */
-  def restoreDelta(spark: SparkSession, path: String, version: Long,
-      maxRetries: Int = 20): Long = {
+  def restoreDelta(spark: SparkSession, path: String, version: Long): Long = {
     val root = new HPath(path)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = root.getFileSystem(conf)
@@ -4685,8 +4502,7 @@ object DeltaInterop {
     def key(p: String, dv: Option[DeletionVectors.Descriptor]) =
       (p, dv.map(d => (d.storageType, d.pathOrInlineDv, d.offset)))
 
-    var attempts = 0
-    while (true) {
+    OptimisticCommit.retry("restoreDelta", path) { _ =>
       val coll = new CheckpointCollector()
       val cur = replaySnapshot(spark, path, None, Some(coll))
       if (cur.version < version)
@@ -4713,70 +4529,61 @@ object DeltaInterop {
       val adds = target.active.filterNot {
         case (p, (_, dv)) => curKeys(key(p, dv)) }
       if (removes.isEmpty && adds.isEmpty && !metaChanged)
-        return cur.version
-      // every re-surfaced file must still exist — VACUUM after the
-      // target version makes the restore impossible, not silent
-      val statted = adds.map { case (p, (pv, dv)) =>
-        val hp = new HPath(resolveFile(root, p))
-        val st = try fs.getFileStatus(hp) catch {
-          case _: java.io.FileNotFoundException =>
-            refuseW(s"data file $p of version $version was vacuumed")
+        cur.version
+      else {
+        // every re-surfaced file must still exist — VACUUM after the
+        // target version makes the restore impossible, not silent
+        val statted = adds.map { case (p, (pv, dv)) =>
+          val hp = new HPath(resolveFile(root, p))
+          val st = try fs.getFileStatus(hp) catch {
+            case _: java.io.FileNotFoundException =>
+              refuseW(s"data file $p of version $version was vacuumed")
+          }
+          dv.filter(_.storageType != "i").foreach { d =>
+            val dvp = DeletionVectors.dvFilePath(root, d)
+            if (!fs.exists(dvp))
+              refuseW(s"deletion-vector file $dvp of version $version " +
+                "was vacuumed")
+          }
+          (p, pv, dv, st.getLen, st.getModificationTime)
         }
-        dv.filter(_.storageType != "i").foreach { d =>
-          val dvp = DeletionVectors.dvFilePath(root, d)
-          if (!fs.exists(dvp))
-            refuseW(s"deletion-vector file $dvp of version $version " +
-              "was vacuumed")
+        val now = System.currentTimeMillis()
+        val actions = Seq.newBuilder[String]
+        actions += s"""{"commitInfo":{"timestamp":$now,"operation":"RESTORE","operationParameters":{"version":"$version"},"engineInfo":"graft-restore"}}"""
+        if (metaChanged) {
+          val confJson = target.configuration.map { case (k, v) =>
+            "\"" + jsonEscape(k) + "\":\"" + jsonEscape(v) + "\""
+          }.mkString(",")
+          val partJson = target.partCols.map(c =>
+            "\"" + jsonEscape(c) + "\"").mkString(",")
+          val nameJson = coll.metaName
+            .map(n => s""","name":"${jsonEscape(n)}"""").getOrElse("")
+          val descJson = coll.metaDescription
+            .map(d => s""","description":"${jsonEscape(d)}"""").getOrElse("")
+          actions += s"""{"metaData":{"id":"${jsonEscape(coll.metaId.getOrElse(
+            java.util.UUID.randomUUID().toString))}"$nameJson$descJson,"format":{"provider":"parquet","options":{}},"schemaString":"${jsonEscape(target.schemaJson)}","partitionColumns":[$partJson],"configuration":{$confJson},"createdTime":${coll.createdTime.getOrElse(now)}}}"""
         }
-        (p, pv, dv, st.getLen, st.getModificationTime)
-      }
-      val now = System.currentTimeMillis()
-      val actions = Seq.newBuilder[String]
-      actions += s"""{"commitInfo":{"timestamp":$now,"operation":"RESTORE","operationParameters":{"version":"$version"},"engineInfo":"graft-restore"}}"""
-      if (metaChanged) {
-        val confJson = target.configuration.map { case (k, v) =>
-          "\"" + jsonEscape(k) + "\":\"" + jsonEscape(v) + "\""
-        }.mkString(",")
-        val partJson = target.partCols.map(c =>
-          "\"" + jsonEscape(c) + "\"").mkString(",")
-        val nameJson = coll.metaName
-          .map(n => s""","name":"${jsonEscape(n)}"""").getOrElse("")
-        val descJson = coll.metaDescription
-          .map(d => s""","description":"${jsonEscape(d)}"""").getOrElse("")
-        actions += s"""{"metaData":{"id":"${jsonEscape(coll.metaId.getOrElse(
-          java.util.UUID.randomUUID().toString))}"$nameJson$descJson,"format":{"provider":"parquet","options":{}},"schemaString":"${jsonEscape(target.schemaJson)}","partitionColumns":[$partJson],"configuration":{$confJson},"createdTime":${coll.createdTime.getOrElse(now)}}}"""
-      }
-      removes.foreach { case (p, (pv, _)) =>
-        actions += s"""{"remove":{"path":"${jsonEscape(encodePath(p))}","deletionTimestamp":$now,"dataChange":true,"extendedFileMetadata":true,"partitionValues":{${pvJson(pv)}}}}"""
-      }
-      statted.foreach { case (p, pv, dv, size, mod) =>
-        // the re-surfaced file's stats at the target version ride back
-        val sj = target.stats.get(p)
-          .map(s => s""","stats":"${jsonEscape(s)}"""").getOrElse("")
-        // row tracking: the file's ORIGINAL ids ride back too (the
-        // high watermark stays put — it is monotonic by protocol)
-        val rj = target.rowIds.get(p).map { case (brid, rcv) =>
-          brid.map(b => s""","baseRowId":$b""").getOrElse("") +
-            rcv.map(r => s""","defaultRowCommitVersion":$r""").getOrElse("")
-        }.getOrElse("")
-        actions += s"""{"add":{"path":"${jsonEscape(encodePath(p))}","partitionValues":{${pvJson(pv)}},"size":$size,"modificationTime":$mod,"dataChange":true${dv.map(dvJson).getOrElse("")}$sj$rj}}"""
-      }
-      val bytes = actions.result().mkString("", "\n", "\n")
-        .getBytes(StandardCharsets.UTF_8)
-      try {
-        io.writeExclusive(new HPath(logDir, f"${cur.version + 1}%020d.json"),
-          bytes)
-        return cur.version + 1
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempts += 1
-          if (attempts > maxRetries)
-            throw new IllegalStateException(
-              s"restoreDelta lost $maxRetries version races at $path — " +
-                "giving up")
+        removes.foreach { case (p, (pv, _)) =>
+          actions += s"""{"remove":{"path":"${jsonEscape(encodePath(p))}","deletionTimestamp":$now,"dataChange":true,"extendedFileMetadata":true,"partitionValues":{${pvJson(pv)}}}}"""
+        }
+        statted.foreach { case (p, pv, dv, size, mod) =>
+          // the re-surfaced file's stats at the target version ride back
+          val sj = target.stats.get(p)
+            .map(s => s""","stats":"${jsonEscape(s)}"""").getOrElse("")
+          // row tracking: the file's ORIGINAL ids ride back too (the
+          // high watermark stays put — it is monotonic by protocol)
+          val rj = target.rowIds.get(p).map { case (brid, rcv) =>
+            brid.map(b => s""","baseRowId":$b""").getOrElse("") +
+              rcv.map(r => s""","defaultRowCommitVersion":$r""").getOrElse("")
+          }.getOrElse("")
+          actions += s"""{"add":{"path":"${jsonEscape(encodePath(p))}","partitionValues":{${pvJson(pv)}},"size":$size,"modificationTime":$mod,"dataChange":true${dv.map(dvJson).getOrElse("")}$sj$rj}}"""
+        }
+        OptimisticCommit.claim(io,
+          new HPath(logDir, f"${cur.version + 1}%020d.json"),
+          actions.result().mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+        cur.version + 1
       }
     }
-    -1L // unreachable
   }
 
   /** SHALLOW CLONE of a Delta table — Delta's `CREATE TABLE … SHALLOW
@@ -4882,7 +4689,6 @@ object DeltaInterop {
     * re-replay and re-edit against the winner. */
   private def commitDeltaMetaData(spark: SparkSession, path: String,
       operation: String, params: Map[String, String],
-      maxRetries: Int = 20,
       requireWriterFeatures: Seq[String] = Nil,
       extraActions: DeltaSnapshot => Seq[String] = _ => Nil)(
       edit: (StructType, Map[String, String]) =>
@@ -4903,8 +4709,7 @@ object DeltaInterop {
       2 -> "appendOnly", 2 -> "invariants", 3 -> "checkConstraints",
       4 -> "changeDataFeed", 4 -> "generatedColumns", 5 -> "columnMapping",
       6 -> "identityColumns").collect { case (mv, f) if v >= mv => f }
-    var attempts = 0
-    while (true) {
+    OptimisticCommit.retry(operation, path) { _ =>
       val coll = new CheckpointCollector()
       val st = replaySnapshot(spark, path, None, Some(coll))
       if (st.minWriter > 7)
@@ -4989,20 +4794,11 @@ object DeltaInterop {
           java.util.UUID.randomUUID().toString))}"$nameJson$descJson,"format":{"provider":"parquet","options":{}},"schemaString":"${jsonEscape(newSchema.json)}","partitionColumns":[${st.partCols.map(c =>
           "\"" + jsonEscape(c) + "\"").mkString(",")}],"configuration":{$confJson},"createdTime":${coll.createdTime.getOrElse(now)}}}""") ++
         extraActions(st)
-      try {
-        io.writeExclusive(new HPath(logDir, f"${st.version + 1}%020d.json"),
-          actions.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-        return st.version + 1
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempts += 1
-          if (attempts > maxRetries)
-            throw new IllegalStateException(
-              s"$operation lost $maxRetries version races at $path — " +
-                "giving up")
-      }
+      OptimisticCommit.claim(io,
+        new HPath(logDir, f"${st.version + 1}%020d.json"),
+        actions.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+      st.version + 1
     }
-    -1L // unreachable
   }
 
   /** SET TBLPROPERTIES on a foreign Delta table — one metadata-only
@@ -5011,15 +4807,15 @@ object DeltaInterop {
     * `delta.appendOnly`, `delta.enableChangeDataFeed`,
     * retention knobs, … Returns the committed version. */
   def setDeltaProperties(spark: SparkSession, path: String,
-      props: Map[String, String], maxRetries: Int = 20): Long =
-    commitDeltaMetaData(spark, path, "SET TBLPROPERTIES", props,
-      maxRetries)((s, c) => (s, c ++ props))
+      props: Map[String, String]): Long =
+    commitDeltaMetaData(spark, path, "SET TBLPROPERTIES", props)(
+      (s, c) => (s, c ++ props))
 
   /** UNSET TBLPROPERTIES — drops `keys` from `configuration`. */
   def unsetDeltaProperties(spark: SparkSession, path: String,
-      keys: Seq[String], maxRetries: Int = 20): Long =
+      keys: Seq[String]): Long =
     commitDeltaMetaData(spark, path, "UNSET TBLPROPERTIES",
-      keys.map(k => k -> "").toMap, maxRetries)((s, c) => (s, c -- keys))
+      keys.map(k => k -> "").toMap)((s, c) => (s, c -- keys))
 
   /** DECLARE liquid clustering on an existing Delta table — the
     * `ALTER TABLE … CLUSTER BY (cols)` / clustered-`CREATE TABLE` verb
@@ -5034,15 +4830,15 @@ object DeltaInterop {
     * the declared columns, and [[checkpointDelta]]/[[cloneDelta]] carry
     * the domain. Clustered tables are unpartitioned per the spec;
     * columns must exist in the schema. Returns the committed version. */
-  def clusterByDelta(spark: SparkSession, path: String, cols: Seq[String],
-      maxRetries: Int = 20): Long = {
+  def clusterByDelta(spark: SparkSession, path: String,
+      cols: Seq[String]): Long = {
     require(cols.nonEmpty, "CLUSTER BY needs at least one column")
     require(cols.distinct.size == cols.size,
       s"duplicate clustering columns: ${cols.mkString(", ")}")
     val cfg = s"""{"clusteringColumns":[${cols.map(c =>
       "[\"" + jsonEscape(c) + "\"]").mkString(",")}]}"""
     commitDeltaMetaData(spark, path, "CLUSTER BY",
-      Map("clusterBy" -> cols.mkString("[", ", ", "]")), maxRetries,
+      Map("clusterBy" -> cols.mkString("[", ", ", "]")),
       requireWriterFeatures = Seq("domainMetadata", "clusteredTable"),
       extraActions = st => {
         require(st.partCols.isEmpty,
@@ -5067,9 +4863,9 @@ object DeltaInterop {
     * `delta.columnMapping.maxColumnId`, per the protocol's writer
     * requirements. Duplicate names (case-insensitive) refuse. */
   def addColumnToDelta(spark: SparkSession, path: String, name: String,
-      dataType: DataType, maxRetries: Int = 20): Long =
+      dataType: DataType): Long =
     commitDeltaMetaData(spark, path, "ADD COLUMNS",
-      Map("column" -> name), maxRetries) { (schema, c) =>
+      Map("column" -> name)) { (schema, c) =>
       require(!schema.fieldNames.exists(_.equalsIgnoreCase(name)),
         s"column '$name' already exists at $path")
       appendSchemaField(schema, c, name, dataType)

@@ -65,7 +65,7 @@ class GraftTable private (val spark: SparkSession, val root: String) {
     * hard-link, rename-without-overwrite on HDFS-like stores, and the
     * documented S3 conditional-PUT requirement). */
   private def writeCommit(c: Commit): Unit =
-    io.writeExclusive(new HPath(logDir, f"${c.version}%08d.json"),
+    OptimisticCommit.claim(io, new HPath(logDir, f"${c.version}%08d.json"),
       c.toJson.getBytes(StandardCharsets.UTF_8))
 
   /** Partition spec for this table: plain column names, or a derived
@@ -192,8 +192,9 @@ class GraftTable private (val spark: SparkSession, val root: String) {
     * CREATE_NEW, so exactly one writer can land each version (a
     * conditional put). A losing append re-targets the next version —
     * its already-written data directory is renamed to carry the new
-    * version prefix (a metadata move) and the commit retries; a losing
-    * mutation raises ConcurrentModificationException. */
+    * version prefix (a metadata move) and the commit retries, within
+    * [[OptimisticCommit]]'s bound; a losing mutation raises
+    * ConcurrentModificationException. */
   private def commit(action: String, df: Option[DataFrame],
                      live: Seq[String] => Seq[String],
                      partitionBy: Seq[String] = null): Int = {
@@ -261,19 +262,13 @@ class GraftTable private (val spark: SparkSession, val root: String) {
         StructType(base.map(_.copy(nullable = true)) ++
           schema.filterNot(f => baseNames(f.name)).map(_.copy(nullable = true)))
       }
-    var attempts = 0
-    while (true) {
-      val prev = if (v == 0) Nil else readCommit(v - 1).liveDirs
-      try {
-        writeCommit(Commit(v, action, effectiveSchema(v).json,
-          live(prev) ++ added, parts(v), timestampMs = nextTimestamp(v)))
-        return v
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          if (!retryable(action) || attempts >= 20)
+    // a commit that never lands leaves no data directory behind
+    OptimisticCommit.cleaningUp(added.foreach(d => io.delete(io.path(d)))) {
+      OptimisticCommit.retry(action, root) { lost =>
+        if (lost > 0) {
+          if (!retryable(action))
             throw new java.util.ConcurrentModificationException(
               s"concurrent commit beat $action at version $v")
-          attempts += 1
           val nv = latestVersion() + 1
           added = added.map { d =>
             // keep the uuid suffix only (split on '-', not a fixed
@@ -283,9 +278,13 @@ class GraftTable private (val spark: SparkSession, val root: String) {
             renamed
           }
           v = nv
+        }
+        val prev = if (v == 0) Nil else readCommit(v - 1).liveDirs
+        writeCommit(Commit(v, action, effectiveSchema(v).json,
+          live(prev) ++ added, parts(v), timestampMs = nextTimestamp(v)))
+        v
       }
     }
-    v
   }
 
   // ---- write operations ----

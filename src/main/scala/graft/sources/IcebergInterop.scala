@@ -1505,6 +1505,47 @@ object IcebergInterop {
     if (!fs.rename(tmpHint, hint)) fs.delete(tmpHint, false)
   }
 
+  /** Claim metadata slot `v<version>.metadata.json` with `md` through
+    * [[OptimisticCommit.claim]], then point the version hint at it. The
+    * version has landed once the claim returns: a failing hint surfaces
+    * as [[OptimisticCommit.MayHaveLanded]], so no cleanup removes what
+    * the committed metadata references. */
+  private def claimMetadata(io: TableIO, metaDir: HPath, version: Int,
+      md: JsonNode): Unit = {
+    val slot = new HPath(metaDir, s"v$version.metadata.json")
+    OptimisticCommit.claim(io, slot,
+      om.writerWithDefaultPrettyPrinter().writeValueAsBytes(md))
+    try publishHint(io.fs, metaDir, version)
+    catch {
+      case e: java.io.IOException =>
+        throw new OptimisticCommit.MayHaveLanded(slot, e)
+    }
+  }
+
+  /** The commit base of a file-based table: the highest LISTED
+    * `v<N>.metadata.json` — never the version hint, which a racing peer
+    * publishes only after its exclusive write, so a loser re-reading in
+    * that window would rebuild from stale state while targeting a fresh
+    * slot — as (N, its parsed tree, owned by the caller). `refusal`
+    * throws when no file carries that naming (catalog-managed
+    * metadata). */
+  private def newestListedMetadata(fs: org.apache.hadoop.fs.FileSystem,
+      metaDir: HPath)(refusal: => Nothing): (Int, ObjectNode) = {
+    val vTop = fs.listStatus(metaDir).iterator.flatMap { st =>
+      st.getPath.getName match {
+        case VMeta(n) => Some(n.toInt)
+        case _ => None
+      }
+    }.maxOption.getOrElse(refusal)
+    (vTop, om.readTree(readBytes(fs,
+      new HPath(metaDir, s"v$vTop.metadata.json"))).asInstanceOf[ObjectNode])
+  }
+
+  /** Why a writer refuses a table without `v<N>.metadata.json` naming. */
+  private val CatalogManaged = "the metadata is catalog-managed " +
+    "(no v<N>.metadata.json / version-hint naming) — a directory " +
+    "commit would be invisible to the catalog pointer"
+
   /** Iceberg `expire_snapshots` analog for mirrors (and exported
     * tables): retain the newest `keepLast` snapshots (always including
     * the current one), publish a new metadata version without the
@@ -1540,8 +1581,7 @@ object IcebergInterop {
     * estimator — exact below k distinct, theta-estimating above.
     * Returns column → NDV estimate. */
   def writeIcebergStatistics(spark: SparkSession, path: String,
-      columns: Seq[String] = Nil, nominal: Int = 4096,
-      maxRetries: Int = 20): Map[String, Long] = {
+      columns: Seq[String] = Nil, nominal: Int = 4096): Map[String, Long] = {
     import graft.functions.{ThetaHash, ThetaSketch}
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -1600,18 +1640,10 @@ object IcebergInterop {
       })
     // commit the `statistics` entry (replacing any prior entry for
     // this snapshot) through the optimistic conditional put
-    var attempts = 0
-    var done = false
-    while (!done) {
-      val listed = fs.listStatus(metaDir).toSeq.map(_.getPath.getName)
-      val vTop = listed.flatMap {
-        case VMeta(n) => Some(n.toInt)
-        case _ => None
-      }.maxOption.getOrElse(throw new IllegalArgumentException(
-        s"catalog-managed metadata at $path — commit statistics with " +
-          "a full Iceberg client"))
-      val md = om.readTree(readBytes(fs,
-        new HPath(metaDir, s"v$vTop.metadata.json"))).deepCopy[ObjectNode]()
+    OptimisticCommit.retry("writeIcebergStatistics", path) { _ =>
+      val (vTop, md) = newestListedMetadata(fs, metaDir)(
+        throw new IllegalArgumentException(s"catalog-managed metadata at " +
+          s"$path — commit statistics with a full Iceberg client"))
       val fresh = om.createArrayNode()
       md.path("statistics") match {
         case a: com.fasterxml.jackson.databind.node.ArrayNode =>
@@ -1643,19 +1675,8 @@ object IcebergInterop {
       fresh.add(entry)
       md.set[JsonNode]("statistics", fresh)
       md.put("last-updated-ms", System.currentTimeMillis())
-      try {
-        io.writeExclusive(new HPath(metaDir,
-          s"v${vTop + 1}.metadata.json"),
-          om.writerWithDefaultPrettyPrinter().writeValueAsBytes(md))
-        publishHint(fs, metaDir, vTop + 1)
-        done = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempts += 1
-          if (attempts > maxRetries)
-            throw new IllegalStateException(
-              s"writeIcebergStatistics lost $maxRetries races at $path")
-      }
+      claimMetadata(io, metaDir, vTop + 1, md)
+      ()
     }
     sketches.map { case (name, _, ndv) => name -> ndv }.toMap
   }
@@ -1695,7 +1716,7 @@ object IcebergInterop {
   }
 
   def expireIcebergSnapshots(spark: SparkSession, path: String,
-      keepLast: Int, maxRetries: Int = 20): Int = {
+      keepLast: Int): Int = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new HPath(path)
@@ -1703,17 +1724,11 @@ object IcebergInterop {
     val io = new TableIO(path, conf)
     val metaDir = new HPath(root, "metadata")
     require(fs.exists(metaDir), s"no Iceberg metadata directory at $path")
-    var attempts = 0
-    while (true) {
-      val listed = fs.listStatus(metaDir).toSeq.map(_.getPath.getName)
-      val curMeta = listed.flatMap {
-        case VMeta(n) => Some(n.toInt)
-        case _ => None
-      }.maxOption.getOrElse(throw new IllegalArgumentException(
-        s"cannot expire snapshots at $path: the metadata is " +
-          "catalog-managed (no v<N>.metadata.json naming)"))
-      val md = om.readTree(readBytes(fs,
-        new HPath(metaDir, s"v$curMeta.metadata.json"))).asInstanceOf[ObjectNode]
+    OptimisticCommit.retry("expireIcebergSnapshots", path) { _ =>
+      val (curMeta, md) = newestListedMetadata(fs, metaDir)(
+        throw new IllegalArgumentException(s"cannot expire snapshots at " +
+          s"$path: the metadata is catalog-managed (no v<N>.metadata.json " +
+          "naming)"))
       val currentSnap = md.path("current-snapshot-id").asLong(-1L)
       val snaps = md.path("snapshots").elements().asScala().toSeq
       // retention order is COMMIT order, not snapshot-id order: graft
@@ -1726,34 +1741,31 @@ object IcebergInterop {
       val keepIds = (byTimeAsc.takeRight(keepLast).map(_.path("snapshot-id").asLong())
         :+ currentSnap).toSet ++ refPinnedSnapshots(md)
       val (retained, expired) = byTimeAsc.partition(s => keepIds(s.path("snapshot-id").asLong()))
-      if (expired.isEmpty) return 0
+      if (expired.isEmpty) 0
+      else {
+        def manifestsOf(listPath: String): Seq[String] =
+          readAvro(readBytes(fs, new HPath(listPath)))
+            .map(_.get("manifest_path").toString)
+        val keepManifests = retained
+          .flatMap(s => manifestsOf(s.path("manifest-list").asText())).toSet
+        val doomedLists = expired.map(_.path("manifest-list").asText())
+        val doomedManifests = doomedLists.flatMap(manifestsOf)
+          .filterNot(keepManifests.contains).distinct
 
-      def manifestsOf(listPath: String): Seq[String] =
-        readAvro(readBytes(fs, new HPath(listPath)))
-          .map(_.get("manifest_path").toString)
-      val keepManifests = retained
-        .flatMap(s => manifestsOf(s.path("manifest-list").asText())).toSet
-      val doomedLists = expired.map(_.path("manifest-list").asText())
-      val doomedManifests = doomedLists.flatMap(manifestsOf)
-        .filterNot(keepManifests.contains).distinct
-
-      // publish the trimmed metadata FIRST — only then delete, so a
-      // concurrent reader never holds a hint whose referenced files died
-      val trimmed = md.deepCopy[ObjectNode]()
-      val arr = trimmed.putArray("snapshots")
-      retained.foreach(s => arr.add(s))
-      trimmed.path("snapshot-log") match {
-        case a: com.fasterxml.jackson.databind.node.ArrayNode =>
-          val kept = a.elements().asScala().toSeq
-            .filter(e => keepIds(e.path("snapshot-id").asLong()))
-          val na = trimmed.putArray("snapshot-log")
-          kept.foreach(na.add)
-        case _ => ()
-      }
-      try {
-        io.writeExclusive(new HPath(metaDir, s"v${curMeta + 1}.metadata.json"),
-          om.writerWithDefaultPrettyPrinter().writeValueAsBytes(trimmed))
-        publishHint(fs, metaDir, curMeta + 1)
+        // publish the trimmed metadata FIRST — only then delete, so a
+        // concurrent reader never holds a hint whose referenced files died
+        val trimmed = md.deepCopy[ObjectNode]()
+        val arr = trimmed.putArray("snapshots")
+        retained.foreach(s => arr.add(s))
+        trimmed.path("snapshot-log") match {
+          case a: com.fasterxml.jackson.databind.node.ArrayNode =>
+            val kept = a.elements().asScala().toSeq
+              .filter(e => keepIds(e.path("snapshot-id").asLong()))
+            val na = trimmed.putArray("snapshot-log")
+            kept.foreach(na.add)
+          case _ => ()
+        }
+        claimMetadata(io, metaDir, curMeta + 1, trimmed)
         var deleted = 0
         (doomedLists ++ doomedManifests).foreach { p =>
           if (fs.delete(new HPath(p), false)) deleted += 1
@@ -1767,17 +1779,9 @@ object IcebergInterop {
             case _ => ()
           }
         }
-        return deleted
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempts += 1
-          if (attempts > maxRetries)
-            throw new IllegalStateException(
-              s"expireIcebergSnapshots lost $maxRetries version races " +
-                s"at $path — giving up")
+        deleted
       }
     }
-    0 // unreachable
   }
 
   /** APPEND `df` to an existing file-based Iceberg v1 table (foreign,
@@ -1972,7 +1976,7 @@ object IcebergInterop {
     (dataDir, files, partValuesOf, boundsByPath.get _)
   }
 
-  def appendToIceberg(df: DataFrame, path: String, maxRetries: Int = 20,
+  def appendToIceberg(df: DataFrame, path: String,
       txn: Option[(String, Long)] = None,
       mergeSchema: Boolean = false): Long = {
     val spark = df.sparkSession
@@ -1997,24 +2001,7 @@ object IcebergInterop {
     var dfW: DataFrame = df
     def validate(): State = {
       require(fs.exists(metaDir), s"no Iceberg metadata directory at $path")
-      // commit base = the HIGHEST LISTED metadata version, never the
-      // version hint: a racing peer publishes the hint only AFTER its
-      // exclusive metadata write, so a loser revalidating in that
-      // window would rebuild from the hint's stale state while
-      // targeting a fresh version slot — silently dropping the peer's
-      // snapshot from its lineage
-      val listed = fs.listStatus(metaDir).toSeq.map(_.getPath.getName)
-      val vTop = listed.flatMap {
-        case VMeta(n) => Some(n.toInt)
-        case _ => None
-      }.maxOption
-      if (vTop.isEmpty)
-        refuseW("the metadata is catalog-managed " +
-          "(no v<N>.metadata.json / version-hint naming) — a directory " +
-          "commit would be invisible to the catalog pointer")
-      val md = om.readTree(readBytes(fs,
-        new HPath(metaDir, s"v${vTop.get}.metadata.json")))
-        .deepCopy[ObjectNode]()
+      val (vTop, md) = newestListedMetadata(fs, metaDir)(refuseW(CatalogManaged))
       val fv = md.path("format-version").asInt(1)
       if (fv > 3)
         refuseW(s"the table is format version $fv — this writer produces " +
@@ -2103,7 +2090,7 @@ object IcebergInterop {
                 reserializeManifestFileV2(r, specId, currentSnap)
               else reserializeManifestFile(r, specId)))
           .getOrElse(Nil)
-      State(md, vTop.get, schemaNode, schemaId, schema, specId,
+      State(md, vTop, schemaNode, schemaId, schema, specId,
         specFieldsNode, parts, currentSnap, priorManifests, fv,
         md.path("last-sequence-number").asLong(0L))
     }
@@ -2123,7 +2110,7 @@ object IcebergInterop {
     val (dataDir, files, partValuesOf, inflightBounds) =
       writeSpecData(dfW, root, fs, conf,
         st.parts, st.schemaNode, st.schema, "graft-append")
-    try {
+    OptimisticCommit.cleaningUp(fs.delete(dataDir, true)) {
       val partFields = st.parts.map(_._1)
       val v2 = st.formatVersion >= 2 // v3 appends are v2-shaped + lineage
       val v3 = st.formatVersion == 3
@@ -2145,145 +2132,133 @@ object IcebergInterop {
       val boundsByPath: Map[HPath, Option[IcebergStats.Bounds]] =
         files.map { case (p, _, _) => p -> inflightBounds(p) }.toMap
 
-      var attempts = 0
-      var committed = -1L
-      while (committed < 0) {
-        val snapId = snapIdOf(st.md)
-        val newSeq = st.lastSeq + 1
-        val now = System.currentTimeMillis()
-        // the manifest is (re)written per attempt: its v1 entries embed
-        // the adding snapshot's id, which moves when a lost race bumps
-        // the id past the peer's (v2 entries inherit both ids as null)
-        val ents = files.map { case (p, size, rc) =>
-          if (v2) manifestEntryV2(entrySchema, p.toString, size, rc,
-            partValuesOf(p), bounds = boundsByPath(p))
-          else manifestEntry(entrySchema, p.toString, size, rc, 1, snapId,
-            partValuesOf(p), bounds = boundsByPath(p))
+      OptimisticCommit.retry("appendToIceberg", path) { lost =>
+        if (lost > 0) {
+          // a peer landed this version: re-validate against ITS state
+          // (schema/spec may have changed; its manifests now carry)
+          val fresh = validate()
+          if (!alreadyApplied(fresh.md))
+            require(fresh.schemaNode == st.schemaNode &&
+              fresh.specFieldsNode == st.specFieldsNode &&
+              fresh.specId == st.specId,
+              s"table at $path changed schema or partition spec during " +
+                "the append — retry the append against the new state")
+          st = fresh
         }
-        val manifestMeta = Map(
-          "schema" -> om.writeValueAsString(st.schemaNode),
-          "schema-id" -> st.schemaId.toString,
-          "partition-spec" -> om.writeValueAsString(specArr),
-          "partition-spec-id" -> st.specId.toString,
-          "format-version" -> st.formatVersion.toString) ++
-          (if (v2) Map("content" -> "data") else Map.empty)
-        val manifestBytes = writeAvro(entrySchema, manifestMeta, ents)
-        val manifestPath = new HPath(metaDir,
-          s"${java.util.UUID.randomUUID()}-m0.avro")
-        writeBytes(fs, manifestPath, manifestBytes)
-        // v3 ROW LINEAGE: this append's rows take ids from the table's
-        // next-row-id high-water mark (data files inherit through the
-        // manifest-list entry's first_row_id); delete-free, so only the
-        // new data manifest assigns
-        val addedRows = files.map(_._3).sum
-        val rowIdBase: Option[Long] =
-          if (v3 && st.md.has("next-row-id"))
-            Some(st.md.get("next-row-id").asLong())
-          else None
-        val newListRecord: GenericRecord =
-          if (v2) {
-            val mf = new GenericData.Record(
-              if (v3) manifestFileSchemaV3 else manifestFileSchemaV2)
-            mf.put("manifest_path", manifestPath.toString)
-            mf.put("manifest_length", manifestBytes.length.toLong)
-            mf.put("partition_spec_id", st.specId)
-            mf.put("content", 0)
-            mf.put("sequence_number", newSeq)
-            mf.put("min_sequence_number", newSeq)
-            mf.put("added_snapshot_id", snapId)
-            mf.put("added_files_count", files.size)
-            mf.put("existing_files_count", 0)
-            mf.put("deleted_files_count", 0)
-            mf.put("added_rows_count", addedRows)
-            mf.put("existing_rows_count", 0L)
-            mf.put("deleted_rows_count", 0L)
-            rowIdBase.foreach(b =>
-              mf.put("first_row_id", java.lang.Long.valueOf(b)))
-            mf
-          } else manifestListEntry(
-            manifestPath.toString, manifestBytes.length.toLong, snapId,
-            files.size, 0, st.specId)
-        val listRecords = st.priorManifests :+ newListRecord
-        val listMeta = Map("snapshot-id" -> snapId.toString,
-          "format-version" -> st.formatVersion.toString) ++
-          (if (v2) Map("sequence-number" -> newSeq.toString) else Map.empty)
-        val listBytes = writeAvro(
-          if (v3) manifestFileSchemaV3
-          else if (v2) manifestFileSchemaV2 else manifestFileSchema,
-          listMeta, listRecords)
-        val listPath = new HPath(metaDir,
-          s"snap-$snapId-1-${java.util.UUID.randomUUID()}.avro")
-        writeBytes(fs, listPath, listBytes)
-        val md = st.md
-        md.put("last-updated-ms", now)
-        md.put("current-snapshot-id", snapId)
-        if (v2) md.put("last-sequence-number", newSeq)
-        val snaps =
-          if (md.has("snapshots"))
-            md.get("snapshots")
-              .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
-          else md.putArray("snapshots")
-        val sn = snapshotNode(snapId, now, "append", listPath.toString,
-          st.schemaId, addedFilesSize = files.map(_._2).sum,
-          addedDataFiles = files.size, addedRecords = addedRows)
-        if (v2) sn.put("sequence-number", newSeq)
-        if (st.currentSnap >= 0) sn.put("parent-snapshot-id", st.currentSnap)
-        rowIdBase.foreach { b =>
-          sn.put("first-row-id", b)
-          md.put("next-row-id", b + addedRows)
-        }
-        snaps.add(sn)
-        md.path("snapshot-log") match {
-          case a: com.fasterxml.jackson.databind.node.ArrayNode =>
-            val e = om.createObjectNode()
-            e.put("timestamp-ms", now); e.put("snapshot-id", snapId)
-            a.add(e)
-          case _ => ()
-        }
-        txn.foreach { case (app, tv) =>
-          md.path("properties") match {
-            case p: ObjectNode => p.put(s"graft.txn.$app", tv.toString)
-            case _ => md.putObject("properties")
-              .put(s"graft.txn.$app", tv.toString)
+        if (lost > 0 && alreadyApplied(st.md)) {
+          // the peer WAS this appId's batch — drop our data copy
+          fs.delete(dataDir, true)
+          st.currentSnap
+        } else {
+          val snapId = snapIdOf(st.md)
+          val newSeq = st.lastSeq + 1
+          val now = System.currentTimeMillis()
+          // the manifest is (re)written per attempt: its v1 entries embed
+          // the adding snapshot's id, which moves when a lost race bumps
+          // the id past the peer's (v2 entries inherit both ids as null)
+          val ents = files.map { case (p, size, rc) =>
+            if (v2) manifestEntryV2(entrySchema, p.toString, size, rc,
+              partValuesOf(p), bounds = boundsByPath(p))
+            else manifestEntry(entrySchema, p.toString, size, rc, 1, snapId,
+              partValuesOf(p), bounds = boundsByPath(p))
           }
-        }
-        val nextMeta = st.metaVersion + 1
-        try {
-          io.writeExclusive(new HPath(metaDir, s"v$nextMeta.metadata.json"),
-            om.writerWithDefaultPrettyPrinter().writeValueAsBytes(md))
-          publishHint(fs, metaDir, nextMeta)
-          committed = snapId
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            attempts += 1
-            if (attempts > maxRetries)
-              throw new IllegalStateException(
-                s"appendToIceberg lost $maxRetries version races at $path — " +
-                  "giving up")
+          val manifestMeta = Map(
+            "schema" -> om.writeValueAsString(st.schemaNode),
+            "schema-id" -> st.schemaId.toString,
+            "partition-spec" -> om.writeValueAsString(specArr),
+            "partition-spec-id" -> st.specId.toString,
+            "format-version" -> st.formatVersion.toString) ++
+            (if (v2) Map("content" -> "data") else Map.empty)
+          val manifestBytes = writeAvro(entrySchema, manifestMeta, ents)
+          val manifestPath = new HPath(metaDir,
+            s"${java.util.UUID.randomUUID()}-m0.avro")
+          writeBytes(fs, manifestPath, manifestBytes)
+          // v3 ROW LINEAGE: this append's rows take ids from the table's
+          // next-row-id high-water mark (data files inherit through the
+          // manifest-list entry's first_row_id); delete-free, so only the
+          // new data manifest assigns
+          val addedRows = files.map(_._3).sum
+          val rowIdBase: Option[Long] =
+            if (v3 && st.md.has("next-row-id"))
+              Some(st.md.get("next-row-id").asLong())
+            else None
+          val newListRecord: GenericRecord =
+            if (v2) {
+              val mf = new GenericData.Record(
+                if (v3) manifestFileSchemaV3 else manifestFileSchemaV2)
+              mf.put("manifest_path", manifestPath.toString)
+              mf.put("manifest_length", manifestBytes.length.toLong)
+              mf.put("partition_spec_id", st.specId)
+              mf.put("content", 0)
+              mf.put("sequence_number", newSeq)
+              mf.put("min_sequence_number", newSeq)
+              mf.put("added_snapshot_id", snapId)
+              mf.put("added_files_count", files.size)
+              mf.put("existing_files_count", 0)
+              mf.put("deleted_files_count", 0)
+              mf.put("added_rows_count", addedRows)
+              mf.put("existing_rows_count", 0L)
+              mf.put("deleted_rows_count", 0L)
+              rowIdBase.foreach(b =>
+                mf.put("first_row_id", java.lang.Long.valueOf(b)))
+              mf
+            } else manifestListEntry(
+              manifestPath.toString, manifestBytes.length.toLong, snapId,
+              files.size, 0, st.specId)
+          val listRecords = st.priorManifests :+ newListRecord
+          val listMeta = Map("snapshot-id" -> snapId.toString,
+            "format-version" -> st.formatVersion.toString) ++
+            (if (v2) Map("sequence-number" -> newSeq.toString) else Map.empty)
+          val listBytes = writeAvro(
+            if (v3) manifestFileSchemaV3
+            else if (v2) manifestFileSchemaV2 else manifestFileSchema,
+            listMeta, listRecords)
+          val listPath = new HPath(metaDir,
+            s"snap-$snapId-1-${java.util.UUID.randomUUID()}.avro")
+          writeBytes(fs, listPath, listBytes)
+          val md = st.md
+          md.put("last-updated-ms", now)
+          md.put("current-snapshot-id", snapId)
+          if (v2) md.put("last-sequence-number", newSeq)
+          val snaps =
+            if (md.has("snapshots"))
+              md.get("snapshots")
+                .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
+            else md.putArray("snapshots")
+          val sn = snapshotNode(snapId, now, "append", listPath.toString,
+            st.schemaId, addedFilesSize = files.map(_._2).sum,
+            addedDataFiles = files.size, addedRecords = addedRows)
+          if (v2) sn.put("sequence-number", newSeq)
+          if (st.currentSnap >= 0) sn.put("parent-snapshot-id", st.currentSnap)
+          rowIdBase.foreach { b =>
+            sn.put("first-row-id", b)
+            md.put("next-row-id", b + addedRows)
+          }
+          snaps.add(sn)
+          md.path("snapshot-log") match {
+            case a: com.fasterxml.jackson.databind.node.ArrayNode =>
+              val e = om.createObjectNode()
+              e.put("timestamp-ms", now); e.put("snapshot-id", snapId)
+              a.add(e)
+            case _ => ()
+          }
+          txn.foreach { case (app, tv) =>
+            md.path("properties") match {
+              case p: ObjectNode => p.put(s"graft.txn.$app", tv.toString)
+              case _ => md.putObject("properties")
+                .put(s"graft.txn.$app", tv.toString)
+            }
+          }
+          // a lost slot: this attempt's manifest and list go
+          OptimisticCommit.cleaningUp {
             fs.delete(listPath, false)
             fs.delete(manifestPath, false)
-            // a peer landed this version: re-validate against ITS state
-            // (schema/spec may have changed; its manifests now carry)
-            val fresh = validate()
-            if (alreadyApplied(fresh.md)) {
-              // the peer WAS this appId's batch — drop our data copy
-              fs.delete(dataDir, true)
-              committed = fresh.currentSnap
-            } else {
-              require(fresh.schemaNode == st.schemaNode &&
-                fresh.specFieldsNode == st.specFieldsNode &&
-                fresh.specId == st.specId,
-                s"table at $path changed schema or partition spec during " +
-                  "the append — retry the append against the new state")
-              st = fresh
-            }
+          } {
+            claimMetadata(io, metaDir, st.metaVersion + 1, md)
+          }
+          snapId
         }
       }
-      committed
-    } catch {
-      case e: Throwable =>
-        try fs.delete(dataDir, true) catch { case _: Exception => () }
-        throw e
     }
   }
 
@@ -2296,8 +2271,8 @@ object IcebergInterop {
     * batch. [[exactlyOnceIcebergAppender]] packages it for
     * `foreachBatch` streaming. */
   def appendToIcebergTxn(df: DataFrame, path: String, appId: String,
-      txnVersion: Long, maxRetries: Int = 20): Long =
-    appendToIceberg(df, path, maxRetries, Some((appId, txnVersion)))
+      txnVersion: Long): Long =
+    appendToIceberg(df, path, Some((appId, txnVersion)))
 
   /** The appId's last committed watermark at `path`, or -1. */
   def lastIcebergTxnVersion(spark: SparkSession, path: String,
@@ -2307,12 +2282,8 @@ object IcebergInterop {
     val fs = root.getFileSystem(conf)
     val metaDir = new HPath(root, "metadata")
     require(fs.exists(metaDir), s"no Iceberg metadata directory at $path")
-    val vTop = fs.listStatus(metaDir).toSeq.map(_.getPath.getName)
-      .flatMap { case VMeta(n) => Some(n.toInt); case _ => None }
-      .maxOption.getOrElse(throw new IllegalArgumentException(
-        s"catalog-managed metadata at $path"))
-    val md = om.readTree(readBytes(fs,
-      new HPath(metaDir, s"v$vTop.metadata.json")))
+    val (_, md) = newestListedMetadata(fs, metaDir)(
+      throw new IllegalArgumentException(s"catalog-managed metadata at $path"))
     Option(md.path("properties").get(s"graft.txn.$appId"))
       .map(_.asText().toLong).getOrElse(-1L)
   }
@@ -2353,10 +2324,10 @@ object IcebergInterop {
     * itself). Format v1 refuses (v1 has no delete files — use a full
     * client's copy-on-write DELETE). A lost version race recomputes
     * the whole delete against the peer's state, bounded by
-    * `maxRetries`; a no-match delete commits nothing. Returns the
+    * [[OptimisticCommit]]; a no-match delete commits nothing. Returns the
     * committed (or, for a no-op, the current) snapshot id. */
   def deleteFromIceberg(spark: SparkSession, path: String,
-      condition: org.apache.spark.sql.Column, maxRetries: Int = 20): Long = {
+      condition: org.apache.spark.sql.Column): Long = {
     val root = new HPath(path)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = root.getFileSystem(conf)
@@ -2365,7 +2336,7 @@ object IcebergInterop {
     require(fs.exists(metaDir), s"no Iceberg metadata directory at $path")
     // format v3 deletes write DELETION VECTORS, not position deletes
     if (currentMetadata(spark, path)._2.path("format-version").asInt(1) == 3)
-      return deleteFromIcebergV3(spark, path, condition, maxRetries)
+      return deleteFromIcebergV3(spark, path, condition)
 
     def refuseW(what: String): Nothing = throw new IllegalArgumentException(
       s"cannot delete from Iceberg table at $path: $what — write it with " +
@@ -2375,26 +2346,14 @@ object IcebergInterop {
       hp.getFileSystem(conf).makeQualified(hp).toString
     }
 
-    var attempts = 0
-    var result = Long.MinValue
-    while (result == Long.MinValue) {
-      // commit base = the highest LISTED metadata version (the
-      // appendToIceberg rule — the hint trails exclusive writes)
-      val listed = fs.listStatus(metaDir).toSeq.map(_.getPath.getName)
-      val vTop = listed.flatMap {
-        case VMeta(n) => Some(n.toInt)
-        case _ => None
-      }.maxOption.getOrElse(refuseW("the metadata is catalog-managed " +
-        "(no v<N>.metadata.json / version-hint naming) — a directory " +
-        "commit would be invisible to the catalog pointer"))
-      val md = om.readTree(readBytes(fs,
-        new HPath(metaDir, s"v$vTop.metadata.json"))).deepCopy[ObjectNode]()
+    OptimisticCommit.retry("deleteFromIceberg", path) { _ =>
+      val (vTop, md) = newestListedMetadata(fs, metaDir)(refuseW(CatalogManaged))
       val fv = md.path("format-version").asInt(1)
       if (fv != 2)
         refuseW(s"the table is format version $fv — row-level deletes " +
           "need v2 merge-on-read position deletes")
       val currentSnap = md.path("current-snapshot-id").asLong(-1L)
-      if (currentSnap < 0) { result = currentSnap }
+      if (currentSnap < 0) currentSnap
       else {
         val newSeq = md.path("last-sequence-number").asLong(0L) + 1
         val schemaNode = currentSchemaNode(md, path)
@@ -2448,7 +2407,7 @@ object IcebergInterop {
           .filter(_._3 > 0)
         if (delFiles.isEmpty) {
           fs.delete(delDir, true)
-          result = currentSnap // nothing matched: no commit
+          currentSnap // nothing matched: no commit
         } else {
           // unpartitioned spec for the GLOBAL position deletes
           val specsArr = md.path("partition-specs") match {
@@ -2528,28 +2487,19 @@ object IcebergInterop {
               a.add(e)
             case _ => ()
           }
-          try {
-            io.writeExclusive(new HPath(metaDir, s"v${vTop + 1}.metadata.json"),
-              om.writerWithDefaultPrettyPrinter().writeValueAsBytes(md))
-            publishHint(fs, metaDir, vTop + 1)
-            result = snapId
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              // a peer landed this version: the matched set may have
-              // changed — clean this attempt up and RECOMPUTE
-              fs.delete(listPath, false)
-              fs.delete(manifestPath, false)
-              fs.delete(delDir, true)
-              attempts += 1
-              if (attempts > maxRetries)
-                throw new IllegalStateException(
-                  s"deleteFromIceberg lost $maxRetries version races at " +
-                    s"$path — giving up")
+          // a lost slot: the matched set may have changed — clean this
+          // attempt up and RECOMPUTE
+          OptimisticCommit.cleaningUp {
+            fs.delete(listPath, false)
+            fs.delete(manifestPath, false)
+            fs.delete(delDir, true)
+          } {
+            claimMetadata(io, metaDir, vTop + 1, md)
+            snapId
           }
         }
       }
     }
-    result
   }
 
   /** DELETE on a FORMAT-V3 file-based Iceberg table — the v3 shape:
@@ -2564,7 +2514,7 @@ object IcebergInterop {
     * the same O(|change|) class as the Delta DV delete. Dispatched
     * from [[deleteFromIceberg]]; returns the committed snapshot id. */
   private def deleteFromIcebergV3(spark: SparkSession, path: String,
-      condition: org.apache.spark.sql.Column, maxRetries: Int): Long = {
+      condition: org.apache.spark.sql.Column): Long = {
     val root = new HPath(path)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = root.getFileSystem(conf)
@@ -2578,23 +2528,13 @@ object IcebergInterop {
       hp.getFileSystem(conf).makeQualified(hp).toString
     }
 
-    var attempts = 0
-    var result = Long.MinValue
-    while (result == Long.MinValue) {
-      val listed = fs.listStatus(metaDir).toSeq.map(_.getPath.getName)
-      val vTop = listed.flatMap {
-        case VMeta(n) => Some(n.toInt)
-        case _ => None
-      }.maxOption.getOrElse(refuseW("the metadata is catalog-managed " +
-        "(no v<N>.metadata.json / version-hint naming) — a directory " +
-        "commit would be invisible to the catalog pointer"))
-      val md = om.readTree(readBytes(fs,
-        new HPath(metaDir, s"v$vTop.metadata.json"))).deepCopy[ObjectNode]()
+    OptimisticCommit.retry("deleteFromIceberg", path) { _ =>
+      val (vTop, md) = newestListedMetadata(fs, metaDir)(refuseW(CatalogManaged))
       val fv = md.path("format-version").asInt(1)
       if (fv != 3)
         refuseW(s"the table changed to format version $fv mid-delete")
       val currentSnap = md.path("current-snapshot-id").asLong(-1L)
-      if (currentSnap < 0) { result = currentSnap }
+      if (currentSnap < 0) currentSnap
       else {
         val newSeq = md.path("last-sequence-number").asLong(0L) + 1
         val schemaNode = currentSchemaNode(md, path)
@@ -2634,22 +2574,13 @@ object IcebergInterop {
           .select(col("__uri"), col("__pos"))
         val struck = DeletionVectors.serializeStruckBitmaps(matched,
           v3OldDvBytes(conf, priorDeletes))
-        if (struck.isEmpty) { result = currentSnap }
+        if (struck.isEmpty) currentSnap
         else commitV3DvSnapshot(fs, io, root, metaDir, md, vTop,
           currentSnap, newSeq, schemaNode, schemaId, priorList,
           priorDeletes, struck.toSeq, 0, Nil, Nil, _ => Nil, "delete",
-          refuseW) match {
-          case Some(snapId) => result = snapId
-          case None =>
-            attempts += 1
-            if (attempts > maxRetries)
-              throw new IllegalStateException(
-                s"deleteFromIceberg lost $maxRetries version races at " +
-                  s"$path — giving up")
-        }
+          refuseW)
       }
     }
-    result
   }
 
   /** One prior delete manifest of a v3 table: its manifest-list record
@@ -2715,8 +2646,8 @@ object IcebergInterop {
     * superseded manifest entries retire (the spec's at-most-one-DV
     * rule); `newFiles` register under the default spec with footer
     * bounds and ROW LINEAGE assigned from `next-row-id`. Returns the
-    * new snapshot id, or None on a lost version race after deleting
-    * this attempt's files (callers recompute). */
+    * new snapshot id; a lost version race deletes this attempt's files
+    * and throws `FileAlreadyExistsException` (callers recompute). */
   private def commitV3DvSnapshot(fs: org.apache.hadoop.fs.FileSystem,
       io: TableIO, root: HPath, metaDir: HPath, md: ObjectNode, vTop: Int,
       currentSnap: Long, newSeq: Long, schemaNode: JsonNode, schemaId: Int,
@@ -2728,8 +2659,7 @@ object IcebergInterop {
       partValuesOf: HPath => Seq[AnyRef], operation: String,
       refuseW: String => Nothing,
       newBounds: HPath => Option[IcebergStats.Bounds] = null,
-      newSortOrderId: Option[Int] = None)
-      : Option[Long] = {
+      newSortOrderId: Option[Int] = None): Long = {
     val conf = fs.getConf
     def contentOf(r: GenericRecord): Long =
       fieldOpt(r, "content").map(longOf).getOrElse(0L)
@@ -2738,7 +2668,9 @@ object IcebergInterop {
     val snapId = md.path("snapshots").elements().asScala()
       .map(_.path("snapshot-id").asLong(0L)).maxOption.getOrElse(0L) + 1L
     val written = scala.collection.mutable.Buffer[HPath]()
-    try {
+    // a lost slot: the matched set may have changed — this attempt's
+    // files go, the caller recomputes
+    OptimisticCommit.cleaningUp(written.foreach(p => fs.delete(p, false))) {
       // ---- DV part: one Puffin file + one v3 delete manifest ----
       val dvListRecord: Option[GenericRecord] =
         if (struck.isEmpty) None
@@ -2955,16 +2887,8 @@ object IcebergInterop {
           a.add(e)
         case _ => ()
       }
-      io.writeExclusive(new HPath(metaDir, s"v${vTop + 1}.metadata.json"),
-        om.writerWithDefaultPrettyPrinter().writeValueAsBytes(md))
-      publishHint(fs, metaDir, vTop + 1)
-      Some(snapId)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        // a peer landed this version: the matched set may have
-        // changed — clean this attempt up; the caller recomputes
-        written.foreach(p => fs.delete(p, false))
-        None
+      claimMetadata(io, metaDir, vTop + 1, md)
+      snapId
     }
   }
 
@@ -2987,8 +2911,7 @@ object IcebergInterop {
     * non-null identifiers). Format v1 refuses; a lost version race
     * re-reads and retries (the key set is commit-state-independent, so
     * no recompute is needed). Returns the committed snapshot id. */
-  def deleteFromIcebergByKey(keyRows: DataFrame, path: String,
-      maxRetries: Int = 20): Long = {
+  def deleteFromIcebergByKey(keyRows: DataFrame, path: String): Long = {
     require(keyRows.schema.nonEmpty,
       "deleteFromIcebergByKey needs at least one key column")
     val spark = keyRows.sparkSession
@@ -3009,177 +2932,159 @@ object IcebergInterop {
     var delFiles: Seq[(HPath, Long, Long)] = Nil
     var eqIds: Seq[Int] = Nil
 
-    var attempts = 0
-    var result = Long.MinValue
-    while (result == Long.MinValue) {
-      val listed = fs.listStatus(metaDir).toSeq.map(_.getPath.getName)
-      val vTop = listed.flatMap {
-        case VMeta(n) => Some(n.toInt)
-        case _ => None
-      }.maxOption.getOrElse(refuseW("the metadata is catalog-managed " +
-        "(no v<N>.metadata.json / version-hint naming)"))
-      val md = om.readTree(readBytes(fs,
-        new HPath(metaDir, s"v$vTop.metadata.json"))).deepCopy[ObjectNode]()
-      val fv = md.path("format-version").asInt(1)
-      if (fv != 2 && fv != 3)
-        refuseW(s"the table is format version $fv — equality deletes " +
-          "need v2/v3 merge-on-read")
-      val schemaNode = currentSchemaNode(md, path)
-      val schemaId = md.path("current-schema-id").asInt(
-        schemaNode.path("schema-id").asInt(0))
-      // key columns → top-level field ids + declared types
-      val topFields: Map[String, (Int, DataType)] =
-        schemaNode.path("fields").elements().asScala().map { f =>
-          f.path("name").asText() ->
-            ((f.path("id").asInt(),
-              fromIcebergType(f.path("type"), path)))
-        }.toMap
-      val keyCols = keyRows.schema.fieldNames.toSeq
-      keyCols.foreach(c => if (!topFields.contains(c))
-        refuseW(s"key column '$c' is not a top-level table column"))
-      eqIds = keyCols.map(c => topFields(c)._1)
+    OptimisticCommit.cleaningUp(if (delDir != null) fs.delete(delDir, true)) {
+      OptimisticCommit.retry("deleteFromIcebergByKey", path) { _ =>
+        val (vTop, md) = newestListedMetadata(fs, metaDir)(refuseW(CatalogManaged))
+        val fv = md.path("format-version").asInt(1)
+        if (fv != 2 && fv != 3)
+          refuseW(s"the table is format version $fv — equality deletes " +
+            "need v2/v3 merge-on-read")
+        val schemaNode = currentSchemaNode(md, path)
+        val schemaId = md.path("current-schema-id").asInt(
+          schemaNode.path("schema-id").asInt(0))
+        // key columns → top-level field ids + declared types
+        val topFields: Map[String, (Int, DataType)] =
+          schemaNode.path("fields").elements().asScala().map { f =>
+            f.path("name").asText() ->
+              ((f.path("id").asInt(),
+                fromIcebergType(f.path("type"), path)))
+          }.toMap
+        val keyCols = keyRows.schema.fieldNames.toSeq
+        keyCols.foreach(c => if (!topFields.contains(c))
+          refuseW(s"key column '$c' is not a top-level table column"))
+        eqIds = keyCols.map(c => topFields(c)._1)
 
-      if (delDir == null) {
-        spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-        def reservedId(id: Long) =
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .putLong("parquet.field.id", id).build()
-        val typed = keyRows.select(keyCols.map { c =>
-          org.apache.spark.sql.functions.col(c)
-            .cast(topFields(c)._2).as(c, reservedId(topFields(c)._1.toLong))
-        }: _*)
-        delDir = new HPath(new HPath(root, "data"),
-          s"graft-eqdelete-${java.util.UUID.randomUUID()}")
-        val delCounts = IcebergStats.writeWithCounts(
-          typed, delDir.toString)
-        delFiles = fs.listStatus(delDir).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(f => (f.getPath, f.getLen, delCounts
-            .getOrElse(f.getPath.getName, footerRecordCount(conf, f))))
-          .filter(_._3 > 0)
-      }
-      val currentSnap = md.path("current-snapshot-id").asLong(-1L)
-      if (delFiles.isEmpty) {
-        fs.delete(delDir, true)
-        result = currentSnap // no keys: no commit
-      } else {
-        val newSeq = md.path("last-sequence-number").asLong(0L) + 1
-        publishHint(fs, metaDir, vTop)
-        val priorList: Seq[GenericRecord] =
-          if (currentSnap < 0) Nil
-          else {
-            val snapNode = md.get("snapshots").elements().asScala()
-              .find(_.get("snapshot-id").asLong() == currentSnap)
-              .getOrElse(refuseW(s"current snapshot $currentSnap missing " +
-                "from the snapshots array"))
-            readAvro(readBytes(fs,
-              new HPath(snapNode.get("manifest-list").asText())))
+        if (delDir == null) {
+          spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+          def reservedId(id: Long) =
+            new org.apache.spark.sql.types.MetadataBuilder()
+              .putLong("parquet.field.id", id).build()
+          val typed = keyRows.select(keyCols.map { c =>
+            org.apache.spark.sql.functions.col(c)
+              .cast(topFields(c)._2).as(c, reservedId(topFields(c)._1.toLong))
+          }: _*)
+          delDir = new HPath(new HPath(root, "data"),
+            s"graft-eqdelete-${java.util.UUID.randomUUID()}")
+          val delCounts = IcebergStats.writeWithCounts(
+            typed, delDir.toString)
+          delFiles = fs.listStatus(delDir).toSeq
+            .filter(_.getPath.getName.endsWith(".parquet"))
+            .map(f => (f.getPath, f.getLen, delCounts
+              .getOrElse(f.getPath.getName, footerRecordCount(conf, f))))
+            .filter(_._3 > 0)
+        }
+        val currentSnap = md.path("current-snapshot-id").asLong(-1L)
+        if (delFiles.isEmpty) {
+          fs.delete(delDir, true)
+          currentSnap // no keys: no commit
+        } else {
+          val newSeq = md.path("last-sequence-number").asLong(0L) + 1
+          publishHint(fs, metaDir, vTop)
+          val priorList: Seq[GenericRecord] =
+            if (currentSnap < 0) Nil
+            else {
+              val snapNode = md.get("snapshots").elements().asScala()
+                .find(_.get("snapshot-id").asLong() == currentSnap)
+                .getOrElse(refuseW(s"current snapshot $currentSnap missing " +
+                  "from the snapshots array"))
+              readAvro(readBytes(fs,
+                new HPath(snapNode.get("manifest-list").asText())))
+            }
+          val specsArr = md.path("partition-specs") match {
+            case a: com.fasterxml.jackson.databind.node.ArrayNode => a
+            case _ => md.putArray("partition-specs")
           }
-        val specsArr = md.path("partition-specs") match {
-          case a: com.fasterxml.jackson.databind.node.ArrayNode => a
-          case _ => md.putArray("partition-specs")
-        }
-        val unpartSpecId = specsArr.elements().asScala()
-          .find(_.path("fields").size() == 0)
-          .map(_.path("spec-id").asInt(0))
-          .getOrElse {
-            val id = specsArr.elements().asScala()
-              .map(_.path("spec-id").asInt(0)).maxOption.getOrElse(-1) + 1
-            val n = om.createObjectNode()
-            n.put("spec-id", id); n.putArray("fields")
-            specsArr.add(n)
-            id
+          val unpartSpecId = specsArr.elements().asScala()
+            .find(_.path("fields").size() == 0)
+            .map(_.path("spec-id").asInt(0))
+            .getOrElse {
+              val id = specsArr.elements().asScala()
+                .map(_.path("spec-id").asInt(0)).maxOption.getOrElse(-1) + 1
+              val n = om.createObjectNode()
+              n.put("spec-id", id); n.putArray("fields")
+              specsArr.add(n)
+              id
+            }
+          val entrySchema = manifestEntrySchemaV2Eq()
+          val snapId = md.path("snapshots").elements().asScala()
+            .map(_.path("snapshot-id").asLong(0L)).maxOption.getOrElse(0L) + 1L
+          val now = System.currentTimeMillis()
+          val ents = delFiles.map { case (p, size, rc) =>
+            manifestEntryV2Eq(entrySchema, p.toString, size, rc, eqIds)
           }
-        val entrySchema = manifestEntrySchemaV2Eq()
-        val snapId = md.path("snapshots").elements().asScala()
-          .map(_.path("snapshot-id").asLong(0L)).maxOption.getOrElse(0L) + 1L
-        val now = System.currentTimeMillis()
-        val ents = delFiles.map { case (p, size, rc) =>
-          manifestEntryV2Eq(entrySchema, p.toString, size, rc, eqIds)
-        }
-        val manifestBytes = writeAvro(entrySchema, Map(
-          "schema" -> om.writeValueAsString(schemaNode),
-          "schema-id" -> schemaId.toString,
-          "partition-spec" -> "[]",
-          "partition-spec-id" -> unpartSpecId.toString,
-          "format-version" -> fv.toString,
-          "content" -> "deletes"), ents)
-        val manifestPath = new HPath(metaDir,
-          s"${java.util.UUID.randomUUID()}-m0.avro")
-        writeBytes(fs, manifestPath, manifestBytes)
-        val listSchema =
-          if (fv == 3) manifestFileSchemaV3 else manifestFileSchemaV2
-        val delRecord = {
-          val mf = new GenericData.Record(listSchema)
-          mf.put("manifest_path", manifestPath.toString)
-          mf.put("manifest_length", manifestBytes.length.toLong)
-          mf.put("partition_spec_id", unpartSpecId)
-          mf.put("content", 1)
-          mf.put("sequence_number", newSeq)
-          mf.put("min_sequence_number", newSeq)
-          mf.put("added_snapshot_id", snapId)
-          mf.put("added_files_count", delFiles.size)
-          mf.put("existing_files_count", 0)
-          mf.put("deleted_files_count", 0)
-          mf.put("added_rows_count", delFiles.map(_._3).sum)
-          mf.put("existing_rows_count", 0L)
-          mf.put("deleted_rows_count", 0L)
-          mf
-        }
-        val defaultSpecId = md.path("default-spec-id").asInt(0)
-        val listRecords = priorList.map(
-          reserializeManifestFileV2(_, defaultSpecId, currentSnap,
-            listSchema)) :+ delRecord
-        val listBytes = writeAvro(listSchema,
-          Map("snapshot-id" -> snapId.toString,
+          val manifestBytes = writeAvro(entrySchema, Map(
+            "schema" -> om.writeValueAsString(schemaNode),
+            "schema-id" -> schemaId.toString,
+            "partition-spec" -> "[]",
+            "partition-spec-id" -> unpartSpecId.toString,
             "format-version" -> fv.toString,
-            "sequence-number" -> newSeq.toString), listRecords)
-        val listPath = new HPath(metaDir,
-          s"snap-$snapId-1-${java.util.UUID.randomUUID()}.avro")
-        writeBytes(fs, listPath, listBytes)
-        md.put("last-updated-ms", now)
-        md.put("current-snapshot-id", snapId)
-        md.put("last-sequence-number", newSeq)
-        val snaps = md.get("snapshots")
-          .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
-        val sn = snapshotNode(snapId, now, "delete", listPath.toString,
-          schemaId)
-        sn.put("sequence-number", newSeq)
-        if (currentSnap >= 0) sn.put("parent-snapshot-id", currentSnap)
-        // v3 row lineage: a delete-only commit holds the mark still
-        if (fv == 3 && md.has("next-row-id"))
-          sn.put("first-row-id", md.get("next-row-id").asLong())
-        snaps.add(sn)
-        md.path("snapshot-log") match {
-          case a: com.fasterxml.jackson.databind.node.ArrayNode =>
-            val e = om.createObjectNode()
-            e.put("timestamp-ms", now); e.put("snapshot-id", snapId)
-            a.add(e)
-          case _ => ()
-        }
-        try {
-          io.writeExclusive(new HPath(metaDir, s"v${vTop + 1}.metadata.json"),
-            om.writerWithDefaultPrettyPrinter().writeValueAsBytes(md))
-          publishHint(fs, metaDir, vTop + 1)
-          result = snapId
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            // lost race: the delete parquet stays valid (its content is
-            // state-independent) — just drop this attempt's metadata
-            // files and retry against the peer's state
+            "content" -> "deletes"), ents)
+          val manifestPath = new HPath(metaDir,
+            s"${java.util.UUID.randomUUID()}-m0.avro")
+          writeBytes(fs, manifestPath, manifestBytes)
+          val listSchema =
+            if (fv == 3) manifestFileSchemaV3 else manifestFileSchemaV2
+          val delRecord = {
+            val mf = new GenericData.Record(listSchema)
+            mf.put("manifest_path", manifestPath.toString)
+            mf.put("manifest_length", manifestBytes.length.toLong)
+            mf.put("partition_spec_id", unpartSpecId)
+            mf.put("content", 1)
+            mf.put("sequence_number", newSeq)
+            mf.put("min_sequence_number", newSeq)
+            mf.put("added_snapshot_id", snapId)
+            mf.put("added_files_count", delFiles.size)
+            mf.put("existing_files_count", 0)
+            mf.put("deleted_files_count", 0)
+            mf.put("added_rows_count", delFiles.map(_._3).sum)
+            mf.put("existing_rows_count", 0L)
+            mf.put("deleted_rows_count", 0L)
+            mf
+          }
+          val defaultSpecId = md.path("default-spec-id").asInt(0)
+          val listRecords = priorList.map(
+            reserializeManifestFileV2(_, defaultSpecId, currentSnap,
+              listSchema)) :+ delRecord
+          val listBytes = writeAvro(listSchema,
+            Map("snapshot-id" -> snapId.toString,
+              "format-version" -> fv.toString,
+              "sequence-number" -> newSeq.toString), listRecords)
+          val listPath = new HPath(metaDir,
+            s"snap-$snapId-1-${java.util.UUID.randomUUID()}.avro")
+          writeBytes(fs, listPath, listBytes)
+          md.put("last-updated-ms", now)
+          md.put("current-snapshot-id", snapId)
+          md.put("last-sequence-number", newSeq)
+          val snaps = md.get("snapshots")
+            .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
+          val sn = snapshotNode(snapId, now, "delete", listPath.toString,
+            schemaId)
+          sn.put("sequence-number", newSeq)
+          if (currentSnap >= 0) sn.put("parent-snapshot-id", currentSnap)
+          // v3 row lineage: a delete-only commit holds the mark still
+          if (fv == 3 && md.has("next-row-id"))
+            sn.put("first-row-id", md.get("next-row-id").asLong())
+          snaps.add(sn)
+          md.path("snapshot-log") match {
+            case a: com.fasterxml.jackson.databind.node.ArrayNode =>
+              val e = om.createObjectNode()
+              e.put("timestamp-ms", now); e.put("snapshot-id", snapId)
+              a.add(e)
+            case _ => ()
+          }
+          // lost race: the delete parquet stays valid (its content is
+          // state-independent) — just drop this attempt's metadata files
+          // and retry against the peer's state
+          OptimisticCommit.cleaningUp {
             fs.delete(listPath, false)
             fs.delete(manifestPath, false)
-            attempts += 1
-            if (attempts > maxRetries) {
-              fs.delete(delDir, true)
-              throw new IllegalStateException(
-                s"deleteFromIcebergByKey lost $maxRetries version races " +
-                  s"at $path — giving up")
-            }
+          } {
+            claimMetadata(io, metaDir, vTop + 1, md)
+            snapId
+          }
         }
       }
     }
-    result
   }
 
   /** [[manifestEntrySchemaV2For]] (unpartitioned) plus the spec's
@@ -3244,8 +3149,7 @@ object IcebergInterop {
     * committed (or current) snapshot id. */
   def updateIceberg(spark: SparkSession, path: String,
       condition: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column],
-      maxRetries: Int = 20): Long = {
+      assignments: Map[String, org.apache.spark.sql.Column]): Long = {
     require(assignments.nonEmpty,
       "updateIceberg needs at least one SET assignment")
     val root = new HPath(path)
@@ -3263,24 +3167,14 @@ object IcebergInterop {
       hp.getFileSystem(conf).makeQualified(hp).toString
     }
 
-    var attempts = 0
-    var result = Long.MinValue
-    while (result == Long.MinValue) {
-      val listed = fs.listStatus(metaDir).toSeq.map(_.getPath.getName)
-      val vTop = listed.flatMap {
-        case VMeta(n) => Some(n.toInt)
-        case _ => None
-      }.maxOption.getOrElse(refuseW("the metadata is catalog-managed " +
-        "(no v<N>.metadata.json / version-hint naming) — a directory " +
-        "commit would be invisible to the catalog pointer"))
-      val md = om.readTree(readBytes(fs,
-        new HPath(metaDir, s"v$vTop.metadata.json"))).deepCopy[ObjectNode]()
+    OptimisticCommit.retry("updateIceberg", path) { _ =>
+      val (vTop, md) = newestListedMetadata(fs, metaDir)(refuseW(CatalogManaged))
       val fv = md.path("format-version").asInt(1)
       if (fv != 2 && fv != 3)
         refuseW(s"the table is format version $fv — row-level updates " +
           "need v2 merge-on-read position deletes or v3 deletion vectors")
       val currentSnap = md.path("current-snapshot-id").asLong(-1L)
-      if (currentSnap < 0) { result = currentSnap }
+      if (currentSnap < 0) currentSnap
       else {
         val newSeq = md.path("last-sequence-number").asLong(0L) + 1
         val schemaNode = currentSchemaNode(md, path)
@@ -3329,13 +3223,6 @@ object IcebergInterop {
               .getOrElse(col(f.name))
           }.toSeq ++
             (if (v3Lineage) Seq(col("_row_id")) else Nil): _*)
-          def raceOut(): Unit = {
-            attempts += 1
-            if (attempts > maxRetries)
-              throw new IllegalStateException(
-                s"updateIceberg lost $maxRetries version races at " +
-                  s"$path — giving up")
-          }
           if (fv == 3) {
             // ---- v3: old row versions retire through merged DVs,
             // bitmaps built on the executors ----
@@ -3344,20 +3231,17 @@ object IcebergInterop {
               matched.join(pathMap, Seq("__fp"))
                 .select(col("__uri"), col("__pos")),
               v3OldDvBytes(conf, priorDeletes))
-            if (struck.isEmpty) { result = currentSnap }
+            if (struck.isEmpty) currentSnap
             else {
               val (newDir, newFiles, partValuesOf, nb) =
                 writeSpecData(Sizing.coalesceForWrite(mkNewRows),
                   root, fs, conf, parts, schemaNode, schema, "graft-update")
-              commitV3DvSnapshot(fs, io, root, metaDir, md, vTop,
-                currentSnap, newSeq, schemaNode, schemaId, priorList,
-                priorDeletes, struck.toSeq, specId, parts,
-                newFiles.filter(_._3 > 0),
-                partValuesOf, "overwrite", refuseW, newBounds = nb) match {
-                case Some(snapId) => result = snapId
-                case None =>
-                  fs.delete(newDir, true)
-                  raceOut()
+              OptimisticCommit.cleaningUp(fs.delete(newDir, true)) {
+                commitV3DvSnapshot(fs, io, root, metaDir, md, vTop,
+                  currentSnap, newSeq, schemaNode, schemaId, priorList,
+                  priorDeletes, struck.toSeq, specId, parts,
+                  newFiles.filter(_._3 > 0),
+                  partValuesOf, "overwrite", refuseW, newBounds = nb)
               }
             }
           } else {
@@ -3381,36 +3265,24 @@ object IcebergInterop {
             .filter(_._3 > 0)
           if (delFiles.isEmpty) {
             fs.delete(delDir, true)
-            result = currentSnap // nothing matched
+            currentSnap // nothing matched
           } else {
             val (newDir, newFiles, partValuesOf, nb) =
               writeSpecData(Sizing.coalesceForWrite(mkNewRows),
                 root, fs, conf, parts, schemaNode, schema, "graft-update")
-            val cleanupDirs = () => {
+            OptimisticCommit.cleaningUp {
               fs.delete(delDir, true); fs.delete(newDir, true)
-            }
-            val committed =
-              try commitOverwriteSnapshot(fs, io, metaDir, md, vTop,
+            } {
+              commitOverwriteSnapshot(fs, io, metaDir, md, vTop,
                 currentSnap, newSeq, schemaNode, schemaId, specId, parts,
                 priorList, delFiles, newFiles, partValuesOf,
                 newBounds = nb)
-              catch {
-                case e: Throwable =>
-                  try cleanupDirs() catch { case _: Exception => () }
-                  throw e
-              }
-            committed match {
-              case Some(snapId) => result = snapId
-              case None =>
-                cleanupDirs()
-                raceOut()
             }
           }
           }
         } finally matched.unpersist()
       }
     }
-    result
   }
 
   /** Publish ONE atomic merge-on-read `overwrite` snapshot: an optional
@@ -3418,9 +3290,10 @@ object IcebergInterop {
     * new-data manifest (the table's default spec), prior manifests
     * carried forward, all at `last-sequence-number + 1`, committed via
     * conditional put of `v<N+1>.metadata.json`. Mutates `md` (caller
-    * re-reads on retry). Returns the new snapshot id, or None on a lost
-    * version race after deleting this attempt's manifest/list files
-    * (the caller cleans its data dirs and recomputes). Shared by
+    * re-reads on retry). Returns the new snapshot id; a lost version
+    * race deletes this attempt's manifest/list files and throws
+    * `FileAlreadyExistsException` (the caller cleans its data dirs and
+    * recomputes). Shared by
     * [[updateIceberg]] and [[mergeIceberg]]. */
   private def commitOverwriteSnapshot(
       fs: org.apache.hadoop.fs.FileSystem, io: TableIO, metaDir: HPath,
@@ -3432,8 +3305,7 @@ object IcebergInterop {
       partValuesOf: HPath => Seq[AnyRef],
       operation: String = "overwrite",
       newBounds: HPath => Option[IcebergStats.Bounds] = null,
-      newSortOrderId: Option[Int] = None)
-      : Option[Long] = {
+      newSortOrderId: Option[Int] = None): Long = {
     val now = System.currentTimeMillis()
     val snapId = md.path("snapshots").elements().asScala()
       .map(_.path("snapshot-id").asLong(0L)).maxOption.getOrElse(0L) + 1L
@@ -3561,15 +3433,9 @@ object IcebergInterop {
         a.add(e)
       case _ => ()
     }
-    try {
-      io.writeExclusive(new HPath(metaDir, s"v${vTop + 1}.metadata.json"),
-        om.writerWithDefaultPrettyPrinter().writeValueAsBytes(md))
-      publishHint(fs, metaDir, vTop + 1)
-      Some(snapId)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        written.foreach(p => fs.delete(p, false))
-        None
+    OptimisticCommit.cleaningUp(written.foreach(p => fs.delete(p, false))) {
+      claimMetadata(io, metaDir, vTop + 1, md)
+      snapId
     }
   }
 
@@ -3578,12 +3444,10 @@ object IcebergInterop {
     * THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *` in its
     * merge-on-read shape. This is [[mergeIcebergClauses]] with the
     * classic clause pair — see there for the full contract. */
-  def mergeIceberg(source: DataFrame, path: String, keys: Seq[String],
-      maxRetries: Int = 20): Long =
+  def mergeIceberg(source: DataFrame, path: String, keys: Seq[String]): Long =
     mergeIcebergClauses(source, path, keys,
       matched = Seq(Merge.MatchedUpdate()),
-      notMatched = Seq(Merge.NotMatchedInsert()),
-      maxRetries = maxRetries)
+      notMatched = Seq(Merge.NotMatchedInsert()))
 
   /** Full-clause MERGE into an existing file-based Iceberg FORMAT-V2
     * table on `keys`, in the merge-on-read shape: conditional clauses,
@@ -3611,8 +3475,7 @@ object IcebergInterop {
       keys: Seq[String],
       matched: Seq[Merge.MatchedClause] = Nil,
       notMatched: Seq[Merge.NotMatchedInsert] = Nil,
-      notMatchedBySource: Seq[Merge.BySourceClause] = Nil,
-      maxRetries: Int = 20): Long = {
+      notMatchedBySource: Seq[Merge.BySourceClause] = Nil): Long = {
     require(keys.nonEmpty, "mergeIcebergClauses needs at least one key column")
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty, "MERGE needs at least one clause")
@@ -3654,18 +3517,8 @@ object IcebergInterop {
       if (notMatched.isEmpty) lit(false)
       else notMatched.map(c => clauseCond(c.condition)).reduce(_ || _)
 
-    var attempts = 0
-    var result = Long.MinValue
-    while (result == Long.MinValue) {
-      val listed = fs.listStatus(metaDir).toSeq.map(_.getPath.getName)
-      val vTop = listed.flatMap {
-        case VMeta(n) => Some(n.toInt)
-        case _ => None
-      }.maxOption.getOrElse(refuseW("the metadata is catalog-managed " +
-        "(no v<N>.metadata.json / version-hint naming) — a directory " +
-        "commit would be invisible to the catalog pointer"))
-      val md = om.readTree(readBytes(fs,
-        new HPath(metaDir, s"v$vTop.metadata.json"))).deepCopy[ObjectNode]()
+    OptimisticCommit.retry("mergeIceberg", path) { _ =>
+      val (vTop, md) = newestListedMetadata(fs, metaDir)(refuseW(CatalogManaged))
       val fv = md.path("format-version").asInt(1)
       if (fv != 2 && fv != 3)
         refuseW(s"the table is format version $fv — row-level upserts " +
@@ -3690,210 +3543,187 @@ object IcebergInterop {
       val currentSnap = md.path("current-snapshot-id").asLong(-1L)
       if (currentSnap < 0) {
         // empty table: only the insert clauses can contribute
-        if (notMatched.isEmpty) return currentSnap
-        return appendToIceberg(source.where(insertCond), path, maxRetries)
-      }
-      val (specId, _, parts) =
-        defaultSpecParts(spark, md, schemaNode, schema, refuseW)
-      val newSeq = md.path("last-sequence-number").asLong(0L) + 1
-      publishHint(fs, metaDir, vTop)
-      val snapNode = md.get("snapshots").elements().asScala()
-        .find(_.get("snapshot-id").asLong() == currentSnap)
-        .getOrElse(refuseW(s"current snapshot $currentSnap missing from " +
-          "the snapshots array"))
-      val priorList = readAvro(readBytes(fs,
-        new HPath(snapNode.get("manifest-list").asText())))
-      val filePaths: Seq[String] = priorList
-        .filter(r => fieldOpt(r, "content").map(longOf).getOrElse(0L) == 0L)
-        .map(_.get("manifest_path").toString)
-        .flatMap { mp =>
-          readAvro(readBytes(fs, new HPath(mp))).flatMap { e =>
-            if (longOf(e.get("status")) == 2L) None
-            else Some(e.get("data_file").asInstanceOf[GenericRecord]
-              .get("file_path").toString)
-          }
-        }.distinct
+        if (notMatched.isEmpty) currentSnap
+        else appendToIceberg(source.where(insertCond), path)
+      } else {
+        val (specId, _, parts) =
+          defaultSpecParts(spark, md, schemaNode, schema, refuseW)
+        val newSeq = md.path("last-sequence-number").asLong(0L) + 1
+        publishHint(fs, metaDir, vTop)
+        val snapNode = md.get("snapshots").elements().asScala()
+          .find(_.get("snapshot-id").asLong() == currentSnap)
+          .getOrElse(refuseW(s"current snapshot $currentSnap missing from " +
+            "the snapshots array"))
+        val priorList = readAvro(readBytes(fs,
+          new HPath(snapNode.get("manifest-list").asText())))
+        val filePaths: Seq[String] = priorList
+          .filter(r => fieldOpt(r, "content").map(longOf).getOrElse(0L) == 0L)
+          .map(_.get("manifest_path").toString)
+          .flatMap { mp =>
+            readAvro(readBytes(fs, new HPath(mp))).flatMap { e =>
+              if (longOf(e.get("status")) == 2L) None
+              else Some(e.get("data_file").asInstanceOf[GenericRecord]
+                .get("file_path").toString)
+            }
+          }.distinct
 
-      spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      import spark.implicits._
-      // v3 row lineage: clause-updated target rows KEEP their _row_id;
-      // inserted rows take fresh ids by inheritance (null materialized)
-      val v3Lineage = fv == 3 && md.has("next-row-id")
-      val src = source.select(schema.fieldNames.map(col).toSeq: _*)
-      // all source columns dual-ride under __src_ aliases (clause
-      // conditions and SET values read them via Merge.source); keys
-      // stay bare for the equi-join
-      val srcAliased = src.select(keys.map(col) ++
-        schema.fieldNames.map(c =>
-          col(c).as(Merge.SrcPrefix + c)): _*)
-      // no by-source clauses → prune the target scan by the source's
-      // key range against per-entry manifest bounds (sound for the
-      // insert anti-join too: a pruned file holds no key any source row
-      // carries); by-source clauses inspect every target row by
-      // definition
-      val pruneWhere: Option[org.apache.spark.sql.Column] =
-        if (notMatchedBySource.nonEmpty) None
-        else {
-          import org.apache.spark.sql.functions.{min => fmin, max => fmax}
-          val aggs = keys.flatMap(k =>
-            Seq(fmin(col(k)).as(s"__mn_$k"), fmax(col(k)).as(s"__mx_$k")))
-          val r = src.agg(aggs.head, aggs.tail: _*).collect()(0)
-          val keyRanges = keys.zipWithIndex.map { case (k, i) =>
-            (k, r.get(2 * i), r.get(2 * i + 1)) }
-          if (keyRanges.exists(_._2 == null)) None
-          else Some(keyRanges.map { case (k, mn, mx) =>
-            col(k) >= lit(mn) && col(k) <= lit(mx)
-          }.reduce(_ && _))
-        }
-      val tgt = readIcebergInternal(spark, path, None, None,
-        withLineage = true, pruneWhere = pruneWhere,
-        withRowLineage = v3Lineage)
-      // matched pairs, then the family disposition index __ci
-      val matchedDf = tgt.join(srcAliased, keys.toSeq, "inner").cache()
-      val mFrame = matchedDf.withColumn("__ci", mIdx)
-      // target rows with NO source match — only scanned when a
-      // by-source clause exists
-      val sFrame =
-        if (notMatchedBySource.isEmpty) None
-        else Some(tgt.join(srcAliased.select(keys.map(col).toSeq: _*),
-          keys.toSeq, "left_anti").withColumn("__ci", sIdx))
-      try {
-        // refuse the SQL-MERGE ambiguity: one target row, many sources
-        val dup = matchedDf.groupBy(col("__fp"), col("__pos")).count()
-          .filter(col("count") > 1).limit(1).count()
-        require(dup == 0, s"mergeIceberg at $path: a target row matches " +
-          "multiple source rows — MERGE needs unique source keys")
-        val inserts = src.join(
-          tgt.select(keys.map(col).toSeq: _*), keys.toSeq, "left_anti")
-          .where(insertCond)
-        // ---- clause-hit old row versions -> position delete parquet ----
-        val pathMap = filePaths.map(p => (qualified(p), p))
-          .toDF("__fp", "__uri")
-        def reservedId(id: Long) =
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .putLong("parquet.field.id", id).build()
-        val struck = (mFrame.where(col("__ci") =!= -1)
-          .select(col("__fp"), col("__pos")) +:
-          sFrame.map(_.where(col("__ci") =!= -1)
-            .select(col("__fp"), col("__pos"))).toSeq)
-          .reduce(_.unionByName(_))
-        // ---- transformed rows + conditional inserts -> data files ----
-        def matchedVal(f: org.apache.spark.sql.types.StructField) = {
-          var e: org.apache.spark.sql.Column = col(f.name)
-          matched.zipWithIndex.foreach {
-            case (Merge.MatchedUpdate(_, set), i) =>
-              val v =
-                if (set.nonEmpty) set.get(f.name)
-                  .map(_.cast(f.dataType)).getOrElse(col(f.name))
-                else if (keys.contains(f.name)) col(f.name)
-                else col(Merge.SrcPrefix + f.name).cast(f.dataType)
-              e = when(col("__ci") === i, v).otherwise(e)
-            case _ => ()
+        spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+        import spark.implicits._
+        // v3 row lineage: clause-updated target rows KEEP their _row_id;
+        // inserted rows take fresh ids by inheritance (null materialized)
+        val v3Lineage = fv == 3 && md.has("next-row-id")
+        val src = source.select(schema.fieldNames.map(col).toSeq: _*)
+        // all source columns dual-ride under __src_ aliases (clause
+        // conditions and SET values read them via Merge.source); keys
+        // stay bare for the equi-join
+        val srcAliased = src.select(keys.map(col) ++
+          schema.fieldNames.map(c =>
+            col(c).as(Merge.SrcPrefix + c)): _*)
+        // no by-source clauses → prune the target scan by the source's
+        // key range against per-entry manifest bounds (sound for the
+        // insert anti-join too: a pruned file holds no key any source row
+        // carries); by-source clauses inspect every target row by
+        // definition
+        val pruneWhere: Option[org.apache.spark.sql.Column] =
+          if (notMatchedBySource.nonEmpty) None
+          else {
+            import org.apache.spark.sql.functions.{min => fmin, max => fmax}
+            val aggs = keys.flatMap(k =>
+              Seq(fmin(col(k)).as(s"__mn_$k"), fmax(col(k)).as(s"__mx_$k")))
+            val r = src.agg(aggs.head, aggs.tail: _*).collect()(0)
+            val keyRanges = keys.zipWithIndex.map { case (k, i) =>
+              (k, r.get(2 * i), r.get(2 * i + 1)) }
+            if (keyRanges.exists(_._2 == null)) None
+            else Some(keyRanges.map { case (k, mn, mx) =>
+              col(k) >= lit(mn) && col(k) <= lit(mx)
+            }.reduce(_ && _))
           }
-          e.as(f.name)
-        }
-        def bySourceVal(f: org.apache.spark.sql.types.StructField) = {
-          var e: org.apache.spark.sql.Column = col(f.name)
-          notMatchedBySource.zipWithIndex.foreach {
-            case (Merge.BySourceUpdate(_, set), i) =>
-              val v = set.get(f.name).map(_.cast(f.dataType))
-                .getOrElse(col(f.name))
-              e = when(col("__ci") === i, v).otherwise(e)
-            case _ => ()
+        val tgt = readIcebergInternal(spark, path, None, None,
+          withLineage = true, pruneWhere = pruneWhere,
+          withRowLineage = v3Lineage)
+        // matched pairs, then the family disposition index __ci
+        val matchedDf = tgt.join(srcAliased, keys.toSeq, "inner").cache()
+        val mFrame = matchedDf.withColumn("__ci", mIdx)
+        // target rows with NO source match — only scanned when a
+        // by-source clause exists
+        val sFrame =
+          if (notMatchedBySource.isEmpty) None
+          else Some(tgt.join(srcAliased.select(keys.map(col).toSeq: _*),
+            keys.toSeq, "left_anti").withColumn("__ci", sIdx))
+        try {
+          // refuse the SQL-MERGE ambiguity: one target row, many sources
+          val dup = matchedDf.groupBy(col("__fp"), col("__pos")).count()
+            .filter(col("count") > 1).limit(1).count()
+          require(dup == 0, s"mergeIceberg at $path: a target row matches " +
+            "multiple source rows — MERGE needs unique source keys")
+          val inserts = src.join(
+            tgt.select(keys.map(col).toSeq: _*), keys.toSeq, "left_anti")
+            .where(insertCond)
+          // ---- clause-hit old row versions -> position delete parquet ----
+          val pathMap = filePaths.map(p => (qualified(p), p))
+            .toDF("__fp", "__uri")
+          def reservedId(id: Long) =
+            new org.apache.spark.sql.types.MetadataBuilder()
+              .putLong("parquet.field.id", id).build()
+          val struck = (mFrame.where(col("__ci") =!= -1)
+            .select(col("__fp"), col("__pos")) +:
+            sFrame.map(_.where(col("__ci") =!= -1)
+              .select(col("__fp"), col("__pos"))).toSeq)
+            .reduce(_.unionByName(_))
+          // ---- transformed rows + conditional inserts -> data files ----
+          def matchedVal(f: org.apache.spark.sql.types.StructField) = {
+            var e: org.apache.spark.sql.Column = col(f.name)
+            matched.zipWithIndex.foreach {
+              case (Merge.MatchedUpdate(_, set), i) =>
+                val v =
+                  if (set.nonEmpty) set.get(f.name)
+                    .map(_.cast(f.dataType)).getOrElse(col(f.name))
+                  else if (keys.contains(f.name)) col(f.name)
+                  else col(Merge.SrcPrefix + f.name).cast(f.dataType)
+                e = when(col("__ci") === i, v).otherwise(e)
+              case _ => ()
+            }
+            e.as(f.name)
           }
-          e.as(f.name)
-        }
-        val ridKeep: Seq[org.apache.spark.sql.Column] =
-          if (v3Lineage) Seq(col("_row_id")) else Nil
-        val ridNull: Seq[org.apache.spark.sql.Column] =
-          if (v3Lineage) Seq(lit(null).cast("long").as("_row_id")) else Nil
-        val newRows = (mFrame.where(hitsUpdate(mDeletes))
-          .select(schema.fields.map(matchedVal).toSeq ++ ridKeep: _*) +:
-          sFrame.map(_.where(hitsUpdate(sDeletes))
-            .select(schema.fields.map(bySourceVal).toSeq ++ ridKeep: _*))
-            .toSeq)
-          .reduce(_.unionByName(_))
-          .unionByName(inserts.select(schema.fields.map(f =>
-            col(f.name).cast(f.dataType).as(f.name)).toSeq ++ ridNull: _*))
-        def raceOut(): Unit = {
-          attempts += 1
-          if (attempts > maxRetries)
-            throw new IllegalStateException(
-              s"mergeIceberg lost $maxRetries version races at " +
-                s"$path — giving up")
-        }
-        if (fv == 3) {
-          // ---- v3: clause-hit rows retire through merged DVs,
-          // bitmaps built on the executors ----
-          val priorDeletes = classifyV3Deletes(fs, priorList, refuseW)
-          val struckDvs = DeletionVectors.serializeStruckBitmaps(
-            struck.join(pathMap, Seq("__fp"))
-              .select(col("__uri"), col("__pos")),
-            v3OldDvBytes(conf, priorDeletes))
+          def bySourceVal(f: org.apache.spark.sql.types.StructField) = {
+            var e: org.apache.spark.sql.Column = col(f.name)
+            notMatchedBySource.zipWithIndex.foreach {
+              case (Merge.BySourceUpdate(_, set), i) =>
+                val v = set.get(f.name).map(_.cast(f.dataType))
+                  .getOrElse(col(f.name))
+                e = when(col("__ci") === i, v).otherwise(e)
+              case _ => ()
+            }
+            e.as(f.name)
+          }
+          val ridKeep: Seq[org.apache.spark.sql.Column] =
+            if (v3Lineage) Seq(col("_row_id")) else Nil
+          val ridNull: Seq[org.apache.spark.sql.Column] =
+            if (v3Lineage) Seq(lit(null).cast("long").as("_row_id")) else Nil
+          val newRows = (mFrame.where(hitsUpdate(mDeletes))
+            .select(schema.fields.map(matchedVal).toSeq ++ ridKeep: _*) +:
+            sFrame.map(_.where(hitsUpdate(sDeletes))
+              .select(schema.fields.map(bySourceVal).toSeq ++ ridKeep: _*))
+              .toSeq)
+            .reduce(_.unionByName(_))
+            .unionByName(inserts.select(schema.fields.map(f =>
+              col(f.name).cast(f.dataType).as(f.name)).toSeq ++ ridNull: _*))
+          if (fv == 3) {
+            // ---- v3: clause-hit rows retire through merged DVs,
+            // bitmaps built on the executors ----
+            val priorDeletes = classifyV3Deletes(fs, priorList, refuseW)
+            val struckDvs = DeletionVectors.serializeStruckBitmaps(
+              struck.join(pathMap, Seq("__fp"))
+                .select(col("__uri"), col("__pos")),
+              v3OldDvBytes(conf, priorDeletes))
+            val (newDir, allNewFiles, partValuesOf, nb) =
+              writeSpecData(Sizing.coalesceForWrite(newRows),
+                root, fs, conf, parts, schemaNode, schema, "graft-merge")
+            val newFiles = allNewFiles.filter(_._3 > 0)
+            if (struckDvs.isEmpty && newFiles.isEmpty) {
+              fs.delete(newDir, true)
+              currentSnap // empty source, no clause fired: no-op
+            } else OptimisticCommit.cleaningUp(fs.delete(newDir, true)) {
+              commitV3DvSnapshot(fs, io, root, metaDir, md, vTop,
+                currentSnap, newSeq, schemaNode, schemaId, priorList,
+                priorDeletes, struckDvs.toSeq, specId, parts, newFiles,
+                partValuesOf, "overwrite", refuseW, newBounds = nb)
+            }
+          } else {
+          val delRows = struck
+            .join(pathMap, Seq("__fp"))
+            .select(col("__uri").as("file_path", reservedId(2147483546L)),
+              col("__pos").as("pos", reservedId(2147483545L)))
+            .sortWithinPartitions(col("file_path"), col("pos"))
+          val delDir = new HPath(new HPath(root, "data"),
+            s"graft-mergedel-${java.util.UUID.randomUUID()}")
+          val delCounts = IcebergStats.writeWithCounts(
+            delRows, delDir.toString)
+          val delFiles = fs.listStatus(delDir).toSeq
+            .filter(_.getPath.getName.endsWith(".parquet"))
+            .map(f => (f.getPath, f.getLen, delCounts
+              .getOrElse(f.getPath.getName, footerRecordCount(conf, f))))
+            .filter(_._3 > 0)
           val (newDir, allNewFiles, partValuesOf, nb) =
             writeSpecData(Sizing.coalesceForWrite(newRows),
               root, fs, conf, parts, schemaNode, schema, "graft-merge")
           val newFiles = allNewFiles.filter(_._3 > 0)
-          if (struckDvs.isEmpty && newFiles.isEmpty) {
-            fs.delete(newDir, true)
-            result = currentSnap // empty source, no clause fired: no-op
-          } else commitV3DvSnapshot(fs, io, root, metaDir, md, vTop,
-            currentSnap, newSeq, schemaNode, schemaId, priorList,
-            priorDeletes, struckDvs.toSeq, specId, parts, newFiles,
-            partValuesOf, "overwrite", refuseW, newBounds = nb) match {
-            case Some(snapId) => result = snapId
-            case None =>
-              fs.delete(newDir, true)
-              raceOut()
-          }
-        } else {
-        val delRows = struck
-          .join(pathMap, Seq("__fp"))
-          .select(col("__uri").as("file_path", reservedId(2147483546L)),
-            col("__pos").as("pos", reservedId(2147483545L)))
-          .sortWithinPartitions(col("file_path"), col("pos"))
-        val delDir = new HPath(new HPath(root, "data"),
-          s"graft-mergedel-${java.util.UUID.randomUUID()}")
-        val delCounts = IcebergStats.writeWithCounts(
-          delRows, delDir.toString)
-        val delFiles = fs.listStatus(delDir).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(f => (f.getPath, f.getLen, delCounts
-            .getOrElse(f.getPath.getName, footerRecordCount(conf, f))))
-          .filter(_._3 > 0)
-        val (newDir, allNewFiles, partValuesOf, nb) =
-          writeSpecData(Sizing.coalesceForWrite(newRows),
-            root, fs, conf, parts, schemaNode, schema, "graft-merge")
-        val newFiles = allNewFiles.filter(_._3 > 0)
-        if (delFiles.isEmpty && newFiles.isEmpty) {
-          // empty source, no clause fired: no-op
-          fs.delete(delDir, true); fs.delete(newDir, true)
-          result = currentSnap
-        } else {
-          val cleanupDirs = () => {
+          if (delFiles.isEmpty && newFiles.isEmpty) {
+            // empty source, no clause fired: no-op
             fs.delete(delDir, true); fs.delete(newDir, true)
-          }
-          val committed =
-            try commitOverwriteSnapshot(fs, io, metaDir, md, vTop,
+            currentSnap
+          } else OptimisticCommit.cleaningUp {
+            fs.delete(delDir, true); fs.delete(newDir, true)
+          } {
+            commitOverwriteSnapshot(fs, io, metaDir, md, vTop,
               currentSnap, newSeq, schemaNode, schemaId, specId, parts,
               priorList, delFiles, newFiles, partValuesOf,
               newBounds = nb)
-            catch {
-              case e: Throwable =>
-                try cleanupDirs() catch { case _: Exception => () }
-                throw e
-            }
-          committed match {
-            case Some(snapId) => result = snapId
-            case None =>
-              cleanupDirs()
-              raceOut()
           }
-        }
-        }
-      } finally matchedDf.unpersist()
+          }
+        } finally matchedDf.unpersist()
+      }
     }
-    result
   }
 
 
@@ -3927,7 +3757,7 @@ object IcebergInterop {
     * so predicates on any Z column touch few files via per-file
     * min/max stats. */
   def compactIceberg(spark: SparkSession, path: String,
-      targetFileBytes: Long = 128L << 20, maxRetries: Int = 20,
+      targetFileBytes: Long = 128L << 20,
       zorderBy: Seq[String] = Nil): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     require(zorderBy.distinct.size == zorderBy.size,
@@ -3946,18 +3776,8 @@ object IcebergInterop {
       hp.getFileSystem(conf).makeQualified(hp).toString
     }
 
-    var attempts = 0
-    var result = Long.MinValue
-    while (result == Long.MinValue) {
-      val listed = fs.listStatus(metaDir).toSeq.map(_.getPath.getName)
-      val vTop = listed.flatMap {
-        case VMeta(n) => Some(n.toInt)
-        case _ => None
-      }.maxOption.getOrElse(refuseW("the metadata is catalog-managed " +
-        "(no v<N>.metadata.json / version-hint naming) — a directory " +
-        "commit would be invisible to the catalog pointer"))
-      val md = om.readTree(readBytes(fs,
-        new HPath(metaDir, s"v$vTop.metadata.json"))).deepCopy[ObjectNode]()
+    OptimisticCommit.retry("compactIceberg", path) { _ =>
+      val (vTop, md) = newestListedMetadata(fs, metaDir)(refuseW(CatalogManaged))
       val fv = md.path("format-version").asInt(1)
       if (fv != 2 && fv != 3)
         refuseW(s"the table is format version $fv — the replace-snapshot " +
@@ -3967,7 +3787,7 @@ object IcebergInterop {
       // files, per the spec's rewrite obligation
       val v3Lineage = fv == 3 && md.has("next-row-id")
       val currentSnap = md.path("current-snapshot-id").asLong(-1L)
-      if (currentSnap < 0) { result = currentSnap } // empty table
+      if (currentSnap < 0) currentSnap // empty table
       else {
         val schemaNode = currentSchemaNode(md, path)
         val schemaId = md.path("current-schema-id").asInt(
@@ -4010,7 +3830,7 @@ object IcebergInterop {
         if ((zorderBy.isEmpty && chosenData.size < 2 &&
             !(chosenData.nonEmpty && deleteManifests.nonEmpty)) ||
             chosenData.isEmpty) {
-          result = currentSnap // nothing worth compacting
+          currentSnap // nothing worth compacting
         } else {
           // position-delete / deletion-vector manifests fully consumed
           // by this rewrite: every live entry's referenced data files
@@ -4119,40 +3939,23 @@ object IcebergInterop {
             }
           val keptPrior = priorList.filterNot(r =>
             chosenData.exists(_ eq r) || dropDeletes.exists(_ eq r))
-          val cleanupDirs = () => { fs.delete(newDir, true); () }
-          val committed =
-            try {
-              if (fv == 3)
-                commitV3DvSnapshot(fs, io, root, metaDir, md, vTop,
-                  currentSnap, newSeq, schemaNode, schemaId, keptPrior,
-                  classifyV3Deletes(fs, keptPrior, refuseW),
-                  Nil, specId, parts, newFiles, partValuesOf,
-                  "replace", refuseW, newBounds = nb,
-                  newSortOrderId = sortOrderId)
-              else commitOverwriteSnapshot(fs, io, metaDir, md, vTop,
-                currentSnap, newSeq, schemaNode, schemaId, specId, parts,
-                keptPrior, Nil, newFiles, partValuesOf,
-                operation = "replace", newBounds = nb,
+          OptimisticCommit.cleaningUp(fs.delete(newDir, true)) {
+            if (fv == 3)
+              commitV3DvSnapshot(fs, io, root, metaDir, md, vTop,
+                currentSnap, newSeq, schemaNode, schemaId, keptPrior,
+                classifyV3Deletes(fs, keptPrior, refuseW),
+                Nil, specId, parts, newFiles, partValuesOf,
+                "replace", refuseW, newBounds = nb,
                 newSortOrderId = sortOrderId)
-            } catch {
-              case e: Throwable =>
-                try cleanupDirs() catch { case _: Exception => () }
-                throw e
-            }
-          committed match {
-            case Some(snapId) => result = snapId
-            case None =>
-              cleanupDirs()
-              attempts += 1
-              if (attempts > maxRetries)
-                throw new IllegalStateException(
-                  s"compactIceberg lost $maxRetries version races at " +
-                    s"$path — giving up")
+            else commitOverwriteSnapshot(fs, io, metaDir, md, vTop,
+              currentSnap, newSeq, schemaNode, schemaId, specId, parts,
+              keptPrior, Nil, newFiles, partValuesOf,
+              operation = "replace", newBounds = nb,
+              newSortOrderId = sortOrderId)
           }
         }
       }
     }
-    result
   }
 
   // ---------------------------------------------------------------
@@ -6225,42 +6028,24 @@ object IcebergInterop {
     * put. Lost races re-read and re-apply — the edit closure sees the
     * WINNER's state each attempt. Returns the published version. */
   private def commitMetadataEdit(spark: SparkSession, path: String,
-      maxRetries: Int, what: String)(edit: ObjectNode => Unit): Int = {
+      what: String)(edit: ObjectNode => Unit): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new HPath(path)
     val fs = root.getFileSystem(conf)
     val io = new TableIO(path, conf)
     val metaDir = new HPath(root, "metadata")
     require(fs.exists(metaDir), s"no Iceberg metadata directory at $path")
-    var attempts = 0
-    while (true) {
-      val listed = fs.listStatus(metaDir).toSeq.map(_.getPath.getName)
-      val cur = listed.flatMap {
-        case VMeta(n) => Some(n.toInt)
-        case _ => None
-      }.maxOption.getOrElse(throw new IllegalArgumentException(
-        s"cannot $what at $path: the metadata is catalog-managed " +
-          "(no v<N>.metadata.json naming)"))
-      val md = om.readTree(readBytes(fs,
-        new HPath(metaDir, s"v$cur.metadata.json"))).asInstanceOf[ObjectNode]
+    OptimisticCommit.retry(what, path) { _ =>
+      val (cur, md) = newestListedMetadata(fs, metaDir)(
+        throw new IllegalArgumentException(s"cannot $what at $path: the " +
+          "metadata is catalog-managed (no v<N>.metadata.json naming)"))
       if (md.path("format-version").asInt(1) > 2)
         refuse(path, "is format version 3+")
       edit(md)
       md.put("last-updated-ms", System.currentTimeMillis())
-      try {
-        io.writeExclusive(new HPath(metaDir, s"v${cur + 1}.metadata.json"),
-          om.writerWithDefaultPrettyPrinter().writeValueAsBytes(md))
-        publishHint(fs, metaDir, cur + 1)
-        return cur + 1
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempts += 1
-          if (attempts > maxRetries)
-            throw new IllegalStateException(
-              s"$what lost $maxRetries version races at $path — giving up")
-      }
+      claimMetadata(io, metaDir, cur + 1, md)
+      cur + 1
     }
-    0 // unreachable
   }
 
   private def snapshotIds(md: ObjectNode): Seq[Long] =
@@ -6312,9 +6097,9 @@ object IcebergInterop {
     * [[expireIcebergSnapshots]] ages it out, and the NEXT append
     * parents the restored snapshot. O(metadata), zero data I/O —
     * the cheapest possible "undo a bad write". */
-  def rollbackIceberg(spark: SparkSession, path: String, snapshotId: Long,
-      maxRetries: Int = 20): Int =
-    commitMetadataEdit(spark, path, maxRetries, "rollback") { md =>
+  def rollbackIceberg(spark: SparkSession, path: String,
+      snapshotId: Long): Int =
+    commitMetadataEdit(spark, path, "rollback") { md =>
       require(snapshotIds(md).contains(snapshotId),
         s"snapshot $snapshotId is not retained at $path — only retained " +
           "snapshots can become current")
@@ -6338,12 +6123,12 @@ object IcebergInterop {
     }
 
   private def putRef(spark: SparkSession, path: String, name: String,
-      snapshotId: Option[Long], refType: String, maxRetries: Int): Long = {
+      snapshotId: Option[Long], refType: String): Long = {
     require(name.nonEmpty, "ref name must be non-empty")
     require(name != "main" || refType == "branch",
       "'main' is the reserved current-state branch")
     var resolved = -1L
-    commitMetadataEdit(spark, path, maxRetries, s"create $refType $name") {
+    commitMetadataEdit(spark, path, s"create $refType $name") {
       md =>
         val id = snapshotId.getOrElse(md.path("current-snapshot-id").asLong(-1L))
         require(id >= 0 && snapshotIds(md).contains(id),
@@ -6368,23 +6153,23 @@ object IcebergInterop {
     * PINS (a tagged snapshot never expires while the tag lives).
     * Returns the tagged snapshot id. */
   def tagIceberg(spark: SparkSession, path: String, name: String,
-      snapshotId: Option[Long] = None, maxRetries: Int = 20): Long =
-    putRef(spark, path, name, snapshotId, "tag", maxRetries)
+      snapshotId: Option[Long] = None): Long =
+    putRef(spark, path, name, snapshotId, "tag")
 
   /** Create a BRANCH ref at a retained snapshot (default: current).
     * graft's writes always advance `main`/current — a branch here is a
     * durable named read point (audit, WAP-style inspection), pinned
     * against expiry exactly like a tag. Returns the snapshot id. */
   def branchIceberg(spark: SparkSession, path: String, name: String,
-      snapshotId: Option[Long] = None, maxRetries: Int = 20): Long =
-    putRef(spark, path, name, snapshotId, "branch", maxRetries)
+      snapshotId: Option[Long] = None): Long =
+    putRef(spark, path, name, snapshotId, "branch")
 
   /** Drop a tag/branch ref (the snapshot it pinned stays retained
     * until the next [[expireIcebergSnapshots]]). */
-  def dropIcebergRef(spark: SparkSession, path: String, name: String,
-      maxRetries: Int = 20): Unit = {
+  def dropIcebergRef(spark: SparkSession, path: String,
+      name: String): Unit = {
     require(name != "main", "cannot drop the reserved 'main' branch")
-    commitMetadataEdit(spark, path, maxRetries, s"drop ref $name") { md =>
+    commitMetadataEdit(spark, path, s"drop ref $name") { md =>
       md.path("refs") match {
         case r: ObjectNode if r.has(name) => r.remove(name)
         case _ => throw new IllegalArgumentException(
@@ -6559,8 +6344,8 @@ object IcebergInterop {
     * in pre-order, bumping last-column-id over the whole allocation.
     * Duplicate names (case-insensitive) refuse. */
   def addColumnToIceberg(spark: SparkSession, path: String, name: String,
-      dataType: DataType, maxRetries: Int = 20): Int =
-    commitMetadataEdit(spark, path, maxRetries, s"add column $name") { md =>
+      dataType: DataType): Int =
+    commitMetadataEdit(spark, path, s"add column $name") { md =>
       val cur = currentSchemaNode(md, path)
       val existing = cur.get("fields").elements().asScala()
         .map(_.get("name").asText()).toSeq
@@ -6589,9 +6374,8 @@ object IcebergInterop {
     * through list/map, refuse — those additions change element
     * shapes, a full client's job. */
   def addNestedColumnToIceberg(spark: SparkSession, path: String,
-      parent: String, name: String, dataType: DataType,
-      maxRetries: Int = 20): Int =
-    commitMetadataEdit(spark, path, maxRetries,
+      parent: String, name: String, dataType: DataType): Int =
+    commitMetadataEdit(spark, path,
       s"add column $parent.$name") { md =>
       val cur = currentSchemaNode(md, path)
       val newSchema = cur.deepCopy[ObjectNode]()
@@ -6629,8 +6413,8 @@ object IcebergInterop {
     * the new name (the field-id resolution [[readIceberg]] already
     * implements) — one metadata-only commit. */
   def renameIcebergColumn(spark: SparkSession, path: String, from: String,
-      to: String, maxRetries: Int = 20): Int =
-    commitMetadataEdit(spark, path, maxRetries,
+      to: String): Int =
+    commitMetadataEdit(spark, path,
       s"rename column $from to $to") { md =>
       val cur = currentSchemaNode(md, path)
       val names = cur.get("fields").elements().asScala()
@@ -6653,8 +6437,8 @@ object IcebergInterop {
     * knobs, write targets, …; the same map graft's exactly-once txn
     * watermarks ride, so concurrent edits race-retry safely). */
   def setIcebergProperties(spark: SparkSession, path: String,
-      props: Map[String, String], maxRetries: Int = 20): Int =
-    commitMetadataEdit(spark, path, maxRetries, "set properties") { md =>
+      props: Map[String, String]): Int =
+    commitMetadataEdit(spark, path, "set properties") { md =>
       val o = md.path("properties") match {
         case p: ObjectNode => p
         case _ => md.putObject("properties")
@@ -6664,8 +6448,8 @@ object IcebergInterop {
 
   /** UNSET TBLPROPERTIES — drops `keys` from the properties map. */
   def removeIcebergProperties(spark: SparkSession, path: String,
-      keys: Seq[String], maxRetries: Int = 20): Int =
-    commitMetadataEdit(spark, path, maxRetries, "remove properties") { md =>
+      keys: Seq[String]): Int =
+    commitMetadataEdit(spark, path, "remove properties") { md =>
       md.path("properties") match {
         case p: ObjectNode => keys.foreach(p.remove)
         case _ => ()

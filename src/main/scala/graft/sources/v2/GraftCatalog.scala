@@ -1029,7 +1029,7 @@ private[v2] object GraftProcedures {
                   .getOrElse(Nil)
                 (longSchema("version"), Seq(InternalRow(
                   graft.sources.DeltaInterop.optimizeDelta(spark, arg0,
-                    input.getLong(1), 20, z))))
+                    input.getLong(1), z))))
               case "delta_checkpoint" =>
                 (longSchema("version"), Seq(InternalRow(
                   graft.sources.DeltaInterop.checkpointDelta(spark, arg0))))

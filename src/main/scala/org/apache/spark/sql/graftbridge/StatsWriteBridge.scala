@@ -7,8 +7,9 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.{FileFormatWriter,
-  WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker,
+  FileFormatWriter, WriteJobStatsTracker, WriteTaskStats,
+  WriteTaskStatsTracker}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.util.SerializableConfiguration
@@ -171,8 +172,8 @@ object StatsWriteBridge {
       jobId = java.util.UUID.randomUUID().toString,
       outputPath = outputPath,
       dynamicPartitionOverwrite = false)
-    val tracker = new JobTracker(
-      new SerializableConfiguration(hadoopConf), fn)
+    val serConf = new SerializableConfiguration(hadoopConf)
+    val tracker = new JobTracker(serConf, fn)
     FileFormatWriter.write(
       sparkSession = spark,
       plan = plan,
@@ -183,7 +184,11 @@ object StatsWriteBridge {
       hadoopConf = hadoopConf,
       partitionColumns = partAttrs,
       bucketSpec = None,
-      statsTrackers = Seq(tracker),
+      // Spark's own tracker reports each task's output bytes and rows
+      // to listeners (TaskMetrics.outputMetrics), as a DataFrame write
+      // would
+      statsTrackers = Seq(tracker, new BasicWriteJobStatsTracker(serConf,
+        BasicWriteJobStatsTracker.metrics)),
       options = Map.empty)
     tracker.collected.toMap
   }

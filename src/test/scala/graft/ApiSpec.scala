@@ -79,8 +79,7 @@ class ApiSpec extends AnyFunSuite {
     val docs = graft.sources.Tables.documents(spark, sf)
     val base = docs.filter(!$"source".isin("src18", "src19"))
     val delta = docs.filter($"source".isin("src18", "src19"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_dedupidx_").toString + "/idx"
+    val root = tmpDir("graft_dedupidx_").toString + "/idx"
     GraftOps.buildDedupIndex(base, "doc_id", "text", 0.5, root)
     // a FRESH session: no relCache, no persisted relations — everything
     // the probe needs must come off the durable index tables
@@ -95,8 +94,7 @@ class ApiSpec extends AnyFunSuite {
       s"missing=${expected -- got} extra=${got -- expected}")
     // a delta shingle UNSEEN by the base still pairs two delta docs
     // (frozen-order rank df=1), and base-internal pairs never re-emit
-    val tinyRoot = java.nio.file.Files
-      .createTempDirectory("graft_dedupidx2_").toString + "/idx"
+    val tinyRoot = tmpDir("graft_dedupidx2_").toString + "/idx"
     val a = (1 to 40).map(i => s"w$i").mkString(" ")
     GraftOps.buildDedupIndex(
       Seq((1L, a), (2L, a), (10L, "completely different stuff here"))

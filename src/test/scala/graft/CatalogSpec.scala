@@ -20,7 +20,7 @@ class CatalogSpec extends AnyFunSuite {
     cat = s"gcat$n"
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse",
-      Files.createTempDirectory("graft_cat_spec_").toString)
+      tmpDir("graft_cat_spec_").toString)
   }
 
   test("CREATE TABLE / INSERT INTO / SELECT round-trip with pushdown") {
@@ -272,8 +272,8 @@ class CatalogSpec extends AnyFunSuite {
     spark.sql(s"CREATE TABLE $cat.db.ex (id BIGINT, v STRING) USING graft")
     spark.sql(s"INSERT INTO $cat.db.ex VALUES (1, 'a'), (2, 'b'), (3, 'c')")
     spark.sql(s"DELETE FROM $cat.db.ex WHERE id = 2")
-    val deltaDir = Files.createTempDirectory("graft_exd_").toString + "/t"
-    val iceDir = Files.createTempDirectory("graft_exi_").toString + "/t"
+    val deltaDir = tmpDir("graft_exd_").toString + "/t"
+    val iceDir = tmpDir("graft_exi_").toString + "/t"
     val r1 = spark.sql(s"CALL $cat.system.export_delta('db.ex', '$deltaDir')")
     assert(r1.collect()(0).getInt(0) > 0)
     val r2 = spark.sql(s"CALL $cat.system.export_iceberg('db.ex', '$iceDir')")
@@ -541,12 +541,12 @@ class CatalogSpec extends AnyFunSuite {
 
   test("streaming read recovers from a checkpoint exactly-once; rate limit bounds batches") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_ckr_").toString + "/t"
+    val path = tmpDir("graft_ckr_").toString + "/t"
     val t = graft.sources.GraftTable.create(spark, path,
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     val fmt = "graft.sources.v2.GraftSource"
-    val out = Files.createTempDirectory("graft_ckr_out_").toString
-    val ckpt = Files.createTempDirectory("graft_ckr_ck_").toString
+    val out = tmpDir("graft_ckr_out_").toString
+    val ckpt = tmpDir("graft_ckr_ck_").toString
     def run() = spark.readStream.format(fmt)
       .option("maxCommitsPerTrigger", "1").load(path)
       .writeStream.option("checkpointLocation", ckpt)
@@ -576,9 +576,9 @@ class CatalogSpec extends AnyFunSuite {
   test("streaming sink lands exactly-once batch commits (append mode)") {
     import spark.implicits._
     val fmt = "graft.sources.v2.GraftSource"
-    val srcPath = Files.createTempDirectory("graft_sink_src_").toString + "/t"
-    val tgtPath = Files.createTempDirectory("graft_sink_tgt_").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft_sink_ck_").toString
+    val srcPath = tmpDir("graft_sink_src_").toString + "/t"
+    val tgtPath = tmpDir("graft_sink_tgt_").toString + "/t"
+    val ckpt = tmpDir("graft_sink_ck_").toString
     val src = graft.sources.GraftTable.create(spark, srcPath,
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     def run() = spark.readStream.format(fmt)
@@ -616,7 +616,7 @@ class CatalogSpec extends AnyFunSuite {
     assert(graft.sources.GraftTable.load(spark, tgtPath).read().count() == 4)
     // a NEW query (fresh checkpoint) into the same target must NOT be
     // skipped by the old query's batch ids — its batches really land
-    val ckpt2 = Files.createTempDirectory("graft_sink_ck2_").toString
+    val ckpt2 = tmpDir("graft_sink_ck2_").toString
     val q3 = spark.readStream.format(fmt).load(srcPath)
       .writeStream.format(fmt).option("checkpointLocation", ckpt2)
       .outputMode("append").start(tgtPath)
@@ -635,7 +635,7 @@ class CatalogSpec extends AnyFunSuite {
       finally spark.sparkContext.setLocalProperty("sql.streaming.queryId", null)
     }
     // pre-upgrade table: ONLY legacy markers — replay protection holds
-    val legacy = Files.createTempDirectory("graft_lm1_").toString + "/t"
+    val legacy = tmpDir("graft_lm1_").toString + "/t"
     val t1 = graft.sources.GraftTable.create(spark, legacy, Seq.empty[Long].toDF("id"))
     t1.appendBatch("stream-append#0", Seq(1L).toDF("id"))
     sinkBatch(legacy, "q-new", 0, Seq(9L))
@@ -644,7 +644,7 @@ class CatalogSpec extends AnyFunSuite {
     // upgraded table: query-scoped markers exist — a NEW query whose
     // batch ids collide with OLD legacy markers must land its batches
     // (the data-loss mode the query-id marker exists to prevent)
-    val mixed = Files.createTempDirectory("graft_lm2_").toString + "/t"
+    val mixed = tmpDir("graft_lm2_").toString + "/t"
     val t2 = graft.sources.GraftTable.create(spark, mixed, Seq.empty[Long].toDF("id"))
     t2.appendBatch("stream-append#0", Seq(1L).toDF("id")) // old pre-upgrade marker
     sinkBatch(mixed, "q-a", 5, Seq(2L))                   // scoped marker exists now
@@ -659,9 +659,9 @@ class CatalogSpec extends AnyFunSuite {
   test("streaming sink complete mode keeps the latest aggregate; update refused") {
     import spark.implicits._
     val fmt = "graft.sources.v2.GraftSource"
-    val srcPath = Files.createTempDirectory("graft_sinkc_src_").toString + "/t"
-    val tgtPath = Files.createTempDirectory("graft_sinkc_tgt_").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft_sinkc_ck_").toString
+    val srcPath = tmpDir("graft_sinkc_src_").toString + "/t"
+    val tgtPath = tmpDir("graft_sinkc_tgt_").toString + "/t"
+    val ckpt = tmpDir("graft_sinkc_ck_").toString
     val src = graft.sources.GraftTable.create(spark, srcPath,
       Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("id", "v"))
     val q = spark.readStream.format(fmt).load(srcPath)
@@ -684,9 +684,9 @@ class CatalogSpec extends AnyFunSuite {
         .groupBy($"v").agg(count(lit(1)).as("n"))
         .writeStream.format(fmt)
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_sinku_ck_").toString)
+          tmpDir("graft_sinku_ck_").toString)
         .outputMode("update")
-        .start(Files.createTempDirectory("graft_sinku_tgt_").toString + "/t")
+        .start(tmpDir("graft_sinku_tgt_").toString + "/t")
       try bad.processAllAvailable() finally bad.stop()
     }
     def msgs(t: Throwable): Seq[String] =
@@ -698,7 +698,7 @@ class CatalogSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     import graft.sources.v2.{GraftMicroBatchStream, GraftOffset}
-    val path = Files.createTempDirectory("graft_rl_").toString + "/t"
+    val path = tmpDir("graft_rl_").toString + "/t"
     val t = graft.sources.GraftTable.create(spark, path,
       Seq((1L, "a")).toDF("id", "v"))
     t.append(Seq((2L, "b")).toDF("id", "v"))
@@ -791,8 +791,8 @@ class CatalogSpec extends AnyFunSuite {
     freshCatalog()
     spark.sql(s"CREATE TABLE $cat.db.acw (id BIGINT, v STRING) USING graft")
     spark.sql(s"INSERT INTO $cat.db.acw VALUES (1, 'a')")
-    val ckpt = Files.createTempDirectory("graft_acw_ck_").toString
-    val out = Files.createTempDirectory("graft_acw_out_").toString
+    val ckpt = tmpDir("graft_acw_ck_").toString
+    val out = tmpDir("graft_acw_out_").toString
     def run() = spark.readStream.table(s"$cat.db.acw")
       .writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", ckpt).start()
@@ -830,7 +830,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("path-based provider: batch + streaming reads without a catalog") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_src_").toString + "/t"
+    val path = tmpDir("graft_src_").toString + "/t"
     val t = graft.sources.GraftTable.create(spark, path,
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     val fmt = "graft.sources.v2.GraftSource"
@@ -913,7 +913,7 @@ class CatalogSpec extends AnyFunSuite {
     cat = s"gcat$n"
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse",
-      "file://" + Files.createTempDirectory("graft_cat_uri_").toString)
+      "file://" + tmpDir("graft_cat_uri_").toString)
     spark.sql(s"CREATE NAMESPACE $cat.db")
     spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, v STRING) USING graft")
     spark.sql(s"INSERT INTO $cat.db.t VALUES (1, 'a'), (2, 'b')")
@@ -934,9 +934,9 @@ class CatalogSpec extends AnyFunSuite {
     // Delta: export → restore → clone → optimize(zorder) → vacuum,
     // every verb through SQL against the raw root
     val t = graft.sources.GraftTable.create(spark,
-      Files.createTempDirectory("graft_prt_").toString + "/t",
+      tmpDir("graft_prt_").toString + "/t",
       Seq.range(0L, 100L).map(i => (i, s"v$i")).toDF("id", "v"))
-    val dRoot = Files.createTempDirectory("graft_prd_").toString + "/t"
+    val dRoot = tmpDir("graft_prd_").toString + "/t"
     graft.sources.DeltaInterop.exportSnapshot(t, dRoot)
     graft.sources.DeltaInterop.deleteFromDelta(spark, dRoot,
       org.apache.spark.sql.functions.col("id") < 50L)
@@ -944,7 +944,7 @@ class CatalogSpec extends AnyFunSuite {
       .collect()(0).getLong(0) == 2L)
     assert(graft.sources.DeltaInterop.readDelta(spark, dRoot)
       .count() == 100)
-    val cRoot = Files.createTempDirectory("graft_prc_").toString + "/t"
+    val cRoot = tmpDir("graft_prc_").toString + "/t"
     assert(spark.sql(s"CALL $cat.system.delta_clone('$dRoot', '$cRoot')")
       .collect()(0).getLong(0) == 0L)
     assert(graft.sources.DeltaInterop.readDelta(spark, cRoot)
@@ -968,7 +968,7 @@ class CatalogSpec extends AnyFunSuite {
     assert(graft.sources.DeltaInterop.readDelta(spark, cRoot)
       .count() == 100)
     // Iceberg: export → tag → rollback via the tag → expire → orphans
-    val iRoot = Files.createTempDirectory("graft_pri_").toString + "/t"
+    val iRoot = tmpDir("graft_pri_").toString + "/t"
     graft.sources.IcebergInterop.exportSnapshot(t, iRoot)
     val tagged = spark.sql(s"CALL $cat.system.iceberg_tag('$iRoot', 'good')")
       .collect()(0).getLong(0)
@@ -1002,10 +1002,10 @@ class CatalogSpec extends AnyFunSuite {
     freshCatalog()
     import spark.implicits._
     val t = graft.sources.GraftTable.create(spark,
-      Files.createTempDirectory("graft_pdel_").toString + "/t",
+      tmpDir("graft_pdel_").toString + "/t",
       (0 until 20).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
     // Delta: CoW delete through CALL, version comes back
-    val droot = Files.createTempDirectory("graft_pdel_d_").toString + "/t"
+    val droot = tmpDir("graft_pdel_d_").toString + "/t"
     graft.sources.DeltaInterop.exportSnapshot(t, droot)
     val dv = spark.sql(
       s"CALL $cat.system.delta_delete('$droot', 'id < 5')")
@@ -1014,7 +1014,7 @@ class CatalogSpec extends AnyFunSuite {
     assert(graft.sources.DeltaInterop.readDelta(spark, droot)
       .count() == 15)
     // Iceberg: v2 merge-on-read delete through CALL
-    val iroot = Files.createTempDirectory("graft_pdel_i_").toString + "/t"
+    val iroot = tmpDir("graft_pdel_i_").toString + "/t"
     graft.sources.IcebergInterop.exportSnapshot(t, iroot)
     val mdp = java.nio.file.Paths.get(iroot, "metadata", "v1.metadata.json")
     Files.write(mdp, new String(Files.readAllBytes(mdp), "UTF-8")
@@ -1032,12 +1032,12 @@ class CatalogSpec extends AnyFunSuite {
     freshCatalog()
     import spark.implicits._
     val t = graft.sources.GraftTable.create(spark,
-      Files.createTempDirectory("graft_pupd_").toString + "/t",
+      tmpDir("graft_pupd_").toString + "/t",
       (0 until 20).map(i => (i.toLong, s"v$i", 1.0 * i))
         .toDF("id", "v", "w"))
     // Delta: UPDATE with a multi-assignment SET (comma inside an
     // expression stays inside), then a keyed MERGE from a SQL source
-    val droot = Files.createTempDirectory("graft_pupd_d_").toString + "/t"
+    val droot = tmpDir("graft_pupd_d_").toString + "/t"
     graft.sources.DeltaInterop.exportSnapshot(t, droot)
     spark.sql(s"CALL $cat.system.delta_update('$droot', 'id >= 15', " +
       "'v = concat(v, ''!''), w = coalesce(w, 0.0) + 100')")
@@ -1052,7 +1052,7 @@ class CatalogSpec extends AnyFunSuite {
       .select("id", "v").as[(Long, String)].collect().toMap
     assert(dGot2(3L) == "m3" && dGot2(99L) == "m99" && dGot2.size == 21)
     // Iceberg: same verb chain on a v2 root
-    val iroot = Files.createTempDirectory("graft_pupd_i_").toString + "/t"
+    val iroot = tmpDir("graft_pupd_i_").toString + "/t"
     graft.sources.IcebergInterop.exportSnapshot(t, iroot)
     val mdp = java.nio.file.Paths.get(iroot, "metadata", "v1.metadata.json")
     Files.write(mdp, new String(Files.readAllBytes(mdp), "UTF-8")
@@ -1077,9 +1077,9 @@ class CatalogSpec extends AnyFunSuite {
     import spark.implicits._
     // a foreign Delta table at a raw path
     val t = graft.sources.GraftTable.create(spark,
-      Files.createTempDirectory("graft_fsql_").toString + "/t",
+      tmpDir("graft_fsql_").toString + "/t",
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
-    val droot = Files.createTempDirectory("graft_fsql_d_").toString + "/t"
+    val droot = tmpDir("graft_fsql_d_").toString + "/t"
     graft.sources.DeltaInterop.exportSnapshot(t, droot)
     graft.sources.DeltaInterop.deleteFromDelta(spark, droot, col("id") === 1L)
     // current state + DESCRIBE HISTORY, both pure SELECTs
@@ -1092,7 +1092,7 @@ class CatalogSpec extends AnyFunSuite {
     assert(hist.map(_._1).toSeq == Seq(1L, 0L), hist.toSeq)
     assert(hist.exists(_._2 == "DELETE"), hist.toSeq)
     // a foreign Iceberg table at a raw path
-    val iroot = Files.createTempDirectory("graft_fsql_i_").toString + "/t"
+    val iroot = tmpDir("graft_fsql_i_").toString + "/t"
     graft.sources.IcebergInterop.exportSnapshot(t, iroot)
     graft.sources.IcebergInterop.appendToIceberg(
       Seq((3L, "c")).toDF("id", "v"), iroot)
@@ -1119,8 +1119,8 @@ class CatalogSpec extends AnyFunSuite {
     val base = Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
       .toDF("id", "v", "w")
     val t = graft.sources.GraftTable.create(spark,
-      Files.createTempDirectory("graft_dml_").toString + "/t", base)
-    val droot = Files.createTempDirectory("graft_dml_d_").toString + "/t"
+      tmpDir("graft_dml_").toString + "/t", base)
+    val droot = tmpDir("graft_dml_d_").toString + "/t"
     graft.sources.DeltaInterop.exportSnapshot(t, droot)
 
     def deltaState() = graft.sources.DeltaInterop.readDelta(spark, droot)
@@ -1159,7 +1159,7 @@ class CatalogSpec extends AnyFunSuite {
 
     // the same statements against a raw Iceberg root (v2: row-level
     // DML needs merge-on-read position deletes)
-    val iroot = Files.createTempDirectory("graft_dml_i_").toString + "/t"
+    val iroot = tmpDir("graft_dml_i_").toString + "/t"
     graft.sources.IcebergInterop.exportSnapshot(t, iroot)
     val mdp = java.nio.file.Paths.get(iroot, "metadata", "v1.metadata.json")
     Files.write(mdp, new String(Files.readAllBytes(mdp), "UTF-8")

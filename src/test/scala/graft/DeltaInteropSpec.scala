@@ -3,13 +3,10 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{DeltaInterop, GraftTable}
+import graft.sources.{DeltaInterop, GraftTable, OptimisticCommit}
 
 class DeltaInteropSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
 
   test("export snapshot round-trips through the Delta log reader") {
     import spark.implicits._
@@ -201,7 +198,7 @@ class DeltaInteropSpec extends AnyFunSuite {
     * `version` and the matching _last_checkpoint pointer. */
   private def writeCheckpoint(root: String, version: Long,
       schema: StructType, rows: Seq[Row]): Unit = {
-    val stage = Files.createTempDirectory("graft_cpstage_").toString
+    val stage = tmpDir("graft_cpstage_").toString
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), schema)
       .coalesce(1).write.parquet(stage + "/cp")
@@ -266,7 +263,7 @@ class DeltaInteropSpec extends AnyFunSuite {
     * root) — for hand-building v2 checkpoints and sidecars. */
   private def writeParquetAs(root: String, dest: String,
       schema: StructType, rows: Seq[Row]): Unit = {
-    val stage = Files.createTempDirectory("graft_cpstage_").toString
+    val stage = tmpDir("graft_cpstage_").toString
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), schema)
       .coalesce(1).write.parquet(stage + "/cp")
@@ -1414,8 +1411,8 @@ class DeltaInteropSpec extends AnyFunSuite {
       s"""{"metaData":{"id":"m","format":{"provider":"parquet","options":{}},"schemaString":"${esc(schemaJson)}","partitionColumns":["seg"],"configuration":{"delta.columnMapping.mode":"name","delta.columnMapping.maxColumnId":"5"},"createdTime":1}}""",
       s"""{"add":{"path":"${esc(fA)}","partitionValues":{"col-5":"A"},"size":1,"modificationTime":1,"dataChange":true}}"""
     ).mkString("", "\n", "\n").getBytes("UTF-8"))
-    val ckpt = Files.createTempDirectory("graft_dcmstr_ck_").toString
-    val out = Files.createTempDirectory("graft_dcmstr_out_").toString
+    val ckpt = tmpDir("graft_dcmstr_ck_").toString
+    val out = tmpDir("graft_dcmstr_out_").toString
     def start() = spark.readStream.format("graft.sources.v2.DeltaSource")
       .load(root)
       .writeStream.format("parquet")
@@ -1522,8 +1519,8 @@ class DeltaInteropSpec extends AnyFunSuite {
       Files.createDirectories(Paths.get(target, dest).getParent)
       Files.copy(part, Paths.get(target, dest))
     }
-    val ckpt = Files.createTempDirectory("graft_dsg_ck_").toString
-    val out = Files.createTempDirectory("graft_dsg_out_").toString
+    val ckpt = tmpDir("graft_dsg_ck_").toString
+    val out = tmpDir("graft_dsg_out_").toString
     def start() = spark.readStream.format("graft.sources.v2.DeltaSource")
       .load(target)
       .writeStream.format("parquet").option("path", out)
@@ -1643,7 +1640,7 @@ class DeltaInteropSpec extends AnyFunSuite {
     // external data files OUTSIDE the table root — one bare absolute
     // path, one file: URI with a percent-encoded space; re-rooting
     // either under the table root would fail to find them
-    val ext = Files.createTempDirectory("graft_dext_").toString
+    val ext = tmpDir("graft_dext_").toString
     def writeExt(sub: String, rows: Seq[(Long, Double)]): String = {
       rows.toDF("id", "x").coalesce(1).write.parquet(ext + "/" + sub)
       val it = Files.list(Paths.get(ext, sub)).iterator()
@@ -2568,8 +2565,13 @@ class DeltaInteropSpec extends AnyFunSuite {
     // watermark, so the re-validation must refuse (on mapped tables a
     // physical-layout-only compare missed this: physicalField strips
     // the identity metadata)
+    // the race seam fires before every claim: each peer lands once
+    def once(peer: () => Unit): Option[() => Unit] = {
+      var fired = false
+      Some(() => if (!fired) { fired = true; peer() })
+    }
     val root1 = mkTable()
-    DeltaInterop.appendRaceHook = Some(() =>
+    OptimisticCommit.raceHook = once(() =>
       Files.write(Paths.get(root1, "_delta_log", "0" * 19 + "1.json"), Seq(
         """{"commitInfo":{"timestamp":2,"operation":"WRITE"}}""",
         metaLine(schemaOf(Some(5L)))
@@ -2580,11 +2582,11 @@ class DeltaInteropSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("changed its schema or column mapping"),
         e.getMessage)
-    } finally DeltaInterop.appendRaceHook = None
+    } finally OptimisticCommit.raceHook = None
     // a benign peer (no schema change) just costs a slot: the retry
     // lands at the next version with the staged assignment intact
     val root2 = mkTable()
-    DeltaInterop.appendRaceHook = Some(() =>
+    OptimisticCommit.raceHook = once(() =>
       Files.write(Paths.get(root2, "_delta_log", "0" * 19 + "1.json"),
         """{"commitInfo":{"timestamp":2,"operation":"NOOP"}}"""
           .concat("\n").getBytes("UTF-8")): Unit)
@@ -2594,7 +2596,7 @@ class DeltaInteropSpec extends AnyFunSuite {
       val ids = DeltaInterop.readDelta(spark, root2)
         .select("id").as[Long].collect().toSet
       assert(ids == Set(1L, 2L), ids.toString)
-    } finally DeltaInterop.appendRaceHook = None
+    } finally OptimisticCommit.raceHook = None
   }
 
   test("CDF reads column-mapped tables; a mid-range mapping change " +
@@ -3271,7 +3273,7 @@ class DeltaInteropSpec extends AnyFunSuite {
         .MemoryStream[(Long, Long)]
     }
     mem.addData((1L, 10L), (2L, 20L))
-    val ckpt = Files.createTempDirectory("graft_txns_ck_").toString
+    val ckpt = tmpDir("graft_txns_ck_").toString
     val q = mem.toDF().toDF("id", "x").writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch(DeltaInterop.exactlyOnceDeltaAppender(target, "mstream"))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{DeltaInterop, GraftTable}
@@ -17,9 +16,6 @@ import graft.sources.{DeltaInterop, GraftTable}
   * modern default. */
 class DeltaRowTrackingSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
 
   private def mkTable(rows: Int = 40, files: Int = 4): String = {
     import spark.implicits._
@@ -291,17 +287,14 @@ class DeltaRowTrackingSpec extends AnyFunSuite {
 class AvailableNowSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
-
   test("Delta stream drains a multi-commit tail in bounded batches") {
     import spark.implicits._
     val t = GraftTable.create(spark, tmp("graft_an_src_"),
       Seq((1L, "a")).toDF("id", "v"))
     val target = tmp("graft_an_delta_")
     DeltaInterop.exportSnapshot(t, target)
-    val ckpt = Files.createTempDirectory("graft_an_ck_").toString
-    val outDir = Files.createTempDirectory("graft_an_out_").toString
+    val ckpt = tmpDir("graft_an_ck_").toString
+    val outDir = tmpDir("graft_an_out_").toString
     def drain(): org.apache.spark.sql.streaming.StreamingQuery = {
       val q = spark.readStream.format("graft.sources.v2.DeltaSource")
         .option("maxCommitsPerTrigger", "1").load(target)
@@ -328,8 +321,8 @@ class AvailableNowSpec extends AnyFunSuite {
     import spark.implicits._
     val t = GraftTable.create(spark, tmp("graft_an_g_"),
       Seq((1L, "a")).toDF("id", "v"))
-    val ckpt = Files.createTempDirectory("graft_ang_ck_").toString
-    val outDir = Files.createTempDirectory("graft_ang_out_").toString
+    val ckpt = tmpDir("graft_ang_ck_").toString
+    val outDir = tmpDir("graft_ang_out_").toString
     def drain(): org.apache.spark.sql.streaming.StreamingQuery = {
       val q = spark.readStream.format("graft.sources.v2.GraftSource")
         .option("maxCommitsPerTrigger", "1").load(t.root)
@@ -357,8 +350,8 @@ class AvailableNowSpec extends AnyFunSuite {
     // ones together
     def skewedDrain(fmt: String, target: String,
         append: org.apache.spark.sql.DataFrame => Unit): Unit = {
-      val ckpt = Files.createTempDirectory("graft_anb_ck_").toString
-      val outDir = Files.createTempDirectory("graft_anb_out_").toString
+      val ckpt = tmpDir("graft_anb_ck_").toString
+      val outDir = tmpDir("graft_anb_out_").toString
       def drain(): org.apache.spark.sql.streaming.StreamingQuery = {
         val q = spark.readStream.format(fmt)
           .option("maxBytesPerTrigger", "50000").load(target)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{DeltaInterop, DeltaStats, GraftTable}
@@ -10,9 +9,6 @@ import graft.sources.{DeltaInterop, DeltaStats, GraftTable}
   * 03_delta_demo.ipynb relies on engine stats skipping for keyed DML). */
 class DeltaStatsSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
 
   /** A Delta export of (id, v, d) rows 0..99 range-clustered into 4
     * files with disjoint id ranges — the shape stats skipping needs. */
@@ -183,7 +179,7 @@ class DeltaStatsSpec extends AnyFunSuite {
       // ~1000× too small and a point predicate would WRONGLY prune
       spark.conf.set("spark.sql.parquet.outputTimestampType",
         "TIMESTAMP_MILLIS")
-      val dir = Files.createTempDirectory("graft_ts_millis_").toString
+      val dir = tmpDir("graft_ts_millis_").toString
       (0 until 20).map(i => (i.toLong,
         java.sql.Timestamp.valueOf(f"2024-03-${i / 5 + 1}%02d 09:00:00")))
         .toDF("id", "ts").coalesce(1).write.mode("overwrite").parquet(dir)
@@ -198,7 +194,7 @@ class DeltaStatsSpec extends AnyFunSuite {
         .isEmpty, "corrected millis bounds should still prune")
       // INT96 footers carry no trustworthy unit: no ts bounds, no prune
       spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
-      val dir96 = Files.createTempDirectory("graft_ts_int96_").toString
+      val dir96 = tmpDir("graft_ts_int96_").toString
       (0 until 10).map(i => (i.toLong,
         java.sql.Timestamp.valueOf("2024-03-01 09:00:00")))
         .toDF("id", "ts").coalesce(1).write.mode("overwrite").parquet(dir96)

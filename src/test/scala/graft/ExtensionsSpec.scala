@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.metrics.{Lineage, MetricsLogger}
@@ -95,7 +94,7 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(inputs.exists(_.contains("customer.parquet")), s"inputs=$inputs")
     assert(inputs.size == 2)
 
-    val log = Files.createTempDirectory("lineage").toString + "/log"
+    val log = TestSpark.tmpDir("lineage").toString + "/log"
     val logger = new MetricsLogger(spark, log)
     Lineage.record(logger, df, "gold_customer_summary", "3", "demo", 2024)
     val rec = logger.readAll().collect()(0)

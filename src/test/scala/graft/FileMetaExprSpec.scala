@@ -16,7 +16,7 @@ class FileMetaExprSpec extends AnyFunSuite {
 
   test("FileMeta.path matches _metadata.file_path, incl. encoded paths") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_fme_").toString
+    val root = TestSpark.tmpDir("graft_fme_").toString
     // a dir needing percent-encoding (space) — the rendering trap:
     // Path.toString decodes, makeQualified(..).toUri renders file:///
     val dir = root + "/seg=a b"

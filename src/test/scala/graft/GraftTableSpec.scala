@@ -1,15 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.GraftTable
 
 class GraftTableSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def tmp(): String =
-    Files.createTempDirectory("graft_spec_").toString + "/t"
 
   test("g2: time travel across create/append/overwrite") {
     import spark.implicits._
@@ -518,8 +516,55 @@ class GraftTableSpec extends AnyFunSuite {
     } finally pool.shutdown()
     assert(t.read().count() == 13)
     assert(t.latestVersion() == 12)
-    // a mutation that loses the race must fail, not silently drop commits
-    // (covered by the RetryableActions gate; appends above exercised retries)
+    // a mutation that loses the race must fail, not silently drop
+    // commits: CommitRaceSpec's fail-fast case
+  }
+
+  test("an append reports its data files' bytes as task output metrics") {
+    import spark.implicits._
+    import org.apache.spark.scheduler._
+    val path = tmp()
+    val t = GraftTable.create(spark, path, Seq((0L, "seed")).toDF("id", "v"))
+    val before = t.liveDataDirs.toSet
+    val (group, marker) = ("graft-output-bytes", "graft-output-bytes-drained")
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.atomic.AtomicLong(0L)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    @volatile var markerJob = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => e.stageIds.foreach(stages.add)
+          case Some(`marker`) => markerJob = e.jobId
+          case _ => ()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          written.addAndGet(e.taskMetrics.outputMetrics.bytesWritten)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) drained.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "append")
+      t.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"))
+      // the listener bus is FIFO: once a later job's end arrives, every
+      // task end of the append has been delivered
+      sc.setJobGroup(marker, "drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val added = t.liveDataDirs.filterNot(before)
+    assert(added.size == 1, added)
+    val dataBytes = Files.walk(Paths.get(path, added.head)).iterator()
+      .asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(Files.size).sum
+    assert(dataBytes > 0 && written.get == dataBytes,
+      s"task output bytes ${written.get}, data files $dataBytes")
   }
 
   test("optimistic commit under contention on a rename-atomic (HDFS-like) store") {
@@ -532,7 +577,7 @@ class GraftTableSpec extends AnyFunSuite {
     spark.sparkContext.hadoopConfiguration
       .set("fs.graftest.impl", classOf[GraftTestFs].getName)
     val path = "graftest://" +
-      Files.createTempDirectory("graft_hdfs_cc_").toString + "/t"
+      tmpDir("graft_hdfs_cc_").toString + "/t"
     val t = GraftTable.create(spark, path, Seq((0L, "seed")).toDF("id", "v"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     try {
@@ -737,7 +782,7 @@ class GraftTableSpec extends AnyFunSuite {
   test("hadoop fs: full table lifecycle against an explicit file:// URI root") {
     import spark.implicits._
     val uriRoot = "file://" +
-      Files.createTempDirectory("graft_uri_").toString + "/t"
+      tmpDir("graft_uri_").toString + "/t"
     val t = GraftTable.create(spark, uriRoot, Seq((1, "a"), (2, "b")).toDF("id", "v"))
     t.append(Seq((3, "c")).toDF("id", "v"))
     assert(t.read().count() == 3)
@@ -763,7 +808,7 @@ class GraftTableSpec extends AnyFunSuite {
     spark.sparkContext.hadoopConfiguration
       .set("fs.graftest.impl", classOf[GraftTestFs].getName)
     val root = "graftest://" +
-      Files.createTempDirectory("graft_scheme_").toString + "/t"
+      tmpDir("graft_scheme_").toString + "/t"
     val t = GraftTable.create(spark, root, Seq((1L, 10.0), (2L, 20.0)).toDF("k", "x"))
     t.append(Seq((3L, 30.0)).toDF("k", "x"))
     t.update(col("k") === 2L, Map("x" -> lit(99.0)))
@@ -781,7 +826,7 @@ class GraftTableSpec extends AnyFunSuite {
     spark.sparkContext.hadoopConfiguration
       .set("fs.condput.impl", classOf[CondPutTestFs].getName)
     val root = "condput://" +
-      Files.createTempDirectory("graft_condput_").toString + "/t"
+      tmpDir("graft_condput_").toString + "/t"
     CondPutTestFs.conditionalCreates.set(0)
     val t = GraftTable.create(spark, root, Seq((1L, "a")).toDF("k", "v"))
     t.append(Seq((2L, "b")).toDF("k", "v"))
@@ -802,7 +847,7 @@ class GraftTableSpec extends AnyFunSuite {
     spark.sparkContext.hadoopConfiguration
       .set("fs.condput.impl", classOf[CondPutTestFs].getName)
     val root = "condput://" +
-      Files.createTempDirectory("graft_condput_race_").toString + "/t"
+      tmpDir("graft_condput_race_").toString + "/t"
     val t = GraftTable.create(spark, root, Seq((0L, 0L)).toDF("k", "n"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {

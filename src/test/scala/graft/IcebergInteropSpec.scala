@@ -8,9 +8,6 @@ import graft.sources.{GraftTable, IcebergInterop}
 class IcebergInteropSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
-
   /** Patch a file the export wrote through the Hadoop local FS: drop
     * the sibling .crc so the checksummed reader doesn't reject the
     * hand-edited bytes. */
@@ -1330,8 +1327,8 @@ class IcebergInteropSpec extends AnyFunSuite {
     val t = GraftTable.create(spark, tmp("graft_isg_"),
       Seq((1L, "a")).toDF("id", "v"))
     IcebergInterop.mirrorToIceberg(t)
-    val ckpt = Files.createTempDirectory("graft_isg_ck_").toString
-    val out = Files.createTempDirectory("graft_isg_out_").toString
+    val ckpt = tmpDir("graft_isg_ck_").toString
+    val out = tmpDir("graft_isg_out_").toString
     // skipChangeCommits passes the metadata-only ADD COLUMN snapshot
     // (a non-append operation with no data content)
     def run() = spark.readStream.format("graft.sources.v2.IcebergSource")
@@ -1370,8 +1367,8 @@ class IcebergInteropSpec extends AnyFunSuite {
       .replace("\"format-version\" : 1", "\"format-version\" : 2")
       .getBytes("UTF-8"))
     val seeded = IcebergInterop.icebergRefSnapshot(spark, target, "main")
-    val ckpt = Files.createTempDirectory("graft_icl_ck_").toString
-    val out = Files.createTempDirectory("graft_icl_sink_").toString
+    val ckpt = tmpDir("graft_icl_ck_").toString
+    val out = tmpDir("graft_icl_sink_").toString
     def run() = spark.readStream.format("graft.sources.v2.IcebergSource")
       .option("readChangeFeed", "true").load(target)
       .writeStream.outputMode("append").format("parquet")

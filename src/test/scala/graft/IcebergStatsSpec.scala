@@ -14,9 +14,6 @@ import graft.sources.{GraftTable, IcebergInterop, IcebergStats}
 class IcebergStatsSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
-
   private def patch(p: java.nio.file.Path, bytes: Array[Byte]): Unit = {
     Files.write(p, bytes)
     Files.deleteIfExists(
@@ -227,7 +224,7 @@ class IcebergStatsSpec extends AnyFunSuite {
     import spark.implicits._
     // hive-partitioned parquet → CONVERT: identity date partition whose
     // values live in the manifest partition struct, not the files
-    val root = Files.createTempDirectory("graft_ipp_").toString + "/t"
+    val root = tmpDir("graft_ipp_").toString + "/t"
     (0 until 40).map(i => (i.toLong,
       java.sql.Date.valueOf(f"2024-01-${i % 4 + 1}%02d")))
       .toDF("id", "d")
@@ -273,7 +270,7 @@ class IcebergStatsSpec extends AnyFunSuite {
     try {
       spark.conf.set("spark.sql.parquet.outputTimestampType",
         "TIMESTAMP_MILLIS")
-      val dir = Files.createTempDirectory("graft_ice_millis_").toString
+      val dir = tmpDir("graft_ice_millis_").toString
       (0 until 20).map(i => (i.toLong,
         java.sql.Timestamp.valueOf(f"2024-03-${i / 5 + 1}%02d 09:00:00")))
         .toDF("id", "ts").coalesce(1).write.mode("overwrite").parquet(dir)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.GraftOps
@@ -16,7 +15,7 @@ class IntegrationSpec extends AnyFunSuite {
   import TestSpark._
 
   test("curate -> dedup -> versioned write -> metrics/lineage round trip") {
-    val wh = Files.createTempDirectory("graft_e2e_").toString
+    val wh = tmpDir("graft_e2e_").toString
     val logPath = s"$wh/activity"
     val ctx = new MetricContext(spark, logPath, "silver", "e2e", 2024,
       "corpus curation", jobName = Some("curation"))

@@ -11,9 +11,6 @@ import graft.sources.{DeltaInterop, GraftTable, Merge}
 class MergeClausesSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
-
   private def export(rows: Seq[(Long, String, Double)]): String = {
     import spark.implicits._
     val t = GraftTable.create(spark, tmp("graft_mc_src_"),

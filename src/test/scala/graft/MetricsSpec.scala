@@ -8,7 +8,7 @@ class MetricsSpec extends AnyFunSuite {
   import TestSpark._
 
   test("metric context writes task metrics and a completion record") {
-    val dir = Files.createTempDirectory("metrics").toString + "/activity_log"
+    val dir = tmpDir("metrics").toString + "/activity_log"
     val ctx = new MetricContext(spark, dir, layer = "1", project = "demo",
       datasetYear = 2024, description = "bronze ingest", jobName = Some("job1"))
     ctx.run {
@@ -27,7 +27,7 @@ class MetricsSpec extends AnyFunSuite {
   }
 
   test("failure in run() records failure status") {
-    val dir = Files.createTempDirectory("metrics").toString + "/activity_log"
+    val dir = tmpDir("metrics").toString + "/activity_log"
     val ctx = new MetricContext(spark, dir, "2", "demo", 2024, "silver clean")
     intercept[RuntimeException] { ctx.run { throw new RuntimeException("boom") } }
     val log = ctx.logger.readAll()
@@ -38,7 +38,7 @@ class MetricsSpec extends AnyFunSuite {
   test("activity log evolves schema: old and new records through one scan") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = Files.createTempDirectory("metrics").toString + "/activity_log"
+    val dir = tmpDir("metrics").toString + "/activity_log"
     val logger = new MetricsLogger(spark, dir)
     logger.log(MetricRecord.build("1", "demo", 2024, "old-style", 1.0,
       "rows", "count")): Unit
@@ -57,7 +57,7 @@ class MetricsSpec extends AnyFunSuite {
 
   test("openlineage event: one record carries run/job identity, inputs, output") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("metrics").toString + "/activity_log"
+    val dir = tmpDir("metrics").toString + "/activity_log"
     val logger = new MetricsLogger(spark, dir)
     val q5 = SparkEntry.queries("q5_local_supplier")(spark, sf)
     val runId = Lineage.emitOpenLineage(logger, q5, "q5_local_supplier",
@@ -112,7 +112,7 @@ class MetricsSpec extends AnyFunSuite {
       assert(readEvt.contains(""""job":{"namespace":"testns""""), readEvt)
       assert(readEvt.contains(""""namespace":"file""""), readEvt) // file dataset split
       // 2: a read → write — the event carries BOTH facets
-      val out = java.nio.file.Files.createTempDirectory("graft_ol_").toString + "/t"
+      val out = tmpDir("graft_ol_").toString + "/t"
       spark.read.parquet(s"$sf/orders.parquet").limit(5).write.parquet(out)
       assert(await(received.asScala.exists(j =>
           j.contains("orders.parquet") && j.contains(out))),
@@ -134,7 +134,7 @@ class MetricsSpec extends AnyFunSuite {
       assert(writeEvt.contains(""""field":"o_orderkey""""), writeEvt)
       // 4: a computed column's attribution traces through the
       // projection to the source column it was derived from
-      val out2 = java.nio.file.Files.createTempDirectory("graft_ol_").toString + "/t2"
+      val out2 = tmpDir("graft_ol_").toString + "/t2"
       spark.read.parquet(s"$sf/orders.parquet")
         .selectExpr("o_orderkey", "o_totalprice * 2 AS doubled")
         .limit(5).write.parquet(out2)
@@ -182,7 +182,7 @@ class MetricsSpec extends AnyFunSuite {
     try {
       val schema = spark.read.parquet(s"$sf/customer.parquet").schema
       // FileStreamSource wants a directory — stage the file into one
-      val srcDir = java.nio.file.Files.createTempDirectory("ol_stream_src_")
+      val srcDir = tmpDir("ol_stream_src_")
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$sf/customer.parquet"),
         srcDir.resolve("customer.parquet")): Unit
@@ -223,7 +223,7 @@ class MetricsSpec extends AnyFunSuite {
   }
 
   test("configured sinks receive every logged record; sink failures are contained") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink_").toString
+    val dir = tmpDir("graft_sink_").toString
     TestMetricSink.received.clear()
     spark.conf.set("spark.graft.metrics.sinks",
       classOf[TestMetricSink].getName + "," +
@@ -252,7 +252,7 @@ class MetricsSpec extends AnyFunSuite {
       x.close()
     })
     server.start()
-    val dir = java.nio.file.Files.createTempDirectory("graft_http_sink_").toString
+    val dir = tmpDir("graft_http_sink_").toString
     spark.conf.set("spark.graft.metrics.sinks", classOf[HttpMetricSink].getName)
     spark.conf.set("spark.graft.metrics.http.endpoint",
       s"http://127.0.0.1:${server.getAddress.getPort}/lineage")

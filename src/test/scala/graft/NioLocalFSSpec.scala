@@ -35,7 +35,7 @@ class NioLocalFSSpec extends AnyFunSuite {
     val fs = new NioLocalFileSystem
     fs.initialize(new java.net.URI("file:///"),
       spark.sparkContext.hadoopConfiguration)
-    val dir = Files.createTempDirectory("niofs_spec_")
+    val dir = tmpDir("niofs_spec_")
     val f = dir.resolve("x.txt")
     Files.write(f, "x".getBytes)
     val p = new Path(f.toString)
@@ -63,7 +63,7 @@ class NioLocalFSSpec extends AnyFunSuite {
 
   test("a GraftTable written through the fork-free FS reads back exactly") {
     import spark.implicits._
-    val root = Files.createTempDirectory("niofs_tbl_").toString + "/t"
+    val root = tmpDir("niofs_tbl_").toString + "/t"
     val df = Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v")
     val t = graft.sources.GraftTable.create(spark, root, df)
     t.append(Seq((4, "d")).toDF("id", "v"))

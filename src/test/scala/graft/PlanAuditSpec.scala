@@ -346,10 +346,9 @@ class PlanAuditSpec extends AnyFunSuite {
     // partition group) — a predicate over it must reach the scan as a
     // pushed filter, not evaluate above a full read
     val t = graft.sources.GraftTable.create(spark,
-      java.nio.file.Files.createTempDirectory("graft_pa_dx_").toString + "/t",
+      tmpDir("graft_pa_dx_").toString + "/t",
       (1L to 1000L).map(i => (i, s"v$i", i * 1.5)).toDF("id", "v", "x"))
-    val target = java.nio.file.Files
-      .createTempDirectory("graft_pa_delta_").toString + "/t"
+    val target = tmpDir("graft_pa_delta_").toString + "/t"
     graft.sources.DeltaInterop.exportSnapshot(t, target)
     val df = graft.sources.DeltaInterop.readDelta(spark, target)
       .filter($"id" === 7L).select($"id", $"x")

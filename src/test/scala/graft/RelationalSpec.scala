@@ -6,6 +6,19 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   lazy val spark: SparkSession = Sessions.local("graft-test", 4)
   val sf: String = "/root/testdata/sf0.001"
+
+  // Spec temp dirs are TempRoots-tracked like the library's own (query
+  // harness copies, streaming checkpoints) and all go when the test JVM
+  // exits — not per suite: cleanup() drops every tracked root, and
+  // lazy frames of a later suite may still read the library's.
+  sys.addShutdownHook(TempRoots.cleanup())
+
+  /** A fresh temp dir, removed at JVM exit. */
+  def tmpDir(prefix: String): java.nio.file.Path = TempRoots.create(prefix)
+
+  /** A table root (not yet created) inside a fresh temp dir. */
+  def tmp(prefix: String = "graft_spec_"): String =
+    tmpDir(prefix).toString + "/t"
 }
 
 class RelationalSpec extends AnyFunSuite {

@@ -17,7 +17,7 @@ class RestCatalogSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val warehouse =
-    Files.createTempDirectory("graft_rest_wh_").toString
+    tmpDir("graft_rest_wh_").toString
   private lazy val server = new RestCatalogServer(spark, warehouse)
   private lazy val port = server.start()
 
@@ -244,7 +244,7 @@ class RestCatalogSpec extends AnyFunSuite {
   }
 
   test("oauth: token handshake gates every route when credential is set") {
-    val wh = Files.createTempDirectory("graft_rest_auth_wh_").toString
+    val wh = tmpDir("graft_rest_auth_wh_").toString
     val authed = new RestCatalogServer(spark, wh,
       credential = Some("gid:gsecret"))
     val p = authed.start()
@@ -517,9 +517,9 @@ class RestCatalogSpec extends AnyFunSuite {
     // an Iceberg table OUTSIDE the warehouse: 4 range-disjoint appended
     // files (appends carry in-flight bounds) so pruning can drop files
     val src = graft.sources.GraftTable.create(spark,
-      Files.createTempDirectory("graft_reg_src_").toString + "/t",
+      tmpDir("graft_reg_src_").toString + "/t",
       spark.range(0, 250).select($"id", ($"id" * 2).as("v")).coalesce(1))
-    val ext = Files.createTempDirectory("graft_reg_ice_").toString + "/t"
+    val ext = tmpDir("graft_reg_ice_").toString + "/t"
     graft.sources.IcebergInterop.exportSnapshot(src, ext)
     (1 to 3).foreach(i => graft.sources.IcebergInterop.appendToIceberg(
       spark.range(i * 250L, i * 250L + 250).select($"id", ($"id" * 2).as("v"))
@@ -701,7 +701,7 @@ class RestCatalogSpec extends AnyFunSuite {
   test("plan route serves identity partition values on the data files") {
     import spark.implicits._
     val src = graft.sources.GraftTable.create(spark,
-      Files.createTempDirectory("graft_ppv_src_").toString + "/t",
+      tmpDir("graft_ppv_src_").toString + "/t",
       Seq((1L, "A"), (2L, "A"), (3L, "B")).toDF("id", "seg"),
       partitionBy = Seq("seg"))
     // the mirror publishes a REAL identity partition spec
@@ -797,7 +797,7 @@ class RestCatalogSpec extends AnyFunSuite {
   }
 
   test("credential vending: header-gated storage credentials in loadTable") {
-    val wh = Files.createTempDirectory("graft_rest_vend_wh_").toString
+    val wh = tmpDir("graft_rest_vend_wh_").toString
     val vendServer = new RestCatalogServer(spark, wh,
       credentialVendor = Some(loc => Map(
         "s3.access-key-id" -> "AKTEST",

@@ -33,7 +33,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, sf)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb_").toString
+    val dir = tmpDir("graft_mb_").toString
     // 4 time-ordered slices, one file each (file order = arrival order)
     val (mn, mx) = ev.agg(min($"ts"), max($"ts")).as[(java.sql.Timestamp,
       java.sql.Timestamp)].collect()(0)

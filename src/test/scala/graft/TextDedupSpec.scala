@@ -210,7 +210,7 @@ class TextDedupSpec extends AnyFunSuite {
       (1L, (1 to 20).map("t" + _).mkString(" "))).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")))
-    val tmp = java.nio.file.Files.createTempDirectory("t5spec_").toString
+    val tmp = tmpDir("t5spec_").toString
     df.write.parquet(s"$tmp/documents.parquet")
     val got = SparkEntry.queries("t5_repetition")(spark, tmp).collect()
     assert(got(0).getAs[Double]("dup_bigram_frac") == 0.6)
@@ -649,7 +649,7 @@ class TextDedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")))
-    val tmp = java.nio.file.Files.createTempDirectory("t14spec_").toString
+    val tmp = tmpDir("t14spec_").toString
     docs.write.parquet(s"$tmp/documents.parquet")
     val got = SparkEntry.queries("t14_gopher_quality")(spark, tmp)
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap

@@ -13,9 +13,6 @@ import graft.sources.{GraftTable, IcebergInterop, Puffin}
 class ThetaStatsSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
-
   test("theta sketch: serialization round-trips; estimates are sane") {
     // exact mode below the nominal
     val small = (0 until 100).map(i => ThetaSketch.hashLong(i.toLong))

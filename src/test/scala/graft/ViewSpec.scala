@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +16,7 @@ class ViewSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val warehouse =
-    Files.createTempDirectory("graft_view_wh_").toString
+    tmpDir("graft_view_wh_").toString
   private lazy val server = new RestCatalogServer(spark, warehouse)
   private lazy val port = server.start()
 
@@ -48,7 +47,7 @@ class ViewSpec extends AnyFunSuite {
   }
 
   test("SQL catalog: CREATE VIEW / SELECT / ALTER / SHOW / DROP") {
-    val wh = Files.createTempDirectory("graft_view_sql_").toString
+    val wh = tmpDir("graft_view_sql_").toString
     val s = spark.newSession()
     s.conf.set("spark.sql.catalog.vc", "graft.sources.v2.GraftCatalog")
     s.conf.set("spark.sql.catalog.vc.warehouse", wh)
