@@ -8,6 +8,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+# graft.Sessions.engineConfs: a generated-class cache that holds graft's
+# working set (Spark's default of 100 makes short lakehouse/curation calls
+# recompile the same classes every round), one class per identical stage,
+# one executor class loader for every session (cache() clones the
+# session), and a smaller status store for the UI-less session. Static:
+# read once per JVM or at session creation, so they only take effect
+# when this builder creates the session (or via --conf /
+# spark-defaults.conf). Each retained class costs ~30 KB of heap per JVM,
+# plus metaspace.
+ENGINE_CONFS = (
+    ("spark.sql.codegen.cache.maxEntries", "2560"),
+    ("spark.sql.codegen.useIdInClassName", "false"),
+    ("spark.sql.artifact.isolation.enabled", "false"),
+    ("spark.sql.ui.retainedExecutions", "50"),
+    ("spark.ui.retainedJobs", "100"),
+    ("spark.ui.retainedStages", "100"),
+)
+
+
 def find_jar(repo_root=None):
     """Locate the built graft jar: $GRAFT_JAR if set, else the newest
     jar under <repo_root>/target/scala-2.13 (run `sbt package` first)."""
@@ -62,6 +81,8 @@ def connect(app_name="graft", master="local[*]", jar=None,
          .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
                  "graft.sources.NioLocalFs")
          .config("spark.sql.session.timeZone", "UTC"))
+    for k, v in ENGINE_CONFS:
+        b = b.config(k, v)
     for k, v in (conf or {}).items():
         b = b.config(k, v)
     for name, uri in (rest_catalogs or {}).items():

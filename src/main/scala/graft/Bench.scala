@@ -1,9 +1,36 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.metrics.Codegen
 object Bench {
 
+  /** Bench's session: [[Sessions.local]] with these overrides.
+    *  - AQE off at bench scale: runtime re-planning costs ~0.5 s/query
+    *    in stage materialization, which dominates sub-second queries at
+    *    sf0.1. On a real cluster (the 100 TB target) AQE is on.
+    *  - State-store instances (not data volume) dominate streaming wall
+    *    time at bench SFs — cap them; production uses the session
+    *    shuffle-partition count (see Streams.drain).
+    *  - HDFS-backed state store at bench SFs: with KB-scale state the
+    *    per-batch store cost is pure instance overhead, and RocksDB's
+    *    open + WAL/SST fsyncs per partition lose to the snapshot
+    *    provider (measured r17: h-family 32-35 s RocksDB vs 23-24 s
+    *    HDFS, reproduced A/B/A). Production keeps RocksDB (incremental
+    *    checkpoints win once state outgrows the snapshot write) — see
+    *    Streams.drain, which defaults RocksDB unless this is set. */
+  val sessionOverrides: Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.graft.streaming.statePartitions" -> "8",
+    "spark.graft.streaming.stateProvider" -> "hdfs")
+
+  /** A Bench-shaped session on `SPARK_GRAFT_CPUS` cores (default 4),
+    * with `extra` confs last — also the session of the `graft.tools`
+    * mains, so their findings transfer to Bench. */
+  def session(appName: String, extra: Seq[(String, String)] = Nil): SparkSession =
+    Sessions.local(appName, Sessions.envCpus, sessionOverrides ++ extra)
+
   private[graft] final case class QResult(name: String, sec: Double,
-    err: Option[String], contended: Boolean = false)
+    err: Option[String], codegen: Codegen.Compiles,
+    contended: Boolean = false)
 
   /** Timing loop, factored out so failure handling is unit-testable: a
     * query that throws is recorded as FAILED (exception class + first
@@ -14,13 +41,14 @@ object Bench {
     measureWithCanary(qs, () => 0.0, Int.MaxValue)._1
 
   private def runOne(name: String, run: () => Unit): QResult = {
+    val c0 = Codegen.compiles()
     val t0 = System.nanoTime()
     val err = try { run(); None } catch {
       case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse("").takeWhile(_ != '\n').take(120)
         Some(s"${e.getClass.getSimpleName}: $msg")
     }
-    QResult(name, (System.nanoTime() - t0) / 1e9, err)
+    QResult(name, (System.nanoTime() - t0) / 1e9, err, Codegen.compiles() - c0)
   }
 
   /** [[measure]] with a CANARY bracketing every `every`-query WINDOW
@@ -126,7 +154,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     def loadAvg: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     // Quiet-band admission: a bench captured on a contended host is
@@ -149,35 +176,7 @@ object Bench {
       Thread.sleep(15000)
     }
     val loadStart = loadAvg
-    val spark = Sessions.localFsConfs.foldLeft(SparkSession.builder()){
-        case (b, (k, v)) => b.config(k, v) }
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE off at bench scale: runtime re-planning costs ~0.5s/query in
-      // stage materialization, which dominates sub-second queries at
-      // sf0.1. On a real cluster (the 100 TB target) AQE is on — see
-      // Sessions.local.
-      .config("spark.sql.adaptive.enabled", "false")
-      // state-store instances (not data volume) dominate streaming
-      // wall-time at bench SFs — cap them; production uses the session
-      // shuffle-partition count (see Streams.drain)
-      .config("spark.graft.streaming.statePartitions", "8")
-      // HDFS-backed state store at bench SFs: with KB-scale state the
-      // per-batch store cost is pure instance overhead, and RocksDB's
-      // open + WAL/SST fsyncs per partition lose to the snapshot
-      // provider (measured r17: h-family 32-35 s RocksDB vs 23-24 s
-      // HDFS, reproduced A/B/A). Production keeps RocksDB (incremental
-      // checkpoints win once state outgrows the snapshot write) — see
-      // Streams.drain, which defaults RocksDB unless this is set.
-      .config("spark.graft.streaming.stateProvider", "hdfs")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // bounded-buffer typed aggregates: see Sessions.local
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.ConfSources.disableTracking(spark.sparkContext.hadoopConfiguration)
+    val spark = session("graft-bench")
     // temp-dir hygiene: reap graft_ dirs leaked by crashed earlier runs,
     // and (below, untimed, after all queries drain) this run's own roots
     TempRoots.sweepStale()
@@ -196,7 +195,7 @@ object Bench {
     // min = the pinned base; samples interleave every 10 queries and
     // once at the end, catching a co-tenant that lands MID-RUN (the
     // start-load gate above only sees contention that predates it)
-    val nCpus = cpus.toInt
+    val nCpus = Sessions.envCpus
     val canaryBase = (1 to 3).map(_ => runCanary(spark, nCpus)).min
     // each sampling point also measures HOST busy over an idle window
     // (co-tenant detection the CPU canary can't give: IO hogs, and
@@ -221,6 +220,7 @@ object Bench {
       }
       quiet
     }
+    val codegen0 = Codegen.compiles()
     val (results, canarySamples) = measureWithCanary(
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filterNot { case (name, _) =>
@@ -230,15 +230,27 @@ object Bench {
         },
       canaryFn, every = 10,
       isContended = s => !inBand(s), awaitQuiet = awaitQuiet)
+    // Janino compiles of generated classes: per query (the last run of
+    // a re-measured window), over the timed phase (canary included),
+    // and since JVM start — the distinct-class working set as long as
+    // that stays under the cache cap (a cache that never evicted
+    // compiles each class once)
+    val codegenRun = Codegen.compiles() - codegen0
+    val codegenJvm = Codegen.compiles()
+    val codegenCap = spark.conf.get("spark.sql.codegen.cache.maxEntries")
     TempRoots.cleanup() // every result is materialized (count() above)
-    val ok = results.collect { case QResult(n, s, None, _) => n -> s }
-    val failed = results.collect { case QResult(n, _, Some(e), _) => n -> e }
+    val ok = results.collect { case QResult(n, s, None, _, _) => n -> s }
+    val failed = results.collect { case QResult(n, _, Some(e), _, _) => n -> e }
     // total counts ONLY successful queries — a failure must never read
     // as a fast run
     val total = ok.map(_._2).sum
     def r3(v: Double): String = f"$v%.3f"
     def jmap(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+    def jcount(kvs: Seq[(String, Long)]): String =
+      kvs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val codegenJson =
+      s""""codegen_compiles_total":${codegenRun.count},"codegen_compile_ms_total":${r3(codegenRun.ms)},"codegen_classes":${codegenJvm.count},"codegen_cache_max_entries":$codegenCap"""
     def jerr(kvs: Seq[(String, String)]): String =
       kvs.map { case (k, v) => s"\"" + k + "\":" + jstr(v) }.mkString("{", ",", "}")
     // Ambient-load label: benches on this host have shown 4× per-query
@@ -251,7 +263,7 @@ object Bench {
     // dirty (recovery timeout / budget exhausted) carry the flag — the
     // global label trips only when flagged timings actually remain
     val contendedQueries = results.collect {
-      case QResult(n, _, None, true) => n }
+      case QResult(n, _, None, _, true) => n }
     val midRunContended = contendedQueries.nonEmpty
     // the canary detects contention ARRIVING mid-run; contention
     // present throughout inflates the calibrated base itself and slips
@@ -283,7 +295,7 @@ object Bench {
     val contendedJson =
       contendedQueries.map(jstr).mkString("[", ",", "]")
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(ok)},"n_failed":${failed.size},"errors":${jerr(failed)},"sf":"$sfDir","load_avg_start":$loadStart,"load_avg_end":$loadAvg,"load_label":"$loadLabel","contended_queries":$contendedJson,"canary_base":${r3(canaryBase)},"canary_max":${r3(canarySamples.max)},"canary_samples":[${canarySamples.map(r3).mkString(",")}],"host_busy_max":${r3(if (idleBusy.exists(!_.isNaN)) idleBusy.filter(!_.isNaN).max else -1.0)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(ok)},"n_failed":${failed.size},"errors":${jerr(failed)},"sf":"$sfDir","load_avg_start":$loadStart,"load_avg_end":$loadAvg,"load_label":"$loadLabel","contended_queries":$contendedJson,"canary_base":${r3(canaryBase)},"canary_max":${r3(canarySamples.max)},"canary_samples":[${canarySamples.map(r3).mkString(",")}],"host_busy_max":${r3(if (idleBusy.exists(!_.isNaN)) idleBusy.filter(!_.isNaN).max else -1.0)},"codegen_compiles":${jcount(results.map(r => r.name -> r.codegen.count))},"codegen_compile_ms":${jmap(results.map(r => r.name -> r.codegen.ms))},$codegenJson}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
       (detail + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
@@ -308,7 +320,7 @@ object Bench {
     val analyticTotal = ok.collect {
       case (k, s) if k.takeWhile(!_.isDigit) != "g" => s }.sum
     val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","analytic_total":${r3(analyticTotal)},"queries":${jmap(ok.filter(r => headline(r._1)))},"groups":${jmap(groups)},"n_queries":${results.size},"n_failed":${failed.size},"errors":${jerr(failed)},"sf":"$sfDir","load_avg_start":$loadStart,"load_avg_end":$loadAvg,"load_label":"$loadLabel","contended_queries":$contendedJson,"canary_base":${r3(canaryBase)},"canary_max":${r3(canarySamples.max)},"host_busy_max":${r3(if (idleBusy.exists(!_.isNaN)) idleBusy.filter(!_.isNaN).max else -1.0)},"detail":"$detailPath"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","analytic_total":${r3(analyticTotal)},"queries":${jmap(ok.filter(r => headline(r._1)))},"groups":${jmap(groups)},"n_queries":${results.size},"n_failed":${failed.size},"errors":${jerr(failed)},"sf":"$sfDir","load_avg_start":$loadStart,"load_avg_end":$loadAvg,"load_label":"$loadLabel","contended_queries":$contendedJson,"canary_base":${r3(canaryBase)},"canary_max":${r3(canarySamples.max)},"host_busy_max":${r3(if (idleBusy.exists(!_.isNaN)) idleBusy.filter(!_.isNaN).max else -1.0)},$codegenJson,"detail":"$detailPath"}"""
     // 1-minute load averages around the run: flags benches taken on a
     // contended shared host (observed >4× per-query swings under load —
     // the end value includes this bench's own threads, so the start

@@ -26,16 +26,62 @@ object Sessions {
   // spec-conformant interop files with usable footer statistics —
   // without touching the session default.
 
-  def local(appName: String = "graft", cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = localFsConfs.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(appName)){ case (b, (k, v)) => b.config(k, v) }
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+  /** Engine settings every graft session takes. All are static: read
+    * once per JVM (the generated-class cache, when the first class is
+    * generated) or when a session is created, so they must be set at
+    * launch — here, `--conf` or `spark-defaults.conf` — and every JVM,
+    * executors included, keeps its own cache.
+    *
+    *  - Generated-class cache: graft's lakehouse ops and curation
+    *    stages are short calls that each plan many small queries; a
+    *    perfbench lakehouse run generates ~210 distinct classes and a
+    *    curation run ~250, against Spark's default cap of 100 — so with
+    *    that cap one lakehouse round compiled ~220 classes and one
+    *    curation pass ~260, nearly all of them rebuilt after eviction
+    *    (and JIT-compiled by HotSpot again).
+    *    The cap is sized from the largest working set measured:
+    *    `graft.Bench`'s 156 queries at sf0.1 compile 1241 distinct classes
+    *    (its `codegen_classes`), and 2560 is 2x that. Each entry pins
+    *    its source and bytecode (~30 KB of heap, so ~75 MB when full)
+    *    plus the loaded class in metaspace, so the cap stays bounded.
+    *  - `useIdInClassName=false`: identical stages planned under
+    *    different stage ids share one cache entry instead of one each.
+    *  - Artifact isolation off: with it on, every session — including
+    *    the clone Spark makes for each `cache()` — runs its tasks under
+    *    its own executor class loader, and the class loader is part of
+    *    the cache key, so a cached relation's classes compile again for
+    *    every clone. graft adds no per-session artifacts (JARs, files).
+    *  - Status-store retention: `spark.ui.enabled=false` hides the UI,
+    *    but the status store still keeps 1000 SQL plan graphs, jobs and
+    *    stages that nothing reads. Keeping fewer pays for the classes
+    *    the larger cache retains: perfbench's retained heap did not
+    *    rise on either workload. */
+  val engineConfs: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> "2560",
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.ui.retainedExecutions" -> "50",
+    "spark.ui.retainedJobs" -> "100",
+    "spark.ui.retainedStages" -> "100")
+
+  /** `SPARK_GRAFT_CPUS`, else 4: the local core count of the
+    * driver-contract mains and the diagnostic tools. */
+  def envCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4)
+
+  /** A local graft session on `cpus` cores. `overrides` replace (or
+    * add to) the settings below — e.g. [[Bench]]'s AQE-off and
+    * streaming-state confs — and are applied last. */
+  def local(appName: String = "graft",
+            cpus: Int = Runtime.getRuntime.availableProcessors(),
+            overrides: Seq[(String, String)] = Nil): SparkSession = {
+    val confs = localFsConfs ++ engineConfs ++ Seq(
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.extensions" -> "graft.GraftExtensions",
       // ObjectHashAggregate (the operator behind every
       // TypedImperativeAggregate: TopKAgg, MinHashAgg, ThetaSketchAgg)
       // falls back to SORT-based aggregation past this many in-memory
@@ -56,9 +102,12 @@ object Sessions {
       // a corpus of multi-MB documents should lower this via
       // SPARK_GRAFT_AGG_FALLBACK (or trim documents first, which every
       // published pipeline does before shingling).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_AGG_FALLBACK", "131072"))
-      .config("spark.ui.enabled", "false")
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
+        sys.env.getOrElse("SPARK_GRAFT_AGG_FALLBACK", "131072"),
+      "spark.ui.enabled" -> "false") ++ overrides
+    val spark = confs.foldLeft(
+        SparkSession.builder().master(s"local[$cpus]").appName(appName)) {
+        case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.sources.ConfSources.disableTracking(spark.sparkContext.hadoopConfiguration)

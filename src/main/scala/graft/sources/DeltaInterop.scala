@@ -3042,7 +3042,7 @@ object DeltaInterop {
       val dup = source
         .filter(keys.map(col(_).isNotNull).reduce(_ && _))
         .groupBy(keys.map(col): _*).count()
-        .filter(col("count") > 1).limit(1).count()
+        .filter(col("count") > 1).count()
       require(dup == 0, s"mergeDelta at $path: a target row matches " +
         "multiple source rows — MERGE needs unique source keys")
     }

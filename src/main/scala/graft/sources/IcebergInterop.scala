@@ -3613,7 +3613,7 @@ object IcebergInterop {
         try {
           // refuse the SQL-MERGE ambiguity: one target row, many sources
           val dup = matchedDf.groupBy(col("__fp"), col("__pos")).count()
-            .filter(col("count") > 1).limit(1).count()
+            .filter(col("count") > 1).count()
           require(dup == 0, s"mergeIceberg at $path: a target row matches " +
             "multiple source rows — MERGE needs unique source keys")
           val inserts = src.join(

@@ -75,11 +75,13 @@ private[graft] final class TableIO(rootStr: String, conf: Configuration) {
 
   def delete(p: HPath): Unit = { fs.delete(p, true); () }
 
-  def readString(p: HPath): String = {
+  def readBytes(p: HPath): Array[Byte] = {
     val in = fs.open(p)
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-    finally in.close()
+    try in.readAllBytes() finally in.close()
   }
+
+  def readString(p: HPath): String =
+    new String(readBytes(p), StandardCharsets.UTF_8)
 
   def write(p: HPath, bytes: Array[Byte]): Unit = {
     val out = fs.create(p, true)
@@ -150,12 +152,25 @@ private[graft] final class TableIO(rootStr: String, conf: Configuration) {
             }
             // object-store semantics (nothing materializes before the
             // closing PUT): a failed conditional PUT reports as an I/O
-            // failure on close, and a visible file IS a peer's complete
-            // object — re-probe so contention surfaces as the retry
-            // signal and real I/O errors stay errors
-            if (fs.exists(p))
-              throw new java.nio.file.FileAlreadyExistsException(p.toString)
-            throw e
+            // failure on close, and a visible object is complete — a
+            // peer's, or OUR put whose acknowledgement was lost. Tell
+            // them apart by content: ours means the commit landed, a
+            // peer's is the retry signal, an empty slot leaves the I/O
+            // error an error, and an unreadable slot leaves it open.
+            val landed =
+              try Some(readBytes(p))
+              catch {
+                case _: java.io.FileNotFoundException => None
+                case re: java.io.IOException =>
+                  e.addSuppressed(re)
+                  throw new OptimisticCommit.MayHaveLanded(p, e)
+              }
+            landed match {
+              case Some(b) if java.util.Arrays.equals(b, bytes) => ()
+              case Some(_) =>
+                throw new java.nio.file.FileAlreadyExistsException(p.toString)
+              case None => throw e
+            }
         }
       } catch {
         case _: org.apache.hadoop.fs.FileAlreadyExistsException =>

@@ -18,22 +18,7 @@ object ExplainDump {
       if (args.length > 3) args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val spark = graft.Sessions.localFsConfs.foldLeft(
-      org.apache.spark.sql.SparkSession.builder()){ case (b, (k, v)) => b.config(k, v) }
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.graft.streaming.statePartitions", "8")
-      .config("spark.graft.streaming.stateProvider", "hdfs") // mirror Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "131072")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.ConfSources.disableTracking(spark.sparkContext.hadoopConfiguration)
+    val spark = graft.Bench.session("graft-explain")
     graft.TempRoots.sweepStale()
     names.foreach { name =>
       try {

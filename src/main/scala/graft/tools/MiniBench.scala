@@ -13,26 +13,12 @@ object MiniBench {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val prefixes = (if (args.length > 1) args(1) else "q")
       .split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Sessions.envCpus
     val extra = sys.env.getOrElse("GRAFT_EXTRA_CONF", "")
       .split(";").map(_.trim).filter(_.contains("="))
       .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
     println(s"MINIBENCH cpus=$cpus extra=${extra.mkString(",")}")
-    var b = graft.Sessions.localFsConfs.foldLeft(
-      org.apache.spark.sql.SparkSession.builder()){ case (x, (k, v)) => x.config(k, v) }
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.graft.streaming.statePartitions", "8")
-      .config("spark.graft.streaming.stateProvider", "hdfs") // mirror Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.ui.enabled", "false")
-    extra.foreach { case (k, v) => b = b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.ConfSources.disableTracking(spark.sparkContext.hadoopConfiguration)
+    val spark = graft.Bench.session("graft-minibench", extra)
     graft.TempRoots.sweepStale()
     spark.read.parquet(s"$dir/lineitem.parquet").count()
     spark.read.parquet(s"$dir/orders.parquet").count()

@@ -18,22 +18,7 @@ object ProfileJobs {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = if (args.length > 1) args(1) else "g41_delta_dv_update_merge"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val spark = graft.Sessions.localFsConfs.foldLeft(
-      org.apache.spark.sql.SparkSession.builder()){ case (b, (k, v)) => b.config(k, v) }
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.graft.streaming.statePartitions", "8")
-      .config("spark.graft.streaming.stateProvider", "hdfs") // mirror Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "131072")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.ConfSources.disableTracking(spark.sparkContext.hadoopConfiguration)
+    val spark = graft.Bench.session("graft-profile-jobs")
     graft.TempRoots.sweepStale()
     // warmup (session/codegen/parquet-footer init)
     spark.read.parquet(s"$dir/lineitem.parquet").count()

@@ -18,7 +18,10 @@ import graft.sources.{DeltaInterop, GraftTable, IcebergInterop, OptimisticCommit
   *  (c) a GraftTable mutation fails fast on its first loss and leaves
   *      the table at the peer's version;
   *  (d) a put that lands but reports an I/O error keeps the files the
-  *      committed version references. */
+  *      committed version references;
+  *  (e) on an object store, a conditional put that lands but whose
+  *      close fails is recognised as this writer's commit, not a
+  *      peer's, and commits exactly once. */
 class CommitRaceSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -221,6 +224,27 @@ class CommitRaceSpec extends AnyFunSuite {
     }
   }
 
+  test("GraftTable append on an object store: a landed put whose close fails commits once") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.lostackput.impl", classOf[LostAckPutTestFs].getName)
+    val path = "lostackput://" + tmp("graft_race_ackput_")
+    Graft.make(path)
+    val slot = "00000001.json"
+    val append = (p: String) =>
+      GraftTable.load(spark, p).append(Seq((5L, "e")).toDF("id", "v"))
+    try racing(path, _ => LostAckTestFs.loseAckOf(slot), times = 1)(append(path))
+    finally LostAckTestFs.loseAckOf(null)
+    val log = Paths.get(LostAckTestFs.local(path), "_graft_log")
+    assert(Files.exists(log.resolve(slot)))
+    assert(!Files.exists(log.resolve("00000002.json")),
+      "the landed commit was taken for a lost race and committed again")
+    assert(GraftTable.load(spark, path).latestVersion() == 1)
+    val serial = tmp("graft_race_")
+    Graft.make(serial)
+    append(serial)
+    assert(rows(Graft.read(path)) == rows(Graft.read(serial)))
+  }
+
   test("GraftTable mutation: a lost race fails fast at the peer's version") {
     val path = tmp("graft_race_")
     val t = GraftTable.create(spark, path, base)
@@ -253,11 +277,45 @@ class LostAckTestFs extends GraftTestFs {
 object LostAckTestFs {
   @volatile private var name: String = null
   def loseAckOf(fileName: String): Unit = name = fileName
-  private def consume(fileName: String): Boolean = synchronized {
+  private[graft] def consume(fileName: String): Boolean = synchronized {
     val hit = fileName == name
     if (hit) name = null
     hit
   }
-  /** The local path behind a `lostack://` one (others unchanged). */
-  def local(path: String): String = path.stripPrefix("lostack://")
+  /** The local path behind a `lostack://` or `lostackput://` one
+    * (others unchanged). */
+  def local(path: String): String =
+    path.stripPrefix("lostackput://").stripPrefix("lostack://")
+}
+
+/** The object-store-shaped [[CondPutTestFs]] under the `lostackput`
+  * scheme (conditional create, nothing visible before the closing
+  * PUT), where closing the next conditional create of a file named
+  * [[LostAckTestFs.loseAckOf]] stores the object and then fails with
+  * an IOException — a PUT the store took whose response never
+  * arrived. */
+class LostAckPutTestFs extends CondPutTestFs {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path => HPath}
+  override def getScheme: String = "lostackput"
+  override def getUri: java.net.URI = java.net.URI.create("lostackput:///")
+
+  private def losingAck(f: HPath, out: FSDataOutputStream): FSDataOutputStream =
+    if (!LostAckTestFs.consume(f.getName)) out
+    else new FSDataOutputStream(new java.io.OutputStream {
+      override def write(b: Int): Unit = out.write(b)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit =
+        out.write(b, off, len)
+      override def close(): Unit = {
+        out.close()
+        throw new java.io.IOException(s"connection reset after the PUT of $f")
+      }
+    }, null)
+
+  override def createNonRecursive(f: HPath,
+      permission: org.apache.hadoop.fs.permission.FsPermission,
+      flags: java.util.EnumSet[org.apache.hadoop.fs.CreateFlag],
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): FSDataOutputStream =
+    losingAck(f, super.createNonRecursive(f, permission, flags, bufferSize,
+      replication, blockSize, progress))
 }

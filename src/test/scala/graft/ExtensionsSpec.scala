@@ -9,9 +9,13 @@ class ExtensionsSpec extends AnyFunSuite {
   // a dedicated session so withExtensions is actually exercised —
   // create() (not getOrCreate) because another suite's extension-less
   // session may already be the default, and getOrCreate would silently
-  // return it, dropping the extensions (order-dependent flake)
+  // return it, dropping the extensions (order-dependent flake). It
+  // takes Sessions' engine settings: when this suite runs first, its
+  // session fixes the JVM's static confs (the generated-class cache
+  // size among them) for every later suite.
   private lazy val extSpark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Sessions.engineConfs.foldLeft(SparkSession.builder()) {
+        case (b, (k, v)) => b.config(k, v) }
       .master("local[2]")
       .appName("graft-ext-test")
       .config("spark.sql.shuffle.partitions", "2")
