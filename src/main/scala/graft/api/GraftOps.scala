@@ -128,11 +128,12 @@ object GraftOps {
                         checkDisjoint: Boolean = true): DataFrame = {
     // enforced by default, not just documented: a shared id (a
     // re-crawled doc) would merge both texts' shingles into one
-    // multiset and emit silently wrong Jaccard scores. limit(1)
-    // early-outs the probe on the first collision.
+    // multiset and emit silently wrong Jaccard scores. isEmpty
+    // early-outs the probe on the first collision (a top-level limit,
+    // never a generated one, so a repeated call compiles nothing new).
     if (checkDisjoint)
       require(base.select(col(idCol))
-          .join(delta.select(col(idCol)), idCol).limit(1).count() == 0L,
+          .join(delta.select(col(idCol)), idCol).isEmpty,
         s"base and delta must have disjoint $idCol values " +
           "(pass checkDisjoint = false to skip this O(|base|) probe)")
     val all = base.select(col(idCol), col(textCol))
@@ -278,8 +279,7 @@ object GraftOps {
     val basePrefixes = load("prefixes")
     if (checkDisjoint)
       require(baseSh.select(col("doc_id")).distinct()
-          .join(delta.select(col(idCol).as("doc_id")), "doc_id")
-          .limit(1).count() == 0L,
+          .join(delta.select(col(idCol).as("doc_id")), "doc_id").isEmpty,
         s"base index and delta must have disjoint $idCol values " +
           "(pass checkDisjoint = false to skip this probe)")
     val deltaSh = shingleRel(delta, idCol, textCol)

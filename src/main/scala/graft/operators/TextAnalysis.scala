@@ -599,13 +599,13 @@ object TextAnalysis {
       // fall, except for risen pairs — which this bound covers.)
       if (batch.size > 1) {
         val (lB, rB, cntB) = batch.last
-        val unsafe = adds
+        val unsafe = !adds
           .join(paircnt.select($"l", $"r", $"cnt".as("old")), Seq("l", "r"), "left")
           .select($"l", $"r", (coalesce($"old", lit(0L)) + $"cnt").as("bound"))
           .filter($"bound" > cntB ||
             ($"bound" === cntB &&
               ($"l" < lB || ($"l" === lB && $"r" <= rB))))
-          .limit(1).count() > 0
+          .isEmpty
         if (unsafe) {
           Seq(touched, merged, adds).foreach(_.unpersist(false))
           return false

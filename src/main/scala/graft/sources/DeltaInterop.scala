@@ -1,8 +1,8 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -436,26 +436,19 @@ object DeltaInterop {
     val cpsOnDisk = completedCheckpoints(fs, logDir)
     val bootCp: Int = cpsOnDisk.keySet.filter(_ <= mirrored)
       .maxOption.map(_.toInt).getOrElse(-1)
-    if (bootCp >= 0) {
-      val cp = t.spark.read.parquet(
-        cpsOnDisk(bootCp.toLong).map(_.toString): _*)
-      val fields = cp.schema.fieldNames.toSet
-      if (fields.contains("metaData"))
-        cp.where(col("metaData.schemaString").isNotNull)
-          .select(col("metaData.schemaString"),
-            col("metaData.partitionColumns")).collect()
-          .foreach { r =>
-            prevSchema = r.getString(0)
-            prevPartCols = if (r.isNullAt(1)) Nil else r.getSeq[String](1)
-          }
-      if (fields.contains("add"))
-        cp.where(col("add.path").isNotNull).select(col("add.path"))
-          .collect().foreach { r =>
-            val p = decodePath(r.getString(0))
-            val top = p.takeWhile(_ != '/')
-            activeByDir(top) = p :: activeByDir.getOrElse(top, Nil)
-          }
-    }
+    if (bootCp >= 0)
+      walkCheckpoint(t.spark, cpsOnDisk(bootCp.toLong)) { r =>
+        field[Row](r, "metaData").foreach(m =>
+          field[String](m, "schemaString").foreach { sj =>
+            prevSchema = sj
+            prevPartCols = strings(m, "partitionColumns")
+          })
+        field[Row](r, "add").flatMap(field[String](_, "path")).foreach { raw =>
+          val p = decodePath(raw)
+          val top = p.takeWhile(_ != '/')
+          activeByDir(top) = p :: activeByDir.getOrElse(top, Nil)
+        }
+      }
     ((bootCp + 1) to mirrored).foreach { v =>
       val text =
         try readString(fs, new HPath(logDir, f"$v%020d.json"))
@@ -592,7 +585,6 @@ object DeltaInterop {
       c: GraftTable.Commit,
       activeByDir: scala.collection.mutable.Map[String, List[String]],
       schemaJsonStr: String, identityCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val spark = t.spark
     val files = activeByDir.values.flatten.toSeq.sorted
@@ -701,29 +693,29 @@ object DeltaInterop {
     * is present (a partial set must never serve as a base state), and
     * v2 UUID-named checkpoints (complete by construction). */
   private def completedCheckpoints(fs: org.apache.hadoop.fs.FileSystem,
-      logDir: HPath): Map[Long, Seq[HPath]] = {
-    val names = fs.listStatus(logDir).toSeq.map(_.getPath)
-    val singles = names.flatMap { p =>
-      p.getName match {
+      logDir: HPath): Map[Long, Seq[FileStatus]] = {
+    val listed = fs.listStatus(logDir).toSeq
+    val singles = listed.flatMap { p =>
+      p.getPath.getName match {
         case SinglePartCp(v) => Some(v.toLong -> Seq(p))
         case _ => None
       }
     }
-    val v2s = names.flatMap { p =>
-      p.getName match {
+    val v2s = listed.flatMap { p =>
+      p.getPath.getName match {
         case MultiPartCp(_, _, _) => None
         case V2NamedCp(v, _) => Some(v.toLong -> Seq(p))
         case _ => None
       }
     }
-    val multis = names.flatMap { p =>
-      p.getName match {
+    val multis = listed.flatMap { p =>
+      p.getPath.getName match {
         case MultiPartCp(v, _, n) => Some(((v.toLong, n.toInt), p))
         case _ => None
       }
     }.groupBy(_._1).collect {
       case ((v, n), parts) if parts.size == n =>
-        v -> parts.map(_._2).sortBy(_.getName)
+        v -> parts.map(_._2).sortBy(_.getPath.getName)
     }
     (v2s ++ singles ++ multis).toMap
   }
@@ -761,7 +753,7 @@ object DeltaInterop {
     }
     cpFiles.filter { case (v, _) => v < cp && v <= threshold }
       .foreach { case (_, parts) =>
-        parts.foreach(p => if (fs.delete(p, false)) deleted += 1)
+        parts.foreach(p => if (fs.delete(p.getPath, false)) deleted += 1)
       }
     deleted
   }
@@ -1007,16 +999,14 @@ object DeltaInterop {
       /** the row-tracking domainMetadata high watermark, when present */
       rowIdHighWaterMark: Option[Long] = None)
 
-  /** Replay a Delta log to its snapshot state at `versionAsOf` (or the
-    * latest version): parquet checkpoint base + JSON tail, protocol /
-    * column-mapping gates applied. Pure driver-side metadata — the
-    * only distributed work is the checkpoint parquet scan. */
   /** Mutable side-collector [[checkpointDelta]] hands to
     * [[replaySnapshot]]: gathers the checkpoint-only state the normal
     * snapshot replay discards — the protocol's reader half, the full
     * metaData identity, remove tombstones, setTransaction watermarks,
     * and flags for state a classic checkpoint could not carry
-    * faithfully (v2-checkpoint base, domainMetadata). */
+    * faithfully (v2-checkpoint base, domainMetadata). The replay's
+    * checkpoint walk fills it from the base state, [[ingestCommit]]
+    * from each JSON commit after it. */
   private[sources] final class CheckpointCollector {
     private val om = new com.fasterxml.jackson.databind.ObjectMapper()
     var minReader: Int = 1
@@ -1038,66 +1028,6 @@ object DeltaInterop {
     /** appId → (version, lastUpdated) */
     val txns =
       scala.collection.mutable.LinkedHashMap[String, (Long, Option[Long])]()
-
-    def ingestBase(cp: DataFrame): Unit = {
-      val fields = cp.schema.fieldNames.toSet
-      if (fields.contains("protocol")) {
-        val pf = cp.schema("protocol").dataType
-          .asInstanceOf[StructType].fieldNames.toSet
-        val rf =
-          if (pf.contains("readerFeatures")) col("protocol.readerFeatures")
-          else lit(null).cast("array<string>")
-        cp.where(col("protocol.minReaderVersion").isNotNull)
-          .select(col("protocol.minReaderVersion"), rf)
-          .collect().foreach { r =>
-            minReader = r.getInt(0)
-            readerFeatures = if (r.isNullAt(1)) Nil else r.getSeq[String](1)
-          }
-      }
-      if (fields.contains("metaData")) {
-        val mf = cp.schema("metaData").dataType
-          .asInstanceOf[StructType].fieldNames.toSet
-        def strOr(name: String) =
-          if (mf.contains(name)) col(s"metaData.$name")
-          else lit(null).cast("string")
-        val ct =
-          if (mf.contains("createdTime")) col("metaData.createdTime")
-          else lit(null).cast("bigint")
-        cp.where(col("metaData.schemaString").isNotNull)
-          .select(strOr("id"), strOr("name"), strOr("description"), ct)
-          .collect().foreach { r =>
-            metaId = Option(r.getString(0))
-            metaName = Option(r.getString(1))
-            metaDescription = Option(r.getString(2))
-            createdTime = if (r.isNullAt(3)) None else Some(r.getLong(3))
-          }
-      }
-      if (fields.contains("remove"))
-        cp.where(col("remove.path").isNotNull)
-          .select(col("remove.path"), col("remove.deletionTimestamp"))
-          .collect().foreach { r =>
-            tombstones(decodePath(r.getString(0))) =
-              if (r.isNullAt(1)) 0L else r.getLong(1)
-          }
-      if (fields.contains("txn"))
-        cp.where(col("txn.appId").isNotNull)
-          .select(col("txn.appId"), col("txn.version"),
-            col("txn.lastUpdated"))
-          .collect().foreach { r =>
-            txns(r.getString(0)) = (r.getLong(1),
-              if (r.isNullAt(2)) None else Some(r.getLong(2)))
-          }
-      if (fields.contains("domainMetadata"))
-        cp.where(col("domainMetadata.domain").isNotNull)
-          .select(col("domainMetadata.domain"),
-            col("domainMetadata.configuration"),
-            col("domainMetadata.removed"))
-          .collect().foreach { r =>
-            domains(r.getString(0)) = (
-              Option(r.getString(1)).getOrElse(""),
-              !r.isNullAt(2) && r.getBoolean(2))
-          }
-    }
 
     def ingestCommit(text: String): Unit =
       text.split('\n').foreach { line =>
@@ -1153,13 +1083,63 @@ object DeltaInterop {
       }
   }
 
+  /** The action columns a checkpoint replay decodes, each with the
+    * fields of it that are read; everything else a checkpoint carries
+    * (`stats_parsed`, `tags`, `format`, ...) is never decoded. */
+  private val CheckpointActions: Map[String, Set[String]] = Map(
+    "protocol" -> Set("minReaderVersion", "minWriterVersion",
+      "readerFeatures", "writerFeatures"),
+    "metaData" -> Set("id", "name", "description", "schemaString",
+      "partitionColumns", "configuration", "createdTime"),
+    "add" -> Set("path", "partitionValues", "deletionVector", "stats",
+      "baseRowId", "defaultRowCommitVersion"),
+    "remove" -> Set("path", "deletionTimestamp"),
+    "txn" -> Set("appId", "version", "lastUpdated"),
+    "domainMetadata" -> Set("domain", "configuration", "removed"),
+    "checkpointMetadata" -> Set("version"),
+    "sidecar" -> Set("path"))
+
+  /** Stream the rows of checkpoint parquet `files` through `f` on the
+    * driver, pruned to [[CheckpointActions]] (see [[DriverParquet]]):
+    * no Spark job, and memory bounded by one row batch however many
+    * files the checkpoint lists. Returns the action columns the files
+    * carry. */
+  private def walkCheckpoint(spark: SparkSession,
+      files: Seq[FileStatus])(f: Row => Unit): Set[String] = {
+    var present = Set.empty[String]
+    DriverParquet.foreach(spark, files, { schema =>
+      present ++= schema.fieldNames.filter(CheckpointActions.contains)
+      StructType(schema.fields.toSeq.flatMap {
+        case StructField(n, s: StructType, nl, md) if CheckpointActions.contains(n) =>
+          val kept = s.filter(c => CheckpointActions(n)(c.name))
+          if (kept.isEmpty) None else Some(StructField(n, StructType(kept), nl, md))
+        case _ => None
+      })
+    })(f)
+    present
+  }
+
+  /** `r`'s column `name`, when the file carries it and it is not null. */
+  private def field[T](r: Row, name: String): Option[T] = {
+    val i = r.schema.fields.indexWhere(_.name == name)
+    if (i < 0 || r.isNullAt(i)) None else Some(r.getAs[T](i))
+  }
+
+  private def strings(r: Row, name: String): Seq[String] =
+    field[scala.collection.Seq[String]](r, name).map(_.toSeq).getOrElse(Nil)
+
+  /** Replay a Delta log to its snapshot state at `versionAsOf` (or the
+    * latest version): parquet checkpoint base + JSON tail, protocol /
+    * column-mapping gates applied. Pure driver-side metadata work with
+    * no Spark job: one LIST of `_delta_log`, one driver-side walk over
+    * the checkpoint rows ([[walkCheckpoint]]) that fills the snapshot
+    * state and `collector` in the same pass, then the JSON tail. */
   private[sources] def replaySnapshot(spark: SparkSession, path: String,
       versionAsOf: Option[Long],
       collector: Option[CheckpointCollector] = None): DeltaSnapshot = {
     val root = new HPath(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val logDir = new HPath(root, "_delta_log")
-    require(fs.exists(logDir), s"no Delta log at $path")
     val capVersion = versionAsOf.getOrElse(Long.MaxValue)
     var schemaJson: Option[String] = None
     var partCols: Seq[String] = Nil
@@ -1179,10 +1159,19 @@ object DeltaInterop {
       .LinkedHashMap[String, (Option[Long], Option[Long])]()
     var rowIdWm: Option[Long] = None
 
-    // ---- checkpoint base state (O(#files) metadata through one scan) ----
+    // ---- checkpoint base state ----
     val lastCp = new HPath(logDir, "_last_checkpoint")
     val lastCpText: Option[String] =
-      if (fs.exists(lastCp)) Some(readString(fs, lastCp)) else None
+      try Some(readString(fs, lastCp))
+      catch { case _: java.io.FileNotFoundException => None }
+    // the one LIST of the log: checkpoint discovery and the commit tail
+    // both come from it. It follows the _last_checkpoint read, so the
+    // checkpoint that file names is in it.
+    val listing: Seq[FileStatus] =
+      try fs.listStatus(logDir).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    require(listing.nonEmpty, s"no Delta log at $path")
+    val names = listing.map(_.getPath.getName)
     // a torn/partial _last_checkpoint (non-atomic overwrite is the
     // protocol reality) must NOT fail the read: per the Delta spec,
     // readers fall back to discovering checkpoints from the log listing
@@ -1199,8 +1188,7 @@ object DeltaInterop {
     // — the single non-dot token distinguishes them from multi-part
     // `v.checkpoint.iiiiiiiiii.nnnnnnnnnn.parquet` names.
     val V2Cp = "(\\d{20})\\.checkpoint\\.([^.]+)\\.(parquet|json)".r
-    lazy val diskCps: Seq[Long] = fs.listStatus(logDir).toSeq
-      .map(_.getPath.getName)
+    lazy val diskCps: Seq[Long] = names
       .flatMap {
         case n if n.matches("\\d{20}\\.checkpoint\\.parquet") =>
           Some(n.take(20).toLong)
@@ -1212,7 +1200,7 @@ object DeltaInterop {
       if (usableNamed) namedCpVersion
       else diskCps.filter(_ <= capVersion).maxOption.getOrElse {
         val someCpCompacted = namedCpVersion >= 0 || diskCps.nonEmpty
-        if (someCpCompacted && !fs.exists(new HPath(logDir, f"${0L}%020d.json")))
+        if (someCpCompacted && !names.contains(f"${0L}%020d.json"))
           throw new IllegalArgumentException(
             s"cannot time-travel to version $capVersion at $path: the " +
               s"checkpoint at $namedCpVersion compacted earlier history and " +
@@ -1223,114 +1211,107 @@ object DeltaInterop {
       }
     if (cpVersion >= 0) {
       val v = cpVersion
-      // ingest one base-state slice — the v1 checkpoint parquet (all
-      // parts), a v2 top-level checkpoint, or a v2 sidecar file:
-      // protocol/column-mapping gates, latest metaData, active adds.
-      def ingest(cp: DataFrame): Unit = {
-      val fields = cp.schema.fieldNames.toSet
-      if (fields.contains("protocol")) {
-        val protoFields =
-          cp.schema("protocol").dataType.asInstanceOf[StructType].fieldNames.toSet
-        val rf =
-          if (protoFields.contains("readerFeatures")) col("protocol.readerFeatures")
-          else lit(null).cast("array<string>")
-        val wf =
-          if (protoFields.contains("writerFeatures")) col("protocol.writerFeatures")
-          else lit(null).cast("array<string>")
-        val mw =
-          if (protoFields.contains("minWriterVersion"))
-            col("protocol.minWriterVersion")
-          else lit(null).cast("int")
-        cp.where(col("protocol.minReaderVersion").isNotNull)
-          .select(col("protocol.minReaderVersion"), rf.as("rf"),
-            mw.as("mw"), wf.as("wf"))
-          .collect().foreach { r =>
-            checkProtocol(path, r.getInt(0),
-              if (r.isNullAt(1)) Nil else r.getSeq[String](1))
-            if (!r.isNullAt(2)) minWriter = r.getInt(2)
-            if (!r.isNullAt(3)) writerFeatures = r.getSeq[String](3)
+      var reader: Option[(Int, Seq[String])] = None
+      var mapMode: Option[String] = None
+      var declaredVersion: Option[Long] = None
+      val sidecars = Seq.newBuilder[String]
+      // fold one base-state slice — the v1 checkpoint parquet (all
+      // parts), a v2 top-level checkpoint, or its sidecars — into the
+      // snapshot state and the collector: protocol, latest metaData,
+      // active adds, row-tracking watermark, and the collector's
+      // tombstones, txns and domains. Returns the action columns the
+      // files carry.
+      def ingest(files: Seq[FileStatus]): Set[String] =
+        walkCheckpoint(spark, files) { r =>
+          field[Row](r, "protocol").foreach { p =>
+            field[Number](p, "minReaderVersion").foreach { mr =>
+              val rf = strings(p, "readerFeatures")
+              reader = Some((mr.intValue, rf))
+              field[Number](p, "minWriterVersion").foreach(w => minWriter = w.intValue)
+              field[scala.collection.Seq[String]](p, "writerFeatures")
+                .foreach(wf => writerFeatures = wf.toSeq)
+              collector.foreach { c => c.minReader = mr.intValue; c.readerFeatures = rf }
+            }
           }
-      }
-      if (fields.contains("metaData"))
-        cp.where(col("metaData.schemaString").isNotNull)
-          .select(col("metaData.schemaString"), col("metaData.partitionColumns"),
-            col("metaData.configuration"))
-          .collect().foreach { r =>
-            schemaJson = Some(r.getString(0))
-            partCols = if (r.isNullAt(1)) Nil else r.getSeq[String](1)
-            val conf = if (r.isNullAt(2)) Map.empty[String, String]
-              else r.getMap[String, String](2).filter(_._2 != null).toMap
-            configuration = conf
-            colMapMode = checkColumnMapping(path,
-              conf.getOrElse("delta.columnMapping.mode", ""))
-          }
-      // checkpoint `remove` actions are vacuum tombstones of files
-      // already gone from the snapshot — active state is the adds alone
-      if (fields.contains("add")) {
-        val addFields = cp.schema("add").dataType
-          .asInstanceOf[StructType].fieldNames.toSet
-        val dvCol =
-          if (addFields.contains("deletionVector")) col("add.deletionVector")
-          else lit(null).cast(
-            "struct<storageType:string,pathOrInlineDv:string,offset:bigint," +
-              "sizeInBytes:bigint,cardinality:bigint>")
-        val statsCol =
-          if (addFields.contains("stats")) col("add.stats")
-          else lit(null).cast("string")
-        val bridCol =
-          if (addFields.contains("baseRowId")) col("add.baseRowId")
-          else lit(null).cast("bigint")
-        val rcvCol =
-          if (addFields.contains("defaultRowCommitVersion"))
-            col("add.defaultRowCommitVersion")
-          else lit(null).cast("bigint")
-        cp.where(col("add.path").isNotNull)
-          .select(col("add.path"), col("add.partitionValues"), dvCol.as("dv"),
-            statsCol.as("stats"), bridCol.as("brid"), rcvCol.as("rcv"))
-          .collect().foreach { r =>
-            val pv = if (r.isNullAt(1)) Map.empty[String, String]
-              else r.getMap[String, String](1).filter(_._2 != null).toMap
-            val dv =
-              if (r.isNullAt(2)) None
-              else {
-                val s = r.getStruct(2)
-                Some(DeletionVectors.Descriptor(
-                  s.getAs[String]("storageType"), s.getAs[String]("pathOrInlineDv"),
-                  Option(s.getAs[Any]("offset")).map(_.toString.toLong),
-                  s.getAs[Number]("sizeInBytes").longValue(),
-                  s.getAs[Number]("cardinality").longValue()))
+          field[Row](r, "metaData").foreach { m =>
+            field[String](m, "schemaString").foreach { sj =>
+              schemaJson = Some(sj)
+              partCols = strings(m, "partitionColumns")
+              configuration = field[scala.collection.Map[String, String]](m,
+                "configuration").map(_.filter(_._2 != null).toMap).getOrElse(Map.empty)
+              mapMode = Some(configuration.getOrElse("delta.columnMapping.mode", ""))
+              collector.foreach { c =>
+                c.metaId = field[String](m, "id")
+                c.metaName = field[String](m, "name")
+                c.metaDescription = field[String](m, "description")
+                c.createdTime = field[Number](m, "createdTime").map(_.longValue)
               }
-            val p = decodePath(r.getString(0))
-            active(p) = (pv, dv)
-            if (!r.isNullAt(3) && r.getString(3).nonEmpty)
-              statsMap(p) = r.getString(3)
-            else statsMap.remove(p)
-            val brid = if (r.isNullAt(4)) None else Some(r.getLong(4))
-            val rcv = if (r.isNullAt(5)) None else Some(r.getLong(5))
-            if (brid.isDefined || rcv.isDefined) rowIdMap(p) = (brid, rcv)
-            else rowIdMap.remove(p)
+            }
           }
-      }
-      if (fields.contains("domainMetadata")) {
-        cp.where(col("domainMetadata.domain") === "delta.rowTracking")
-          .select(col("domainMetadata.configuration"))
-          .collect().foreach { r =>
-            try {
-              val om2 = new com.fasterxml.jackson.databind.ObjectMapper()
-              val cfg = om2.readTree(r.getString(0))
-              if (cfg.has("rowIdHighWaterMark"))
-                rowIdWm = Some(cfg.get("rowIdHighWaterMark").asLong())
-            } catch { case _: Exception => () }
+          // checkpoint `remove` actions are vacuum tombstones of files
+          // already gone from the snapshot — active state is the adds alone
+          field[Row](r, "add").foreach { a =>
+            field[String](a, "path").foreach { raw =>
+              val p = decodePath(raw)
+              val dv = field[Row](a, "deletionVector").map(d =>
+                DeletionVectors.Descriptor(d.getAs[String]("storageType"),
+                  d.getAs[String]("pathOrInlineDv"),
+                  field[Number](d, "offset").map(_.longValue),
+                  d.getAs[Number]("sizeInBytes").longValue(),
+                  d.getAs[Number]("cardinality").longValue()))
+              active(p) = (field[scala.collection.Map[String, String]](a,
+                "partitionValues").map(_.filter(_._2 != null).toMap)
+                .getOrElse(Map.empty), dv)
+              field[String](a, "stats").filter(_.nonEmpty) match {
+                case Some(st) => statsMap(p) = st
+                case None => statsMap.remove(p)
+              }
+              val brid = field[Number](a, "baseRowId").map(_.longValue)
+              val rcv = field[Number](a, "defaultRowCommitVersion").map(_.longValue)
+              if (brid.isDefined || rcv.isDefined) rowIdMap(p) = (brid, rcv)
+              else rowIdMap.remove(p)
+            }
           }
-      }
-      collector.foreach(_.ingestBase(cp))
+          collector.foreach { c =>
+            field[Row](r, "remove").foreach(rm => field[String](rm, "path")
+              .foreach(p => c.tombstones(decodePath(p)) =
+                field[Number](rm, "deletionTimestamp").map(_.longValue).getOrElse(0L)))
+            field[Row](r, "txn").foreach(t => field[String](t, "appId")
+              .foreach(app => c.txns(app) = (
+                field[Number](t, "version").map(_.longValue).getOrElse(0L),
+                field[Number](t, "lastUpdated").map(_.longValue))))
+          }
+          field[Row](r, "domainMetadata").foreach { dm =>
+            field[String](dm, "domain").foreach { d =>
+              val cfg = field[String](dm, "configuration")
+              collector.foreach(_.domains(d) =
+                (cfg.getOrElse(""), field[Boolean](dm, "removed").contains(true)))
+              if (d == "delta.rowTracking") cfg.foreach { text =>
+                try {
+                  val node = new com.fasterxml.jackson.databind.ObjectMapper()
+                    .readTree(text)
+                  if (node.has("rowIdHighWaterMark"))
+                    rowIdWm = Some(node.get("rowIdHighWaterMark").asLong())
+                } catch { case _: Exception => () }
+              }
+            }
+          }
+          field[Row](r, "checkpointMetadata").flatMap(field[Number](_, "version"))
+            .foreach(dv => declaredVersion = Some(dv.longValue))
+          field[Row](r, "sidecar").flatMap(field[String](_, "path"))
+            .foreach(sidecars += _)
+        }
+      // the gates fire once a walk is done, so a refusal never leaves a
+      // reader open mid-file
+      def gates(): Unit = {
+        reader.foreach { case (mr, rf) => checkProtocol(path, mr, rf) }
+        mapMode.foreach(m => colMapMode = checkColumnMapping(path, m))
       }
 
-      val v2Files = fs.listStatus(logDir).toSeq.map(_.getPath)
-        .filter(p => p.getName match {
-          case V2Cp(vv, _, _) => vv.toLong == v
-          case _ => false
-        })
+      val v2Files = listing.filter(st => st.getPath.getName match {
+        case V2Cp(vv, _, _) => vv.toLong == v
+        case _ => false
+      })
       if (v2Files.nonEmpty) {
         // ---- v2 checkpoint (PROTOCOL.md "V2 Checkpoint Table
         // Feature"): a UUID-named top-level file carrying
@@ -1339,52 +1320,43 @@ object DeltaInterop {
         // `sidecar` actions. Any single UUID-named file is complete —
         // multiple coexisting ones are equivalent; pick one
         // deterministically.
-        val parquetV2 = v2Files.filter(_.getName.endsWith(".parquet"))
+        val parquetV2 = v2Files.filter(_.getPath.getName.endsWith(".parquet"))
         if (parquetV2.isEmpty)
           throw new IllegalArgumentException(
             s"Delta table at $path has only JSON-format v2 checkpoints at " +
               s"version $v — this dependency-free replay reads parquet " +
               "checkpoints only; read it with a full Delta client")
-        val topPath = parquetV2.maxBy(_.getName)
+        val top = parquetV2.maxBy(_.getPath.getName)
         collector.foreach(_.baseWasV2 = true)
-        val top = spark.read.parquet(topPath.toString)
-        val topFields = top.schema.fieldNames.toSet
-        if (topFields.contains("checkpointMetadata"))
-          top.where(col("checkpointMetadata.version").isNotNull)
-            .select(col("checkpointMetadata.version"))
-            .collect().foreach { r =>
-              require(r.getLong(0) == v,
-                s"v2 checkpoint ${topPath.getName} at $path declares version " +
-                  s"${r.getLong(0)} in checkpointMetadata — corrupt checkpoint")
-            }
-        ingest(top)
-        if (topFields.contains("sidecar")) {
-          // sidecar paths are file names relative to _delta_log/_sidecars/
-          // or absolute URIs; each sidecar parquet carries file actions
-          // only (add/remove) — remove tombstones are skipped by ingest
-          val sidecarDir = new HPath(logDir, "_sidecars")
-          val scPaths = top.where(col("sidecar.path").isNotNull)
-            .select(col("sidecar.path")).collect().map(_.getString(0)).toSeq
-            .map { p =>
-              val dp = decodePath(p)
-              if (dp.startsWith("/") || SchemePrefix.findFirstIn(dp).isDefined) dp
-              else new HPath(sidecarDir, dp).toString
-            }
-          scPaths.foreach(p => require(
-            fs.exists(new HPath(p)),
-            s"v2 checkpoint at $path names sidecar $p which does not exist — " +
-              "refusing a partial base state"))
-          if (scPaths.nonEmpty) ingest(spark.read.parquet(scPaths: _*))
+        ingest(Seq(top))
+        declaredVersion.foreach(dv => require(dv == v,
+          s"v2 checkpoint ${top.getPath.getName} at $path declares version " +
+            s"$dv in checkpointMetadata — corrupt checkpoint"))
+        gates()
+        // sidecar paths are file names relative to _delta_log/_sidecars/
+        // or absolute URIs; each sidecar parquet carries file actions
+        // only (add/remove) — remove tombstones are skipped by ingest
+        val sidecarDir = new HPath(logDir, "_sidecars")
+        val scFiles = sidecars.result().map { p =>
+          val dp = decodePath(p)
+          val sp =
+            if (dp.startsWith("/") || SchemePrefix.findFirstIn(dp).isDefined) new HPath(dp)
+            else new HPath(sidecarDir, dp)
+          val st = try Some(fs.getFileStatus(sp))
+            catch { case _: java.io.FileNotFoundException => None }
+          require(st.isDefined, s"v2 checkpoint at $path names sidecar $sp " +
+            "which does not exist — refusing a partial base state")
+          st.get
         }
+        ingest(scFiles)
       } else {
         // ---- classic v1 checkpoint (single- or multi-part) ----
-        val cpFiles = fs.listStatus(logDir).toSeq.map(_.getPath)
-          .filter { p =>
-            if (usableNamed)
-              p.getName.startsWith(f"$v%020d.checkpoint") &&
-                p.getName.endsWith(".parquet")
-            else p.getName == f"$v%020d.checkpoint.parquet"
-          }
+        val cpFiles = listing.filter { st =>
+          val n = st.getPath.getName
+          if (usableNamed)
+            n.startsWith(f"$v%020d.checkpoint") && n.endsWith(".parquet")
+          else n == f"$v%020d.checkpoint.parquet"
+        }
         require(cpFiles.nonEmpty,
           s"_last_checkpoint at $path names version $v but no checkpoint parquet exists")
         // a multi-part checkpoint missing a part would silently drop the
@@ -1397,20 +1369,19 @@ object DeltaInterop {
         declaredParts.foreach(parts => require(cpFiles.size == parts,
           s"checkpoint at $path version $v declares $parts parts but " +
             s"${cpFiles.size} are present — refusing a partial base state"))
-        val cp = spark.read.parquet(cpFiles.map(_.toString): _*)
+        val f2 = ingest(cpFiles.sortBy(_.getPath.getName))
         // a CLASSIC-named checkpoint carrying v2 actions is malformed
         // (v2 checkpoints must use UUID naming) — a v1 read of it could
         // silently drop files listed only in sidecars
-        val f2 = cp.schema.fieldNames.toSet
         require(!f2.contains("checkpointMetadata") && !f2.contains("sidecar"),
           s"checkpoint at $path version $v is classic-named but carries v2 " +
             "checkpoint actions — malformed log")
-        ingest(cp)
+        gates()
       }
     }
 
     // ---- JSON tail on top of the checkpoint ----
-    val commits = fs.listStatus(logDir).toSeq.map(_.getPath)
+    val commits = listing.map(_.getPath)
       .filter(_.getName.matches("\\d{20}\\.json"))
       .filter { p =>
         val v = p.getName.dropRight(5).toLong
@@ -3629,21 +3600,21 @@ object DeltaInterop {
     * them. The checkpoint carries the full protocol (reader AND writer
     * halves, incl. feature lists), the complete metaData identity
     * (id/name/description/createdTime — preserved, not regenerated),
-    * every active add with its partitionValues and deletionVector
-    * (sizes statted from storage), unexpired remove tombstones, and
-    * setTransaction watermarks — the whole per-action state the
+    * every active add with its partitionValues, deletionVector, stats
+    * and row-tracking fields (sizes statted from storage), unexpired
+    * remove tombstones, setTransaction watermarks and the latest
+    * domainMetadata per domain — the whole per-action state the
     * protocol's Checkpoints section requires, so foreign streaming
     * writers' exactly-once txn state survives the compaction.
+    * delta.checkpointPolicy=v2 tables, and tables whose base is a v2
+    * checkpoint, get a v2 checkpoint with one sidecar.
     *
-    * Refuses rather than drop state: delta.checkpointPolicy=v2 tables,
-    * histories whose base is itself a v2 checkpoint (its sidecar
-    * tombstones/txns aren't re-read here), domainMetadata carriers,
-    * and unknown writer features. Column mapping is fine — adds and
+    * Refuses rather than drop state: unknown writer features, and
+    * active files missing from storage. Column mapping is fine — adds and
     * schemaString pass through exactly as the log recorded them.
     * Checkpointing commits no version (a concurrent writer landing
     * v+1 stays fully consistent). Returns the checkpointed version. */
   def checkpointDelta(spark: SparkSession, path: String): Long = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val root = new HPath(path)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -3685,7 +3656,9 @@ object DeltaInterop {
       StructField("modificationTime", LongType),
       StructField("dataChange", BooleanType),
       StructField("deletionVector", dvType),
-      StructField("stats", StringType)))
+      StructField("stats", StringType),
+      StructField("baseRowId", LongType),
+      StructField("defaultRowCommitVersion", LongType)))
     val removeType = StructType(Seq(
       StructField("path", StringType),
       StructField("deletionTimestamp", LongType),
@@ -3754,9 +3727,11 @@ object DeltaInterop {
         }
       val dvRow = dv.map(d => Row(d.storageType, d.pathOrInlineDv,
         d.offset.map(Long.box).orNull, d.sizeInBytes, d.cardinality)).orNull
+      val (brid, rcv) = st.rowIds.getOrElse(p, (None, None))
       rows.add(Row(null, null, null,
         Row(encodePath(p), pv, stt.getLen, stt.getModificationTime,
-          false, dvRow, st.stats.get(p).orNull), null, null))
+          false, dvRow, st.stats.get(p).orNull, brid.map(Long.box).orNull,
+          rcv.map(Long.box).orNull), null, null))
     }
     val activePaths = st.active.map(_._1).toSet
     coll.tombstones.filterNot(t => activePaths.contains(t._1))

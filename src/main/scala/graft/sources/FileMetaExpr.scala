@@ -1,10 +1,15 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -38,14 +43,54 @@ object FileMeta {
 object FooterSchema {
   def of(conf: Configuration, file: String): StructType = {
     val p = new HPath(file)
+    of(conf, p.getFileSystem(conf).getFileStatus(p))
+  }
+
+  def of(conf: Configuration, file: FileStatus): StructType = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromStatus(p.getFileSystem(conf).getFileStatus(p), conf)
+      .fromStatus(file, conf)
     val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     val msg = try rdr.getFooter.getFileMetaData.getSchema
       finally rdr.close()
     new org.apache.spark.sql.execution.datasources.parquet
       .ParquetToSparkSchemaConverter()
       .convert(msg)
+  }
+}
+
+/** Driver-side parquet row walks for metadata-sized files (a Delta
+  * checkpoint, its sidecars). Spark's own parquet reader is called in
+  * this thread, so type conversion is exactly Spark's, and no
+  * DataSource resolution, plan or job runs. Each file's footer schema
+  * goes through `prune` (return an empty schema to skip the file), and
+  * the rows stream through `f` as external rows whose nested structs
+  * carry their schema; nothing is buffered. */
+object DriverParquet {
+  def foreach(spark: SparkSession, files: Seq[FileStatus],
+      prune: StructType => StructType)(f: Row => Unit): Unit = {
+    val format = new ParquetFileFormat()
+    // one reader per distinct schema; each gets its own conf, because
+    // building a reader writes the requested schema into the conf it
+    // is handed
+    val readers = scala.collection.mutable
+      .HashMap[StructType, PartitionedFile => Iterator[InternalRow]]()
+    files.foreach { st =>
+      val schema = prune(FooterSchema.of(spark.sparkContext.hadoopConfiguration, st))
+      if (schema.nonEmpty) {
+        val read = readers.getOrElseUpdate(schema,
+          format.buildReaderWithPartitionValues(spark, schema, new StructType(),
+            schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+            new Configuration(spark.sparkContext.hadoopConfiguration)))
+        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+        val rows = read(PartitionedFile(InternalRow.empty,
+          SparkPath.fromPath(st.getPath), 0L, st.getLen, fileSize = st.getLen))
+        try rows.foreach(r => f(toRow(r).asInstanceOf[Row]))
+        finally rows match {
+          case c: java.io.Closeable => c.close()
+          case _ => ()
+        }
+      }
+    }
   }
 }
 

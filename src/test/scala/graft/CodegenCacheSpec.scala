@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.api.GraftOps
 import graft.metrics.Codegen
 import graft.sources.{DeltaInterop, GraftTable, IcebergInterop}
 
@@ -76,5 +77,22 @@ class CodegenCacheSpec extends AnyFunSuite {
       assert(df.orderBy("id").as[(Long, String)].collect().toSeq ==
         Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
     }
+  }
+
+  test("a repeated incrementalDedupe compiles no new generated class") {
+    // its base/delta disjointness probe must not carry a generated LIMIT
+    val base = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "lorem ipsum dolor sit amet consectetur")).toDF("id", "text")
+    val delta = Seq((3L, "the quick brown fox jumps over the lazy cat"),
+      (4L, "an unrelated sentence about lakehouse tables")).toDF("id", "text")
+    def run() = GraftOps.incrementalDedupe(base, delta, "id", "text")
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    assert(run() == Set((1L, 3L)))
+    run()
+    val c0 = Codegen.compiles()
+    run()
+    val again = Codegen.compiles() - c0
+    assert(again.count == 0,
+      s"the repeated call compiled ${again.count} classes in ${again.ms} ms")
   }
 }
