@@ -2,22 +2,20 @@
 """A/B of two graft checkouts on the perfbench workloads, in alternating pairs.
 
     python3 scripts/perfbench_ab.py --parent DIR --change DIR \
-        [--workload lakehouse] [--workload curation] [--seeds 11-20] \
-        [--seconds 15] [--out DIR] [--all-metrics]
+        [--workload lakehouse] [--workload curation]
 
 Each checkout is a complete tree (`git archive <sha> | tar -x -C DIR`) with
-identical perfbench code. For every workload and seed it runs
-`python3 perfbench/run.py --workload W --seed N --seconds S --trace 0` once
+identical perfbench code. For every workload and seed 11-20 it runs
+`python3 perfbench/run.py --workload W --seed N --seconds 15 --trace 0` once
 in each checkout, one run at a time, the parent first on odd seeds and the
-change first on even ones. Each run's output is kept as
-OUT/<workload>_<side>_<seed>.txt. A file that already holds a result is
-reused, so an interrupted A/B resumes where it stopped.
+change first on even ones. Every run is made afresh; its output is kept in a
+new temporary directory (printed at the start, under $TMPDIR if set) as
+<workload>_<side>_<seed>.txt.
 
-It prints, per workload and metric (the end-to-end metrics of the change's
-BENCHMARK.json, or every metric with --all-metrics), each side's median and
-quartiles, the change of the medians, the pairs the change won, and whether a
-gain would hold: the change wins at least 9 of 10 pairs and the medians
-differ by more than the parent's interquartile range. It also prints each
+It prints, per workload and end-to-end metric of the change's BENCHMARK.json,
+each side's median and quartiles, the change of the medians, the pairs the
+change won, and whether a gain would hold: the change wins at least 9 of the
+10 pairs and the medians differ by more than the parent's interquartile range. It also prints each
 side's count of `correct` runs and of failed operations. Only perfbench/run.py
 is called; nothing under perfbench/ is changed.
 """
@@ -29,16 +27,12 @@ import subprocess
 import sys
 import tempfile
 
-
-def seed_range(text):
-    lo, _, hi = text.partition("-")
-    return list(range(int(lo), int(hi or lo) + 1))
+SEEDS = range(11, 21)
+SECONDS = 15
 
 
 def result_of(path):
-    """The JSON result line of a kept run output, or None."""
-    if not os.path.isfile(path):
-        return None
+    """The JSON result line of a run output, or None."""
     for line in reversed(open(path).read().splitlines()):
         if line.startswith("{"):
             try:
@@ -48,10 +42,10 @@ def result_of(path):
     return None
 
 
-def run_one(checkout, workload, seed, seconds, path):
+def run_one(checkout, workload, seed, path):
     with open(path, "w") as out:
         subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                        "--seed", str(seed), "--seconds", str(SECONDS), "--trace", "0"],
                        cwd=checkout, stdout=out, stderr=subprocess.STDOUT)
     return result_of(path)
 
@@ -68,19 +62,13 @@ def main():
     ap.add_argument("--parent", required=True, help="checkout of the parent commit")
     ap.add_argument("--change", required=True, help="checkout of the change")
     ap.add_argument("--workload", action="append", help="repeatable; default: lakehouse")
-    ap.add_argument("--seeds", default="11-20", help="inclusive range, e.g. 11-20")
-    ap.add_argument("--seconds", type=int, default=15)
-    ap.add_argument("--out", help="where run outputs are kept (default: a new temp dir)")
-    ap.add_argument("--all-metrics", action="store_true",
-                    help="report every metric, not only the end-to-end ones")
     a = ap.parse_args()
     workloads = a.workload or ["lakehouse"]
-    seeds = seed_range(a.seeds)
-    out = a.out or tempfile.mkdtemp(prefix="perfbench_ab_")
-    os.makedirs(out, exist_ok=True)
+    seeds = list(SEEDS)
+    out = tempfile.mkdtemp(prefix="perfbench_ab_")
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
     spec = json.load(open(os.path.join(sides["change"], "BENCHMARK.json")))
-    metrics = spec["end_to_end"] + (spec["per_layer"] if a.all_metrics else [])
+    metrics = spec["end_to_end"]
     print(f"run outputs in {out}", file=sys.stderr, flush=True)
 
     for w in workloads:
@@ -88,15 +76,12 @@ def main():
         for s in seeds:
             order = ("parent", "change") if s % 2 == 1 else ("change", "parent")
             for side in order:
-                path = os.path.join(out, f"{w}_{side}_{s}.txt")
-                res = result_of(path)
-                if res is None:
-                    print(f"{w} seed {s}: {side}", file=sys.stderr, flush=True)
-                    res = run_one(sides[side], w, s, a.seconds, path)
+                print(f"{w} seed {s}: {side}", file=sys.stderr, flush=True)
+                res = run_one(sides[side], w, s, os.path.join(out, f"{w}_{side}_{s}.txt"))
                 if res is not None:
                     results[side][s] = res
         paired = [s for s in seeds if s in results["parent"] and s in results["change"]]
-        print(f"\n== {w}: {len(paired)} pairs (seeds {a.seeds}) ==")
+        print(f"\n== {w}: {len(paired)} pairs (seeds {seeds[0]}-{seeds[-1]}) ==")
         for side in ("parent", "change"):
             rs = results[side].values()
             print(f"{side}: {sum(1 for r in rs if r['correct'])}/{len(seeds)} correct, "
