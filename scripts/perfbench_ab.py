@@ -14,10 +14,19 @@ new temporary directory (printed at the start, under $TMPDIR if set) as
 
 It prints, per workload and end-to-end metric of the change's BENCHMARK.json,
 each side's median and quartiles, the change of the medians, the pairs the
-change won, and whether a gain would hold: the change wins at least 9 of the
-10 pairs and the medians differ by more than the parent's interquartile range. It also prints each
-side's count of `correct` runs and of failed operations. Only perfbench/run.py
-is called; nothing under perfbench/ is changed.
+change won, whether a gain would hold (the change wins at least 9 of the 10
+pairs and the medians differ by more than the parent's interquartile range),
+and a no-regression verdict against the metric's `bound`, a fraction of the
+parent's median:
+
+  worse       the change's median is worse than the parent's by more than
+              the bound;
+  unresolved  the parent's interquartile range exceeds the bound (relative
+              to its median) and not every change run beats every parent run;
+  ok          otherwise.
+
+It also prints each side's count of `correct` runs and of failed operations.
+Only perfbench/run.py is called; nothing under perfbench/ is changed.
 """
 import argparse
 import json
@@ -57,6 +66,19 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def verdict(p, c, bound, lower):
+    """worse / unresolved / ok for parent runs `p` and change runs `c`."""
+    pm, cm = statistics.median(p), statistics.median(c)
+    worse_by = (cm - pm) if lower else (pm - cm)
+    if worse_by > bound * abs(pm):
+        return "worse"
+    p1, p3 = quartiles(p)
+    all_beat = max(c) < min(p) if lower else min(c) > max(p)
+    if p3 - p1 > bound * abs(pm) and not all_beat:
+        return "unresolved"
+    return "ok"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--parent", required=True, help="checkout of the parent commit")
@@ -88,7 +110,7 @@ def main():
                   f"{sum(r['failed'] for r in rs)} failed operations, "
                   f"{len(seeds) - len(rs)} runs without a result")
         print(f"{'metric':<24} {'parent median [q1, q3]':>32} {'change median [q1, q3]':>32}"
-              f" {'change':>8} {'won':>6}  gain holds")
+              f" {'change':>8} {'won':>6}  {'gain holds':<10}  verdict")
         for m in metrics:
             name, lower = m["name"], m["better"] == "lower"
             p = [results["parent"][s]["metrics"][name]["value"] for s in paired]
@@ -103,7 +125,8 @@ def main():
             holds = better and won * 10 >= 9 * len(paired) and abs(cm - pm) > p3 - p1
             print(f"{name:<24} {f'{pm:.4g} [{p1:.4g}, {p3:.4g}]':>32} "
                   f"{f'{cm:.4g} [{c1:.4g}, {c3:.4g}]':>32} {rel:>+7.1f}% "
-                  f"{f'{won}/{len(paired)}':>6}  {'yes' if holds else 'no'}")
+                  f"{f'{won}/{len(paired)}':>6}  {'yes' if holds else 'no':<10}  "
+                  f"{verdict(p, c, m['bound'], lower)}")
 
 
 if __name__ == "__main__":

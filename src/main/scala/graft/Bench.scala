@@ -22,11 +22,11 @@ object Bench {
     "spark.graft.streaming.statePartitions" -> "8",
     "spark.graft.streaming.stateProvider" -> "hdfs")
 
-  /** A Bench-shaped session on `SPARK_GRAFT_CPUS` cores (default 4),
-    * with `extra` confs last — also the session of the `graft.tools`
-    * mains, so their findings transfer to Bench. */
-  def session(appName: String, extra: Seq[(String, String)] = Nil): SparkSession =
-    Sessions.local(appName, Sessions.envCpus, sessionOverrides ++ extra)
+  /** A Bench-shaped session on `SPARK_GRAFT_CPUS` cores (default 4) —
+    * also the session of `graft.tools.ExplainDump`, so its plans are
+    * Bench's. */
+  def session(appName: String): SparkSession =
+    Sessions.local(appName, Sessions.envCpus, sessionOverrides)
 
   private[graft] final case class QResult(name: String, sec: Double,
     err: Option[String], codegen: Codegen.Compiles,

@@ -65,7 +65,7 @@ object Sessions {
     "spark.ui.retainedStages" -> "100")
 
   /** `SPARK_GRAFT_CPUS`, else 4: the local core count of the
-    * driver-contract mains and the diagnostic tools. */
+    * driver-contract mains and `graft.tools.ExplainDump`. */
   def envCpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4)
 

@@ -296,7 +296,6 @@ object Similarity {
     // one corpus-sized persisted relation per call — the caller holds
     // no reference to unpersist. Checkpoint blocks are released by the
     // context cleaner when the result is dropped.
-    if (sys.env.contains("GRAFT_DEBUG_EXPLAIN")) pairs.explain("formatted")
     val out = pairs.localCheckpoint()
     assigned.unpersist(false)
     out

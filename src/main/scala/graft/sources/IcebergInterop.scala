@@ -4034,14 +4034,18 @@ object IcebergInterop {
 
     val hint = new HPath(metaDir, "version-hint.text")
     // the hint read must tolerate the publisher's delete -> rename
-    // window (publishHint): existing at the check but gone at the open
-    // is a concurrent publish, not corruption — fall back to the
-    // listing like an absent hint
+    // window (publishHint): existing at the check but gone at the open,
+    // or read between the renames of the hint and its checksum file, is
+    // a concurrent publish, not corruption — fall back to the listing
+    // like an absent hint
     val hintVersion: Option[Long] =
       if (!fs.exists(hint)) None
       else try new String(readBytes(fs, hint), StandardCharsets.UTF_8)
         .trim.toLongOption
-      catch { case _: java.io.FileNotFoundException => None }
+      catch {
+        case _: java.io.FileNotFoundException |
+             _: org.apache.hadoop.fs.ChecksumException => None
+      }
     val metaFile: HPath =
       if (hintVersion.isDefined) {
         val v = hintVersion.get

@@ -1,16 +1,11 @@
 package graft.sources.v2
 
-import java.util
-
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SQLContext, SparkSession}
-import org.apache.spark.sql.connector.catalog.{Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, V1Scan}
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.connector.read.Batch
+import org.apache.spark.sql.execution.streaming.Source
+import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.graftbridge.ParquetTableBridge
-import org.apache.spark.sql.sources.{BaseRelation, TableScan}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -47,112 +42,58 @@ import graft.sources.DeltaInterop
   * Scale shape: planning is O(#commits + #files) driver-side metadata;
   * the data path is the native vectorized parquet batch reader over
   * only the added files. */
-class DeltaSource extends TableProvider
-    with org.apache.spark.sql.sources.StreamSourceProvider {
-  private def pathOf(options: CaseInsensitiveStringMap): String =
-    Option(options.get("path")).getOrElse(throw new IllegalArgumentException(
-      "delta source needs a path: .load(<table root>)"))
+class DeltaSource extends LogTailProvider("delta") {
+  /** The snapshot [[schemaOf]] replayed, by path. Spark resolves a table
+    * with `inferSchema` then `getTable` on one provider instance, so the
+    * stream takes its column-mapping posture from the same version as
+    * its schema instead of replaying the log again. */
+  @volatile private var inferred: Option[(String, DeltaInterop.DeltaSnapshot)] = None
 
-  private def cdfOf(options: CaseInsensitiveStringMap): Boolean =
-    Option(options.get("readChangeFeed")).exists(_.toBoolean)
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val spark = SparkSession.active
-    val st = DeltaInterop.replaySnapshot(spark, pathOf(options), None)
-    val base = DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
-    if (cdfOf(options)) DeltaSource.cdfSchema(base) else base
+  protected def schemaOf(spark: SparkSession, path: String): StructType = {
+    val st = DeltaInterop.replaySnapshot(spark, path, None)
+    inferred = Some(path -> st)
+    DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
   }
 
-  override def getTable(tableSchema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table = {
-    val options = new CaseInsensitiveStringMap(properties)
-    val path = pathOf(options)
-    val cdf = cdfOf(options)
-    new Table with org.apache.spark.sql.connector.catalog.SupportsRead {
-      override def name(): String = s"delta:$path"
-      override def schema(): StructType = tableSchema
-      // CDF tables advertise NO micro-batch capability: streaming CDF
-      // rides the V1 StreamSourceProvider fallback below (its
-      // per-batch data is an arbitrary composed DataFrame, which the
-      // V1 contract hands the engine directly)
-      override def capabilities(): util.Set[TableCapability] =
-        if (cdf) util.EnumSet.of(TableCapability.BATCH_READ)
-        else util.EnumSet.of(TableCapability.BATCH_READ,
-          TableCapability.MICRO_BATCH_READ)
-      override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-        new ScanBuilder {
-          override def build(): Scan = new V1Scan {
-            override def readSchema(): StructType = tableSchema
-            override def toMicroBatchStream(checkpointLocation: String)
-                : MicroBatchStream =
-              new DeltaMicroBatchStream(SparkSession.active, path, tableSchema,
-                opts)
-            override def toV1TableScan[T <: BaseRelation with TableScan](
-                context: SQLContext): T =
-              new BaseRelation with TableScan {
-                override def sqlContext: SQLContext = context
-                override def schema: StructType = readSchema()
-                override def buildScan(): RDD[Row] =
-                  if (!cdf)
-                    DeltaInterop.readDelta(SparkSession.active, path).rdd
-                  else {
-                    // batch CDF: startingVersion..endingVersion (ends
-                    // default to the full retained range)
-                    val s = SparkSession.active
-                    val from = Option(options.get("startingVersion"))
-                      .map(_.toLong).getOrElse(0L)
-                    val to = Option(options.get("endingVersion")).map(_.toLong)
-                      .getOrElse(DeltaInterop.replaySnapshot(s, path, None)
-                        .version)
-                    DeltaInterop.readDeltaChanges(s, path, from, to)
-                      .select(readSchema().fieldNames.map(
-                        org.apache.spark.sql.functions.col).toSeq: _*).rdd
-                  }
-              }.asInstanceOf[T]
-          }
-        }
-    }
-  }
+  protected def cdfSchema(base: StructType): StructType = DeltaSource.cdfSchema(base)
 
-  // ---- V1 streaming fallback: CDF micro-batches ----
-  // NOTE: the analyzer builds the V1 StreamingRelation eagerly as the
-  // fallback arm of StreamingRelationV2 even when the V2 micro-batch
-  // scan will serve the query, so sourceSchema must answer for BOTH
-  // modes without constructing a Source; the CDF-only gate lives in
-  // createSource, which only runs when the V1 arm is actually chosen
-  // (i.e. the CDF table that advertises no MICRO_BATCH_READ).
-  override def sourceSchema(sqlContext: SQLContext,
-      schema: Option[StructType], providerName: String,
-      parameters: Map[String, String]): (String, StructType) = {
-    val params = parameters.map {
-      case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v
-    }
-    val path = params.getOrElse("path", throw new IllegalArgumentException(
-      "delta source needs a path: .load(<table root>)"))
-    val base = DataType.fromJson(DeltaInterop
-      .replaySnapshot(sqlContext.sparkSession, path, None).schemaJson)
-      .asInstanceOf[StructType]
-    if (params.get("readchangefeed").exists(_.toBoolean))
-      ("delta-cdf", DeltaSource.cdfSchema(base))
-    else ("delta", base)
-  }
+  protected def tail(spark: SparkSession, path: String, schema: StructType,
+      options: CaseInsensitiveStringMap): LogTail =
+    new DeltaTail(spark, path, schema, options,
+      inferred.collect { case (`path`, st) => st })
 
-  override def createSource(sqlContext: SQLContext, metadataPath: String,
-      schema: Option[StructType], providerName: String,
-      parameters: Map[String, String])
-      : org.apache.spark.sql.execution.streaming.Source = {
-    require(parameters.exists { case (k, v) =>
-      k.equalsIgnoreCase("readChangeFeed") && v.toBoolean
-    }, "the V1 streaming path of DeltaSource serves only " +
-      "readChangeFeed=true reads — plain streaming rides the " +
-      "micro-batch scan")
-    new DeltaCdfStreamSource(sqlContext.sparkSession, parameters)
-  }
+  // batch CDF: startingVersion..endingVersion (ends default to the full
+  // retained range)
+  protected def batchRead(spark: SparkSession, path: String, cdf: Boolean,
+      schema: StructType, options: CaseInsensitiveStringMap): DataFrame =
+    if (!cdf) DeltaInterop.readDelta(spark, path)
+    else DeltaInterop.readDeltaChanges(spark, path,
+        Option(options.get("startingVersion")).map(_.toLong).getOrElse(0L),
+        Option(options.get("endingVersion")).map(_.toLong)
+          .getOrElse(DeltaSource.latestVersion(spark, path)))
+      .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
 
-  override def supportsExternalMetadata(): Boolean = false
+  protected def cdfSource(spark: SparkSession,
+      parameters: Map[String, String]): Source =
+    new DeltaCdfStreamSource(spark, parameters)
 }
 
 object DeltaSource {
+  /** The newest version in the table's `_delta_log` listing: commit
+    * files and checkpoints (a cleaned-up log may start at a checkpoint). */
+  private[v2] def latestVersion(spark: SparkSession, path: String): Long = {
+    val logDir = new HPath(new HPath(path), "_delta_log")
+    val names = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(logDir).toSeq.map(_.getPath.getName)
+    val jsons = names.collect { case n if n.matches("\\d{20}\\.json") =>
+      n.dropRight(5).toLong }
+    val cps = names.flatMap(n =>
+      "(\\d{20})\\.checkpoint.*\\.parquet".r.findFirstMatchIn(n)
+        .map(_.group(1).toLong))
+    (jsons ++ cps).maxOption.getOrElse(
+      throw new IllegalArgumentException(s"empty Delta log at $path"))
+  }
+
   /** The CDF read schema: table columns plus the protocol's change
     * metadata columns. */
   private[v2] def cdfSchema(base: StructType): StructType =
@@ -173,30 +114,16 @@ object DeltaSource {
   * (number, or "latest" for only-new-changes) defaults to 0, i.e. the
   * full retained history; ranges whose commits were cleaned up refuse
   * loudly, exactly like the batch CDF read. Offsets are Delta versions
-  * (durable in the checkpoint); schema changes inside a batch range
-  * refuse via the underlying reader. */
-class DeltaCdfStreamSource(spark: SparkSession,
-    parameters: Map[String, String])
-    extends org.apache.spark.sql.execution.streaming.Source {
+  * (durable in the checkpoint as a bare number, [[LongOffset]]); schema
+  * changes inside a batch range refuse via the underlying reader. */
+class DeltaCdfStreamSource(spark: SparkSession, parameters: Map[String, String])
+    extends Source {
   private val params =
     parameters.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
   private val path = params.getOrElse("path",
     throw new IllegalArgumentException(
       "delta CDF source needs a path: .load(<table root>)"))
-  private val root = new HPath(path)
-  private def fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def logDir = new HPath(root, "_delta_log")
-
-  private def latestVersion(): Long = {
-    val names = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-    val jsons = names.collect { case n if n.matches("\\d{20}\\.json") =>
-      n.dropRight(5).toLong }
-    val cps = names.flatMap(n =>
-      "(\\d{20})\\.checkpoint.*\\.parquet".r.findFirstMatchIn(n)
-        .map(_.group(1).toLong))
-    (jsons ++ cps).maxOption.getOrElse(
-      throw new IllegalArgumentException(s"empty Delta log at $path"))
-  }
+  private def latestVersion(): Long = DeltaSource.latestVersion(spark, path)
 
   private val startingVersion: Long =
     params.get("startingversion") match {
@@ -217,13 +144,13 @@ class DeltaCdfStreamSource(spark: SparkSession,
       : Option[org.apache.spark.sql.execution.streaming.Offset] = {
     val latest = latestVersion()
     if (latest < startingVersion) None
-    else Some(DeltaCdfOffset(latest))
+    else Some(LongOffset(latest))
   }
 
   override def getBatch(
       start: Option[org.apache.spark.sql.execution.streaming.Offset],
       end: org.apache.spark.sql.execution.streaming.Offset)
-      : org.apache.spark.sql.DataFrame = {
+      : DataFrame = {
     val from = start.map(versionOf(_) + 1).getOrElse(startingVersion)
     val to = versionOf(end)
     val df =
@@ -239,300 +166,75 @@ class DeltaCdfStreamSource(spark: SparkSession,
   override def stop(): Unit = ()
 }
 
-/** V1 stream offset = Delta version (bare number JSON, restart-safe
-  * through the checkpoint's SerializedOffset round-trip). */
-case class DeltaCdfOffset(version: Long)
-    extends org.apache.spark.sql.execution.streaming.Offset {
-  override def json: String = version.toString
-}
 
-/** Stream offset = Delta version. */
-case class DeltaVersionOffset(version: Long) extends Offset {
-  override def json: String = s"""{"version":$version}"""
-}
-
-object DeltaVersionOffset {
-  private val V = "\"version\"\\s*:\\s*(-?\\d+)".r
-  def fromJson(json: String): DeltaVersionOffset =
-    DeltaVersionOffset(V.findFirstMatchIn(json).getOrElse(
-      throw new IllegalArgumentException(s"bad delta offset: $json"))
-      .group(1).toLong)
-}
-
-/** Micro-batch stream tailing a foreign Delta table's `_delta_log` —
-  * the [[GraftMicroBatchStream]] shape over the Delta commit protocol.
-  * See [[DeltaSource]] for the contract. */
-class DeltaMicroBatchStream(spark: SparkSession, path: String,
-    schema: StructType, options: CaseInsensitiveStringMap)
-  extends MicroBatchStream with SupportsAdmissionControl
-  with SupportsTriggerAvailableNow {
-
-  /** Trigger.AvailableNow: the run drains exactly the commits present
-    * at START, in maxCommitsPerTrigger-bounded batches, then stops —
-    * a 100 TB catch-up admits rate-limited batches instead of one
-    * unbounded batch. */
-  @volatile private var availableNowEnd: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(latestVersion())
-
-  private val skipChangeCommits =
-    Option(options.get("skipchangecommits")).exists(_.toBoolean)
-  private val maxCommitsPerTrigger =
-    Option(options.get("maxcommitspertrigger")).map(_.toInt)
-  /** Byte-based admission (Delta's own source option): cap each
-    * micro-batch by the admitted commits' add-action bytes, not their
-    * COUNT — at scale commit sizes are wildly skewed, so a
-    * count-bounded catch-up batch can still be arbitrarily large. At
-    * least one commit always admits (progress guarantee); composes
-    * with maxCommitsPerTrigger (tighter wins) and AvailableNow's
-    * pinned drain end. */
-  private val maxBytesPerTrigger =
-    Option(options.get("maxbytespertrigger")).map(_.toLong)
+/** The Delta log as a [[LogTail]]: keys are versions, a commit's files
+  * are its `dataChange` adds. See [[DeltaSource]] for the contract. */
+private[v2] final class DeltaTail(spark: SparkSession, path: String,
+    schema: StructType, options: CaseInsensitiveStringMap,
+    inferred: Option[DeltaInterop.DeltaSnapshot]) extends LogTail {
+  val label = s"delta stream over $path"
+  val keyField = "version"
+  val capOption = "maxCommitsPerTrigger"
 
   private val root = new HPath(path)
   private def fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def logDir = new HPath(root, "_delta_log")
-
-  /** Column-mapping posture, pinned ONCE per stream run from the
-    * latest snapshot: (mode, physical scan schema, logical→physical
-    * top-level names). Mapped tables scan their files under PHYSICAL
-    * names in the PLANNED field order — rows come out positionally
-    * identical to the declared schema, so no rename projection rides
-    * the streaming scan. Pinning once is sound because Delta physical
-    * names are immutable after assignment (PROTOCOL.md); the per-
-    * commit metaData gate below refuses the one illegal transition
-    * (an assignment rewrite, e.g. REPLACE TABLE). */
-  private lazy val mapInfo: (String, StructType, Map[String, String]) = {
-    val st = DeltaInterop.replaySnapshot(spark, path, None)
-    (st.colMapMode,
-      DeltaInterop.physicalScanSchema(st.schemaJson, st.colMapMode, schema),
-      DeltaInterop.physicalNamesOf(st.schemaJson))
-  }
-  private def physName(c: String): String = mapInfo._3.getOrElse(c, c)
-
-  private def latestVersion(): Long = {
-    val names = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-    val jsons = names.collect { case n if n.matches("\\d{20}\\.json") =>
-      n.dropRight(5).toLong }
-    val cps = names.flatMap(n =>
-      "(\\d{20})\\.checkpoint.*\\.parquet".r.findFirstMatchIn(n)
-        .map(_.group(1).toLong))
-    (jsons ++ cps).maxOption.getOrElse(
-      throw new IllegalArgumentException(s"empty Delta log at $path"))
-  }
+  private def commitFile(v: Long) = new HPath(root, f"_delta_log/$v%020d.json")
 
   /** `startingVersion` (Delta's own source option): skip the initial
-    * snapshot and stream commits FROM this version on — the only way
-    * to tail a 100 TB table without scanning it first. "latest" =
-    * future commits only. The named commit must still be retained
-    * (the per-commit catch-up path validates). */
-  private val startingVersion: Option[Long] =
-    Option(options.get("startingversion")).map {
-      case "latest" => latestVersion() + 1
-      case v =>
-        val n = v.toLong
-        require(n >= 1, s"startingVersion must be >= 1 (got $n) — " +
-          "version 0 is the stream's default initial-snapshot behavior; " +
-          "omit the option")
-        n
-    }
+    * snapshot and stream commits FROM this version on — the only way to
+    * tail a 100 TB table without scanning it first. "latest" = future
+    * commits only. The named commit must still be retained (the
+    * per-commit catch-up path validates). */
+  val initialKey: Long = Option(options.get("startingVersion")).map {
+    case "latest" => DeltaSource.latestVersion(spark, path)
+    case v =>
+      val n = v.toLong
+      require(n >= 1, s"startingVersion must be >= 1 (got $n) — " +
+        "version 0 is the stream's default initial-snapshot behavior; " +
+        "omit the option")
+      n - 1
+  }.getOrElse(-1L)
 
-  override def initialOffset(): Offset =
-    DeltaVersionOffset(startingVersion.map(_ - 1L).getOrElse(-1L))
-  override def latestOffset(): Offset = DeltaVersionOffset(latestVersion())
-  override def reportLatestOffset(): Offset = DeltaVersionOffset(latestVersion())
-  override def deserializeOffset(json: String): Offset =
-    DeltaVersionOffset.fromJson(json)
+  /** The snapshot the stream's schema came from, which pins its
+    * column-mapping posture ONCE per run: mapped tables scan their files
+    * under PHYSICAL names in the PLANNED field order — rows come out
+    * positionally identical to the declared schema, so no rename
+    * projection rides the streaming scan. Pinning once is sound because
+    * Delta physical names are immutable after assignment (PROTOCOL.md);
+    * the per-commit metaData gate refuses the one illegal transition (an
+    * assignment rewrite, e.g. REPLACE TABLE). */
+  private lazy val pinned =
+    inferred.getOrElse(DeltaInterop.replaySnapshot(spark, path, None))
+  private lazy val physNames = DeltaInterop.physicalNamesOf(pinned.schemaJson)
+  private lazy val scanSchema = if (pinned.colMapMode == "none") schema
+    else DeltaInterop.physicalScanSchema(pinned.schemaJson, pinned.colMapMode, schema)
+  private def physName(c: String): String = physNames.getOrElse(c, c)
 
-  override def getDefaultReadLimit: ReadLimit =
-    maxCommitsPerTrigger.map(n => ReadLimit.maxFiles(n))
-      .getOrElse(ReadLimit.allAvailable())
-
-  private def commitCap(limit: ReadLimit): Option[Int] = limit match {
-    case f: ReadMaxFiles => Some(f.maxFiles)
-    case c: CompositeReadLimit =>
-      c.getReadLimits.toSeq.flatMap(commitCap).minOption
-    case _: ReadAllAvailable => maxCommitsPerTrigger
-    case _ => maxCommitsPerTrigger
-  }
-
-  /** add-action bytes of commit `v` — one driver-side log-file read
-    * (the size field every Delta writer records on its adds). */
-  private def commitBytes(v: Long): Long = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val in = fs.open(new HPath(logDir, f"$v%020d.json"))
-    val text = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    finally in.close()
-    text.split('\n').filter(_.contains("\"add\"")).map { line =>
-      Option(om.readTree(line).get("add"))
-        .map(_.path("size").asLong(0L)).getOrElse(0L)
-    }.sum
-  }
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val latest = availableNowEnd
-      .map(e => math.min(e, latestVersion()))
-      .getOrElse(latestVersion())
-    val s = start.asInstanceOf[DeltaVersionOffset].version
-    val countEnd = commitCap(limit) match {
-      case Some(n) if s >= 0 => math.min(latest, s + n)
-      case _ => latest
-    }
-    val end = maxBytesPerTrigger match {
-      // the initial snapshot (s < 0) stays one indivisible batch — the
-      // version pins a consistent state; byte admission governs the
-      // per-commit tail
-      case Some(budget) if s >= 0 =>
-        var e = s
-        var acc = 0L
-        var stop = false
-        while (!stop && e < countEnd) {
-          val b = commitBytes(e + 1)
-          if (e > s && acc + b > budget) stop = true
-          else { acc += b; e += 1; if (acc >= budget) stop = true }
-        }
-        e
-      case _ => countEnd
-    }
-    DeltaVersionOffset(end)
-  }
-
-  /** Every partition column must be path-encoded (`…/col=value/…`) for
-    * the hive-dir recovery to reconstruct it. */
-  private def checkPartitionEncoding(partCols: Seq[String],
-                                     file: String): Unit =
-    partCols.foreach { pc =>
-      if (!file.contains(s"/$pc="))
-        throw new IllegalStateException(
-          s"delta stream over $path: data file $file does not encode " +
-            s"partition column '$pc' in its path — the stream recovers " +
-            "partition values from the hive directory layout; read this " +
-            "table batch-side via DeltaInterop.readDelta")
-    }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[DeltaVersionOffset].version
-    val e = end.asInstanceOf[DeltaVersionOffset].version
-    if (e <= s) return Array.empty
-    val files: Seq[String] =
-      if (s < 0) {
-        // batch 0: the complete snapshot at version e — deterministic
-        // on checkpoint recovery because the version pins the state
-        val st = DeltaInterop.replaySnapshot(spark, path, Some(e))
-        if (st.colMapMode != mapInfo._1)
-          throw new IllegalStateException(
-            s"delta stream over $path: column-mapping mode at version " +
-              s"$e ('${st.colMapMode}') differs from the planned " +
-              s"snapshot's ('${mapInfo._1}') — the table was replaced " +
-              "under this stream; restart from a fresh checkpoint")
-        st.active.foreach { case (p, (_, dv)) =>
-          if (dv.isDefined)
-            throw new IllegalStateException(
-              s"delta stream over $path: file $p carries a deletion " +
-                "vector at stream start — a DV'd snapshot cannot stream " +
-                "append-only; compact the table or read it batch-side")
-        }
-        partColsAt(e) = st.partCols
-        st.active.map { case (p, _) =>
-          val f = DeltaInterop.resolveFile(root, p)
-          // mapped tables hive-encode partition dirs under PHYSICAL names
-          checkPartitionEncoding(st.partCols.map(physName), f)
-          f
-        }
-      } else {
-        // partition columns IN EFFECT at each commit being replayed —
-        // a checkpoint-restart catching up across a partition-layout
-        // change must validate old commits' files against the OLD
-        // layout, not the latest snapshot's
-        var pcNow = partColsOf(s)
-        val out = (s + 1 to e).flatMap { v =>
-        val commitPath = new HPath(logDir, f"$v%020d.json")
-        if (!fs.exists(commitPath))
-          throw new IllegalStateException(
-            s"delta stream over $path: commit $v is no longer retained " +
-              "(log cleanup outran this consumer) — restart the stream " +
-              "from a fresh checkpoint")
-        val a = DeltaInterop.parseCommitText(path,
-          readText(commitPath))
-        a.meta.foreach { case (sj, pc, mode) =>
-          pcNow = pc
-          // column-mapping gate: physical names are IMMUTABLE once
-          // assigned, so a replayed commit's assignment must agree
-          // with the planned snapshot's for every shared column —
-          // including the upgrade commit (upgraded columns take their
-          // logical name as physical name, so pre-upgrade files and
-          // the pinned physical scan schema agree). A disagreement
-          // means the assignment was REWRITTEN under this stream
-          // (REPLACE TABLE) — no restart can reconcile the range;
-          // re-sync from a fresh checkpoint.
-          val commitPhys = DeltaInterop.physicalNamesOf(sj)
-          val clash = commitPhys.collectFirst {
-            case (l, p) if mapInfo._3.getOrElse(l, l) != p &&
-              schema.fieldNames.contains(l) => (l, p)
-          }
-          clash.foreach { case (l, p) =>
-            throw new IllegalStateException(
-              s"delta stream over $path: commit $v maps column '$l' to " +
-                s"physical name '$p' but the planned snapshot maps it " +
-                s"to '${mapInfo._3.getOrElse(l, l)}' — the column-" +
-                "mapping assignment was rewritten under this stream; " +
-                "re-sync from a fresh checkpoint")
-          }
-          // schema gate mirrors the graft source's restart-safe rule:
-          // a commit ADDING columns the plan lacks refuses (the fixed-
-          // schema scan would silently drop them; a restarted stream
-          // plans with the widened schema and passes), while NARROWER
-          // metaData is the pre-change history a restarted stream
-          // replays while catching up — null-filled like additive
-          // evolution, never a wedge
-          val newCols = DataType.fromJson(sj).asInstanceOf[StructType]
-            .fieldNames.toSet
-          val added = newCols -- schema.fieldNames.toSet
-          if (added.nonEmpty)
-            throw new IllegalStateException(
-              s"delta stream over $path: commit $v changes the table " +
-                s"schema (added ${added.toSeq.sorted.mkString(", ")}) — " +
-                "restart the stream to pick up the new schema")
-        }
-        // the Delta source contract: dataChange=false actions
-        // (compaction/optimize rewrites) are INVISIBLE to streams —
-        // only dataChange removes / DV'd adds make a change commit
-        val isChange =
-          a.removeActions.exists(_._2) ||
-            a.addActions.exists(ad => ad.dataChange && ad.dv.isDefined)
-        if (isChange && !skipChangeCommits)
-          throw new IllegalStateException(
-            s"delta stream over $path: commit $v removes or rewrites " +
-              "data (dataChange removes or deletion vectors) — the source " +
-              "tails APPENDS; set read option skipChangeCommits=true to " +
-              "skip change commits")
-        if (isChange) Nil
-        else a.addActions.filter(_.dataChange).map { ad =>
-          val f = DeltaInterop.resolveFile(root, ad.path)
-          checkPartitionEncoding(pcNow.map(physName), f)
-          f
-        }
-        }
-        partColsAt(e) = pcNow
-        out
-      }
-    if (files.isEmpty) Array.empty
-    else {
-      val b = scanBatch(files)
-      currentBatch = b
-      b.planInputPartitions()
-    }
-  }
-
-  // partition columns BY VERSION: seeded by one log replay per
-  // (re)start, then advanced incrementally from each commit's metaData
-  // as batches process — each trigger's start version hits the cache
-  // entry the previous trigger stored
+  // Partition columns BY VERSION: seeded by one replay per (re)start,
+  // then advanced from each commit's metaData as batches plan. Kept at
+  // batch starts and ends, so a re-planned batch and the next trigger
+  // (which starts where this one ended) hit the cache. A restart
+  // catching up across a partition-layout change validates old commits'
+  // files against the OLD layout, not the latest snapshot's.
   private val partColsAt = scala.collection.mutable.Map[Long, Seq[String]]()
   private def partColsOf(v: Long): Seq[String] =
     partColsAt.getOrElseUpdate(v,
       DeltaInterop.replaySnapshot(spark, path, Some(v)).partCols)
+
+  /** Every partition column must be path-encoded (`…/col=value/…`), under
+    * its physical name, for the hive-dir recovery to reconstruct it. */
+  private def checked(partCols: Seq[String], p: String): String = {
+    val file = DeltaInterop.resolveFile(root, p)
+    partCols.map(physName).foreach { pc =>
+      if (!file.contains(s"/$pc="))
+        throw new IllegalStateException(
+          s"$label: data file $file does not encode " +
+            s"partition column '$pc' in its path — the stream recovers " +
+            "partition values from the hive directory layout; read this " +
+            "table batch-side via DeltaInterop.readDelta")
+    }
+    file
+  }
 
   private def readText(p: HPath): String = {
     val in = fs.open(p)
@@ -540,48 +242,108 @@ class DeltaMicroBatchStream(spark: SparkSession, path: String,
     finally in.close()
   }
 
-  private def scanBatch(files: Seq[String]): Batch = {
-    // basePath pins hive partition inference to the table root across
-    // arbitrary file subsets. Copy via asCaseSensitiveMap — the
-    // Map-interface copy of a CaseInsensitiveStringMap yields
-    // LOWERCASED keys, and the file index looks "basePath" up
-    // case-sensitively (a lowercased key silently disables inference
-    // and null-fills every partition column).
-    val m = new java.util.HashMap[String, String](options.asCaseSensitiveMap())
-    m.put("basePath", path)
-    // column-mapped tables scan under the pinned PHYSICAL schema in
-    // planned field order — rows are positionally identical to the
-    // declared schema (id mode resolves by parquet field id)
-    val (mode, physSchema, _) = mapInfo
-    if (mode == "id")
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val scanSchema = if (mode == "none") schema else physSchema
-    ParquetTableBridge.scanBuilder(spark, "delta-stream", files, scanSchema,
-      new CaseInsensitiveStringMap(m)).build().toBatch
-  }
+  def read(): TailLog = new TailLog {
+    lazy val latest: Long = DeltaSource.latestVersion(spark, path)
+    /** the version this view's commit walk last advanced to */
+    private var walked = Option.empty[Long]
 
-  // The factory must come from the SAME per-batch scan as the planned
-  // partitions: a factory built over an empty file index would carry an
-  // empty partition schema and silently null-fill every hive-recovered
-  // partition column (unlike the graft source, which only streams
-  // unpartitioned tables and can share one file-less factory).
-  @volatile private var currentBatch: Batch = _
-  override def createReaderFactory(): PartitionReaderFactory =
-    if (currentBatch != null) currentBatch.createReaderFactory()
-    else {
-      // unreachable under MicroBatchExecution's call order (plan, then
-      // factory); if a future engine inverts it, an empty-index
-      // factory would null-fill hive partition columns — fail loudly
-      // for partitioned tables instead
-      val pcs = DeltaInterop.replaySnapshot(spark, path, None).partCols
-      if (pcs.nonEmpty)
-        throw new IllegalStateException(
-          s"delta stream over $path: createReaderFactory called before " +
-            "planInputPartitions on a partitioned table — an empty-index " +
-            "factory would null-fill the hive-recovered partition columns")
-      scanBatch(Nil).createReaderFactory()
+    /** add-action bytes — the size field every Delta writer records. */
+    def bytes(v: Long): Long = {
+      val om = new com.fasterxml.jackson.databind.ObjectMapper()
+      readText(commitFile(v)).split('\n').filter(_.contains("\"add\"")).map { line =>
+        Option(om.readTree(line).get("add"))
+          .map(_.path("size").asLong(0L)).getOrElse(0L)
+      }.sum
     }
 
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+    // deterministic on checkpoint recovery: the version pins the state
+    def snapshot(e: Long): Seq[String] = {
+      val st = inferred.filter(_.version == e)
+        .getOrElse(DeltaInterop.replaySnapshot(spark, path, Some(e)))
+      if (st.colMapMode != pinned.colMapMode)
+        throw new IllegalStateException(
+          s"$label: column-mapping mode at version " +
+            s"$e ('${st.colMapMode}') differs from the planned " +
+            s"snapshot's ('${pinned.colMapMode}') — the table was replaced " +
+            "under this stream; restart from a fresh checkpoint")
+      st.active.foreach { case (p, (_, dv)) =>
+        if (dv.isDefined)
+          throw new IllegalStateException(
+            s"$label: file $p carries a deletion " +
+              "vector at stream start — a DV'd snapshot cannot stream " +
+              "append-only; compact the table or read it batch-side")
+      }
+      partColsAt(e) = st.partCols
+      st.active.map { case (p, _) => checked(st.partCols, p) }
+    }
+
+    def commit(v: Long): TailCommit = {
+      if (!fs.exists(commitFile(v)))
+        throw new IllegalStateException(
+          s"$label: commit $v is no longer retained " +
+            "(log cleanup outran this consumer) — restart the stream " +
+            "from a fresh checkpoint")
+      val a = DeltaInterop.parseCommitText(path, readText(commitFile(v)))
+      var partCols = partColsOf(v - 1)
+      a.meta.foreach { case (sj, pc, _) =>
+        partCols = pc
+        // column-mapping gate: physical names are IMMUTABLE once
+        // assigned, so a replayed commit's assignment must agree with
+        // the planned snapshot's for every shared column — including
+        // the upgrade commit (upgraded columns take their logical name
+        // as physical name, so pre-upgrade files and the pinned
+        // physical scan schema agree). A disagreement means the
+        // assignment was REWRITTEN under this stream (REPLACE TABLE) —
+        // no restart can reconcile the range; re-sync.
+        DeltaInterop.physicalNamesOf(sj).collectFirst {
+          case (l, p) if physName(l) != p && schema.fieldNames.contains(l) =>
+            throw new IllegalStateException(
+              s"$label: commit $v maps column '$l' to " +
+                s"physical name '$p' but the planned snapshot maps it " +
+                s"to '${physName(l)}' — the column-" +
+                "mapping assignment was rewritten under this stream; " +
+                "re-sync from a fresh checkpoint")
+        }
+        // schema gate, the graft source's restart-safe rule: a commit
+        // ADDING columns the plan lacks refuses, NARROWER metaData (a
+        // restarted stream's catch-up) null-fills
+        val added = DataType.fromJson(sj).asInstanceOf[StructType]
+          .fieldNames.toSet -- schema.fieldNames.toSet
+        if (added.nonEmpty)
+          throw new IllegalStateException(
+            s"$label: commit $v changes the table " +
+              s"schema (added ${added.toSeq.sorted.mkString(", ")}) — " +
+              "restart the stream to pick up the new schema")
+      }
+      partColsAt(v) = partCols
+      walked.foreach(partColsAt.remove) // a version inside this batch
+      walked = Some(v)
+      // the Delta source contract: dataChange=false actions
+      // (compaction/optimize rewrites) are INVISIBLE to streams — only
+      // dataChange removes / DV'd adds make a change commit
+      if (a.removeActions.exists(_._2) ||
+          a.addActions.exists(ad => ad.dataChange && ad.dv.isDefined))
+        TailCommit.Change(s"commit $v removes or rewrites " +
+          "data (dataChange removes or deletion vectors)")
+      else TailCommit.Append(
+        a.addActions.filter(_.dataChange).map(ad => checked(partCols, ad.path)))
+    }
+
+    def scan(files: Seq[String]): Batch = {
+      // basePath pins hive partition inference to the table root across
+      // arbitrary file subsets. Copy via asCaseSensitiveMap — the
+      // Map-interface copy of a CaseInsensitiveStringMap yields
+      // LOWERCASED keys, and the file index looks "basePath" up
+      // case-sensitively (a lowercased key silently disables inference
+      // and null-fills every partition column).
+      val m = new java.util.HashMap[String, String](options.asCaseSensitiveMap())
+      m.put("basePath", path)
+      // column-mapped tables scan under the pinned PHYSICAL schema in
+      // planned field order (id mode resolves by parquet field id)
+      if (pinned.colMapMode == "id")
+        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+      ParquetTableBridge.scanBuilder(spark, "delta-stream", files, scanSchema,
+        new CaseInsensitiveStringMap(m)).build().toBatch
+    }
+  }
 }

@@ -735,8 +735,8 @@ class GraftSparkTable(spark: SparkSession, path: String, ident: Identifier,
                   s"${ident} is partitioned by ${commit.partitionBy.mkString(", ")}")
               require(pinnedVersion.isEmpty,
                 "streaming reads tail the live table — drop VERSION/TIMESTAMP AS OF")
-              new GraftMicroBatchStream(spark, path, GraftSparkTable.this.schema(),
-                options)
+              new LogTailStream(new GraftTail(spark, path,
+                GraftSparkTable.this.schema(), options), options)
             }
           }
         }

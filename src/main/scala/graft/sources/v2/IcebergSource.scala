@@ -1,17 +1,12 @@
 package graft.sources.v2
 
-import java.util
-
 import org.apache.avro.generic.GenericRecord
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SQLContext, SparkSession}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, V1Scan}
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.connector.read.Batch
+import org.apache.spark.sql.execution.streaming.Source
+import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.graftbridge.ParquetTableBridge
-import org.apache.spark.sql.sources.{BaseRelation, TableScan}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -49,104 +44,32 @@ import graft.sources.IcebergInterop
   * Scale shape: planning is O(#manifests + #files) driver-side
   * metadata per batch; the data path is the native vectorized parquet
   * reader over only the added files. */
-class IcebergSource extends TableProvider
-  with org.apache.spark.sql.sources.StreamSourceProvider {
-  private def pathOf(options: CaseInsensitiveStringMap): String =
-    Option(options.get("path")).getOrElse(throw new IllegalArgumentException(
-      "iceberg source needs a path: .load(<table root>)"))
-
-  private def cdfOf(options: CaseInsensitiveStringMap): Boolean =
-    Option(options.get("readChangeFeed")).exists(_.toBoolean)
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val spark = SparkSession.active
-    val path = pathOf(options)
+class IcebergSource extends LogTailProvider("iceberg") {
+  protected def schemaOf(spark: SparkSession, path: String): StructType = {
     val (_, md) = IcebergInterop.currentMetadata(spark, path)
-    val base = IcebergInterop.fromIcebergStruct(
-      IcebergInterop.currentSchemaNode(md, path), path)
-    if (cdfOf(options)) IcebergSource.cdfSchema(base) else base
+    IcebergInterop.fromIcebergStruct(IcebergInterop.currentSchemaNode(md, path), path)
   }
 
-  override def getTable(tableSchema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table = {
-    val options = new CaseInsensitiveStringMap(properties)
-    val path = pathOf(options)
-    val cdf = cdfOf(options)
-    new Table with SupportsRead {
-      override def name(): String = s"iceberg:$path"
-      override def schema(): StructType = tableSchema
-      // changelog reads advertise NO micro-batch capability: streaming
-      // CDF rides the V1 Source fallback below (the DeltaSource shape)
-      override def capabilities(): util.Set[TableCapability] =
-        if (cdf) util.EnumSet.of(TableCapability.BATCH_READ)
-        else util.EnumSet.of(TableCapability.BATCH_READ,
-          TableCapability.MICRO_BATCH_READ)
-      override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-        new ScanBuilder {
-          override def build(): Scan = new V1Scan {
-            override def readSchema(): StructType = tableSchema
-            override def toMicroBatchStream(checkpointLocation: String)
-                : MicroBatchStream =
-              new IcebergMicroBatchStream(SparkSession.active, path,
-                tableSchema, opts)
-            override def toV1TableScan[T <: BaseRelation with TableScan](
-                context: SQLContext): T =
-              new BaseRelation with TableScan {
-                override def sqlContext: SQLContext = context
-                override def schema: StructType = readSchema()
-                override def buildScan(): RDD[Row] =
-                  if (!cdf)
-                    IcebergInterop.readIceberg(SparkSession.active, path).rdd
-                  else {
-                    // batch changelog: startingSnapshotId (exclusive,
-                    // required) .. endingSnapshotId (default current)
-                    val from = Option(opts.get("startingsnapshotid"))
-                      .getOrElse(throw new IllegalArgumentException(
-                        "batch readChangeFeed needs startingSnapshotId " +
-                          "(exclusive)")).toLong
-                    val to = Option(opts.get("endingsnapshotid"))
-                      .map(_.toLong)
-                    IcebergInterop.readIcebergChangelog(
-                      SparkSession.active, path, from, to).rdd
-                  }
-              }.asInstanceOf[T]
-          }
-        }
-    }
-  }
+  protected def cdfSchema(base: StructType): StructType = IcebergSource.cdfSchema(base)
 
-  // ---- V1 streaming fallback: changelog micro-batches (see
-  // DeltaSource for why sourceSchema must answer for both modes) ----
-  override def sourceSchema(sqlContext: SQLContext,
-      schema: Option[StructType], providerName: String,
-      parameters: Map[String, String]): (String, StructType) = {
-    val params = parameters.map {
-      case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v
-    }
-    val path = params.getOrElse("path", throw new IllegalArgumentException(
-      "iceberg source needs a path: .load(<table root>)"))
-    val spark = sqlContext.sparkSession
-    val (_, md) = IcebergInterop.currentMetadata(spark, path)
-    val base = IcebergInterop.fromIcebergStruct(
-      IcebergInterop.currentSchemaNode(md, path), path)
-    if (params.get("readchangefeed").exists(_.toBoolean))
-      ("iceberg-cdf", IcebergSource.cdfSchema(base))
-    else ("iceberg", base)
-  }
+  protected def tail(spark: SparkSession, path: String, schema: StructType,
+      options: CaseInsensitiveStringMap): LogTail =
+    new IcebergTail(spark, path, schema, options)
 
-  override def createSource(sqlContext: SQLContext, metadataPath: String,
-      schema: Option[StructType], providerName: String,
-      parameters: Map[String, String])
-      : org.apache.spark.sql.execution.streaming.Source = {
-    require(parameters.exists { case (k, v) =>
-      k.equalsIgnoreCase("readChangeFeed") && v.toBoolean
-    }, "the V1 streaming path of IcebergSource serves only " +
-      "readChangeFeed=true reads — plain streaming rides the " +
-      "micro-batch scan")
-    new IcebergCdfStreamSource(sqlContext.sparkSession, parameters)
-  }
+  // batch changelog: startingSnapshotId (exclusive, required) ..
+  // endingSnapshotId (default current)
+  protected def batchRead(spark: SparkSession, path: String, cdf: Boolean,
+      schema: StructType, options: CaseInsensitiveStringMap): DataFrame =
+    if (!cdf) IcebergInterop.readIceberg(spark, path)
+    else IcebergInterop.readIcebergChangelog(spark, path,
+      Option(options.get("startingSnapshotId")).getOrElse(
+        throw new IllegalArgumentException(
+          "batch readChangeFeed needs startingSnapshotId (exclusive)")).toLong,
+      Option(options.get("endingSnapshotId")).map(_.toLong))
 
-  override def supportsExternalMetadata(): Boolean = false
+  protected def cdfSource(spark: SparkSession,
+      parameters: Map[String, String]): Source =
+    new IcebergCdfStreamSource(spark, parameters)
 }
 
 object IcebergSource {
@@ -172,11 +95,11 @@ object IcebergSource {
   * instead of refusing (compactions stay invisible).
   * `startingSnapshotId` (id, or "latest") skips batch 0 and streams
   * changes strictly after that snapshot. Offsets are snapshot ids
-  * (durable in the checkpoint); an expired start refuses loudly with
-  * a restart message, like the batch reader. */
-class IcebergCdfStreamSource(spark: SparkSession,
-    parameters: Map[String, String])
-    extends org.apache.spark.sql.execution.streaming.Source {
+  * (durable in the checkpoint as a bare number, [[LongOffset]]); an
+  * expired start refuses loudly with a restart message, like the batch
+  * reader. */
+class IcebergCdfStreamSource(spark: SparkSession, parameters: Map[String, String])
+    extends Source {
   private val params =
     parameters.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
   private val path = params.getOrElse("path",
@@ -212,13 +135,13 @@ class IcebergCdfStreamSource(spark: SparkSession,
     val latest = headId()
     if (latest < 0) None
     else if (startingSnapshotId.contains(latest)) None
-    else Some(IcebergCdfOffset(latest))
+    else Some(LongOffset(latest))
   }
 
   override def getBatch(
       start: Option[org.apache.spark.sql.execution.streaming.Offset],
       end: org.apache.spark.sql.execution.streaming.Offset)
-      : org.apache.spark.sql.DataFrame = {
+      : DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val endId = snapOf(end)
     val df = start.map(snapOf).orElse(startingSnapshotId) match {
@@ -243,377 +166,189 @@ class IcebergCdfStreamSource(spark: SparkSession,
   override def stop(): Unit = ()
 }
 
-/** V1 stream offset = Iceberg snapshot id (bare number JSON,
-  * restart-safe through the checkpoint's SerializedOffset
-  * round-trip). */
-case class IcebergCdfOffset(snapshotId: Long)
-    extends org.apache.spark.sql.execution.streaming.Offset {
-  override def json: String = snapshotId.toString
-}
+/** The Iceberg snapshot history as a [[LogTail]]: keys are snapshot ids
+  * along the current branch's parent-snapshot-id ancestor chain, a
+  * snapshot's files are the data files its `append` ADDED. See
+  * [[IcebergSource]] for the contract. */
+private[v2] final class IcebergTail(spark: SparkSession, path: String,
+    schema: StructType, options: CaseInsensitiveStringMap) extends LogTail {
+  import IcebergInterop.{fieldOpt, longOf, readAvro, readBytes, refuse}
+  import com.fasterxml.jackson.databind.JsonNode
+  import scala.jdk.CollectionConverters._
 
-/** Stream offset = Iceberg snapshot id (-1 = nothing processed). */
-case class IcebergSnapshotOffset(snapshotId: Long) extends Offset {
-  override def json: String = s"""{"snapshotId":$snapshotId}"""
-}
-
-object IcebergSnapshotOffset {
-  private val V = "\"snapshotId\"\\s*:\\s*(-?\\d+)".r
-  def fromJson(json: String): IcebergSnapshotOffset =
-    IcebergSnapshotOffset(V.findFirstMatchIn(json).getOrElse(
-      throw new IllegalArgumentException(s"bad iceberg offset: $json"))
-      .group(1).toLong)
-}
-
-/** Micro-batch stream tailing an Iceberg table's snapshot history —
-  * see [[IcebergSource]] for the contract. */
-class IcebergMicroBatchStream(spark: SparkSession, path: String,
-    schema: StructType, options: CaseInsensitiveStringMap)
-  extends MicroBatchStream with SupportsAdmissionControl
-  with SupportsTriggerAvailableNow {
-
-  /** Trigger.AvailableNow: drain exactly the snapshots present at
-    * start, in maxSnapshotsPerTrigger-bounded batches, then stop. */
-  @volatile private var availableNowEnd: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(history().lastOption.getOrElse(-1L))
-
-  import IcebergInterop.{currentMetadata, fieldOpt, longOf, readAvro, readBytes, refuse}
-
-  private val skipChangeCommits =
-    Option(options.get("skipchangecommits")).exists(_.toBoolean)
-  private val maxSnapshotsPerTrigger =
-    Option(options.get("maxsnapshotspertrigger")).map(_.toInt)
-  /** Byte-based admission: cap each micro-batch by the admitted
-    * snapshots' `added-files-size` summary bytes (the field every
-    * Iceberg writer stamps), not their COUNT — skewed snapshot sizes
-    * make a count-bounded catch-up batch arbitrarily large. At least
-    * one snapshot always admits; composes with maxSnapshotsPerTrigger
-    * (tighter wins) and AvailableNow. A snapshot missing the summary
-    * field admits as 0 bytes (conservative toward progress). */
-  private val maxBytesPerTrigger =
-    Option(options.get("maxbytespertrigger")).map(_.toLong)
-
-  /** snapshot id → added-files-size, from the metadata's snapshots
-    * array (driver-side, already parsed for history()). */
-  private def addedBytes(): Map[Long, Long] = {
-    val (_, md) = currentMetadata(spark, path)
-    if (!md.has("snapshots")) return Map.empty
-    val it = md.get("snapshots").elements()
-    val b = Map.newBuilder[Long, Long]
-    while (it.hasNext) {
-      val s = it.next()
-      b += s.get("snapshot-id").asLong() ->
-        s.path("summary").path("added-files-size").asLong(0L)
-    }
-    b.result()
-  }
-
-  /** Snapshot ids in history order: the CURRENT branch's ancestor
-    * chain (oldest→newest), walked via parent-snapshot-id from the
-    * main-ref / current head — never the raw snapshots array, whose
-    * tail still carries commits abandoned by a rollback. Re-read per
-    * call so the stream sees snapshots landed after it started. */
-  private def history(): Seq[Long] = {
-    val (_, md) = currentMetadata(spark, path)
-    IcebergInterop.ancestorChainOf(md, IcebergInterop.currentHeadId(md))
-  }
+  val label = s"iceberg stream over $path"
+  val keyField = "snapshotId"
+  val capOption = "maxSnapshotsPerTrigger"
 
   /** `startingSnapshotId`: skip the initial snapshot scan and stream
-    * appends AFTER this retained snapshot (exclusive) — the Iceberg
-    * twin of Delta's startingVersion. "latest" = future appends only. */
-  private val startingSnapshotId: Option[Long] =
-    Option(options.get("startingsnapshotid")).map {
-      case "latest" => history().lastOption.getOrElse(-1L)
-      case v => v.toLong
+    * appends AFTER this retained snapshot (exclusive) — the Iceberg twin
+    * of Delta's startingVersion. "latest" = future appends only. */
+  val initialKey: Long = Option(options.get("startingSnapshotId")).map {
+    case "latest" => read().latest
+    case v => v.toLong
+  }.getOrElse(-1L)
+
+  private def fieldNames(schemaNode: JsonNode): Set[String] =
+    schemaNode.path("fields").elements().asScala.map(_.path("name").asText()).toSet
+
+  private def retainedOnly(id: Long): Nothing =
+    throw new IllegalStateException(
+      s"$label: snapshot $id is no longer retained (expire_snapshots " +
+        "outran this consumer) — restart the stream from a fresh checkpoint")
+
+  def read(): TailLog = new TailLog {
+    private val (fs, md) = IcebergInterop.currentMetadata(spark, path)
+    private lazy val byId = IcebergInterop.snapshotsById(md)
+    /** the CURRENT branch's ancestor chain (oldest→newest) — never the
+      * raw snapshots array, whose tail still carries commits abandoned by
+      * a rollback */
+    private lazy val chain =
+      IcebergInterop.ancestorChainOf(md, IcebergInterop.currentHeadId(md))
+    private def schemas: Seq[JsonNode] =
+      if (md.path("schemas").isArray) md.get("schemas").elements().asScala.toSeq
+      else Nil
+    private def snap(id: Long): JsonNode = byId.getOrElse(id, retainedOnly(id))
+
+    def latest: Long = chain.lastOption.getOrElse(-1L)
+
+    override def keys(after: Long, upTo: Long): Seq[Long] = {
+      val i = chain.indexOf(after)
+      if (after >= 0 && i < 0) retainedOnly(after)
+      val j = chain.indexOf(upTo)
+      if (upTo < 0) Nil else chain.slice(i + 1, if (j < 0) chain.size else j + 1)
     }
 
-  override def initialOffset(): Offset =
-    IcebergSnapshotOffset(startingSnapshotId.getOrElse(-1L))
-  override def latestOffset(): Offset =
-    IcebergSnapshotOffset(history().lastOption.getOrElse(-1L))
-  override def reportLatestOffset(): Offset = latestOffset()
-  override def deserializeOffset(json: String): Offset =
-    IcebergSnapshotOffset.fromJson(json)
+    /** the `added-files-size` summary bytes every Iceberg writer stamps;
+      * a snapshot without it admits as 0 bytes (toward progress) */
+    def bytes(id: Long): Long =
+      snap(id).path("summary").path("added-files-size").asLong(0L)
 
-  override def getDefaultReadLimit: ReadLimit =
-    maxSnapshotsPerTrigger.map(n => ReadLimit.maxFiles(n))
-      .getOrElse(ReadLimit.allAvailable())
-
-  private def snapCap(limit: ReadLimit): Option[Int] = limit match {
-    case f: ReadMaxFiles => Some(f.maxFiles)
-    case c: CompositeReadLimit =>
-      c.getReadLimits.toSeq.flatMap(snapCap).minOption
-    case _: ReadAllAvailable => maxSnapshotsPerTrigger
-    case _ => maxSnapshotsPerTrigger
-  }
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val hist0 = history()
-    val hist = availableNowEnd match {
-      case Some(end) if end >= 0 =>
-        val i = hist0.indexOf(end)
-        if (i >= 0) hist0.take(i + 1) else hist0
-      case Some(_) => Nil
-      case None => hist0
-    }
-    if (hist.isEmpty) return IcebergSnapshotOffset(-1L)
-    val s = start.asInstanceOf[IcebergSnapshotOffset].snapshotId
-    val startIdx = if (s >= 0) hist.indexOf(s) else -1
-    if (s >= 0 && startIdx < 0) return IcebergSnapshotOffset(hist.last)
-    val countIdx = snapCap(limit) match {
-      case Some(n) if s >= 0 => math.min(hist.size - 1, startIdx + n)
-      case _ => hist.size - 1
-    }
-    val endIdx = maxBytesPerTrigger match {
-      // batch 0 (the initial snapshot state) stays indivisible; byte
-      // admission governs the per-snapshot tail
-      case Some(budget) if s >= 0 =>
-        val bytes = addedBytes()
-        var i = startIdx
-        var acc = 0L
-        var stop = false
-        while (!stop && i < countIdx) {
-          val b = bytes.getOrElse(hist(i + 1), 0L)
-          if (i > startIdx && acc + b > budget) stop = true
-          else { acc += b; i += 1; if (acc >= budget) stop = true }
-        }
-        i
-      case _ => countIdx
-    }
-    IcebergSnapshotOffset(hist(endIdx))
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[IcebergSnapshotOffset].snapshotId
-    val e = end.asInstanceOf[IcebergSnapshotOffset].snapshotId
-    if (e == s || e < 0) return Array.empty
-    val (fs, md) = currentMetadata(spark, path)
-    if (md.path("format-version").asInt(1) > 3)
-      refuse(path, "is format version 4+")
-    // v3 streams like v2 (appends only; MoR states refuse at batch 0,
-    // DV-writing snapshots are change snapshots) — except column
-    // DEFAULT VALUES, which a fixed-schema scan would null-fill
-    if (md.path("format-version").asInt(1) >= 3) {
-      def hasDefault(node: com.fasterxml.jackson.databind.JsonNode): Boolean = {
-        val fields = node.path("fields")
-        fields.isArray && {
-          val it = fields.elements()
-          var found = false
-          while (it.hasNext && !found) {
-            val f = it.next()
-            found = (f.has("initial-default") && !f.get("initial-default").isNull) ||
-              (f.path("type").isObject && hasDefault(f.path("type")))
-          }
-          found
-        }
-      }
-      val schemaNodes =
-        (if (md.path("schemas").isArray) {
-          val b = Seq.newBuilder[com.fasterxml.jackson.databind.JsonNode]
-          val it = md.get("schemas").elements()
-          while (it.hasNext) b += it.next()
-          b.result()
-        } else Nil) ++ Option(md.get("schema")).toSeq
-      if (schemaNodes.exists(hasDefault))
-        refuse(path, "declares Iceberg v3 column default values — a " +
-          "fixed-schema stream would null-fill them")
-    }
-    def snapshotNode(id: Long) = {
-      val it = md.get("snapshots").elements()
-      var found: com.fasterxml.jackson.databind.JsonNode = null
-      while (it.hasNext && found == null) {
-        val n = it.next()
-        if (n.get("snapshot-id").asLong() == id) found = n
-      }
-      if (found == null)
-        throw new IllegalStateException(
-          s"iceberg stream over $path: snapshot $id is no longer " +
-            "retained (expire_snapshots outran this consumer) — restart " +
-            "the stream from a fresh checkpoint")
-      found
-    }
     // manifest-list records of one snapshot: (content, manifest path,
     // manifest added_snapshot_id)
-    def listRecords(snap: com.fasterxml.jackson.databind.JsonNode)
-        : Seq[(Long, String, Long)] =
-      readAvro(readBytes(fs, new HPath(
-        snap.get("manifest-list").asText()))).map { r =>
-        (fieldOpt(r, "content").map(longOf).getOrElse(0L),
-          r.get("manifest_path").toString,
-          fieldOpt(r, "added_snapshot_id").map(longOf).getOrElse(-1L))
+    private def listRecords(id: Long): Seq[(Long, String, Long)] =
+      readAvro(readBytes(fs, new HPath(snap(id).get("manifest-list").asText())))
+        .map { r =>
+          (fieldOpt(r, "content").map(longOf).getOrElse(0L),
+            r.get("manifest_path").toString,
+            fieldOpt(r, "added_snapshot_id").map(longOf).getOrElse(-1L))
+        }
+    private def dataFiles(manifest: String): Seq[(GenericRecord, GenericRecord)] =
+      readAvro(readBytes(fs, new HPath(manifest))).map { e =>
+        val df = e.get("data_file").asInstanceOf[GenericRecord]
+        val fmt = df.get("file_format").toString
+        if (!fmt.equalsIgnoreCase("parquet")) refuse(path, s"has $fmt data files")
+        (e, df)
       }
-    def dataFileOf(e2: GenericRecord): GenericRecord =
-      e2.get("data_file").asInstanceOf[GenericRecord]
-    def checkParquet(df: GenericRecord): Unit = {
-      val fmt = df.get("file_format").toString
-      if (!fmt.equalsIgnoreCase("parquet")) refuse(path, s"has $fmt data files")
-    }
 
-    val files: Seq[String] =
-      if (s < 0) {
-        // batch 0: the complete file set of snapshot e
-        val snap = snapshotNode(e)
-        val recs = listRecords(snap)
-        if (recs.exists(_._1 != 0L))
-          throw new IllegalStateException(
-            s"iceberg stream over $path: the table carries row-level " +
-              "delete files — a merge-on-read state cannot stream " +
-              "append-only; read it batch-side via readIceberg")
-        recs.flatMap { case (_, mp, _) =>
-          readAvro(readBytes(fs, new HPath(mp))).flatMap { e2 =>
-            val df = dataFileOf(e2)
-            checkParquet(df)
-            if (longOf(e2.get("status")) == 2L) None
-            else Some(df.get("file_path").toString)
-          }
-        }.distinct
-      } else {
-        val hist = history()
-        val si = hist.indexOf(s)
-        val ei = hist.indexOf(e)
-        if (si < 0)
-          throw new IllegalStateException(
-            s"iceberg stream over $path: snapshot $s is no longer " +
-              "retained (expire_snapshots outran this consumer) — restart " +
-              "the stream from a fresh checkpoint")
-        require(ei > si, s"iceberg stream over $path: end $e not after $s")
-        hist.slice(si + 1, ei + 1).flatMap { id =>
-          val snap = snapshotNode(id)
-          // schema gate mirrors the graft source's restart-safe rule:
-          // a snapshot whose schema ADDS columns the plan lacks refuses
-          // (the fixed-schema scan would silently drop them; a
-          // restarted stream plans with the widened schema and passes),
-          // while a NARROWER snapshot schema is the pre-change history
-          // a restarted stream replays while catching up — null-filled
-          // like additive evolution, never a wedge
-          if (snap.has("schema-id") && md.has("schemas")) {
-            val sid = snap.get("schema-id").asInt()
-            val snapCols = md.get("schemas").elements()
-            var cols = Set.empty[String]
-            while (snapCols.hasNext) {
-              val sn = snapCols.next()
-              if (sn.path("schema-id").asInt(-1) == sid) {
-                val fit = sn.path("fields").elements()
-                while (fit.hasNext) cols += fit.next().path("name").asText()
-              }
-            }
-            val added = cols -- schema.fieldNames.toSet
-            if (added.nonEmpty)
-              throw new IllegalStateException(
-                s"iceberg stream over $path: snapshot $id changes the " +
-                  s"table schema (added ${added.toSeq.sorted.mkString(", ")}) " +
-                  "— restart the stream to pick up the new schema")
-          }
-          val op = snap.path("summary").path("operation").asText("")
-          val recs = listRecords(snap)
-          // `replace` (Iceberg's compaction operation) and the graft
-          // mirror's `compact`/`cluster` rewrite the same rows into new
-          // files — invisible to a stream by Iceberg's own source
-          // contract: skipped silently, never streamed, never a
-          // failure. Anything else non-append is a row-level change.
-          // Delete manifests CARRIED from older snapshots don't make an
-          // append a change: position deletes reference files that
-          // existed before, and equality deletes strike only LOWER data
-          // sequence numbers — neither can touch this snapshot's added
-          // rows. Only a delete manifest the snapshot itself ADDED does.
-          val isRewrite = op == "replace" ||
-            op.startsWith("compact") || op.startsWith("cluster")
-          val isChange = !isRewrite &&
-            (op != "append" ||
-              recs.exists(r => r._1 != 0L && r._3 == id))
-          if (isChange && !skipChangeCommits)
-            throw new IllegalStateException(
-              s"iceberg stream over $path: snapshot $id is operation " +
-                s"'$op' — the source tails APPENDS; set read option " +
-                "skipChangeCommits=true to skip change snapshots")
-          if (isChange || isRewrite) Nil
-          else recs.flatMap { case (content, mp, addedBy) =>
-            // carried delete manifests contribute no streamed files
-            // (and may hold non-parquet DV entries) — data only
-            if (content != 0L) Nil
-            else readAvro(readBytes(fs, new HPath(mp))).flatMap { e2 =>
-              val df = dataFileOf(e2)
-              checkParquet(df)
-              val entrySnap = fieldOpt(e2, "snapshot_id").map(longOf)
-                .getOrElse(addedBy)
-              if (longOf(e2.get("status")) == 1L && entrySnap == id)
-                Some(df.get("file_path").toString)
-              else None
-            }
-          }.distinct
-        }
-      }
-    if (files.isEmpty) return Array.empty
-    // Footer probe (the batch reader's stable-columns rule): columns
-    // present in EVERY retained schema version must come FROM the
-    // files — identity partition values living only in manifest
-    // metadata, or renames, would null-fill through this fixed-schema
-    // scan. Columns ADDED by schema evolution are legitimately absent
-    // from older files (a restarted stream's catch-up batch spans
-    // them) and null-fill by name, matching Iceberg's by-id semantics.
-    val stableCols: Seq[String] =
-      if (!md.has("schemas")) schema.fieldNames.toSeq
-      else {
-        val perSchema = scala.collection.mutable.Buffer[Set[String]]()
-        val sit = md.get("schemas").elements()
-        while (sit.hasNext) {
-          val sn = sit.next()
-          var cols = Set.empty[String]
-          val fit = sn.path("fields").elements()
-          while (fit.hasNext) cols += fit.next().path("name").asText()
-          perSchema += cols
-        }
-        schema.fieldNames.toSeq.filter(n => perSchema.forall(_.contains(n)))
-      }
-    val probe = graft.sources.FooterSchema.of(
-      spark.sparkContext.hadoopConfiguration, files.head).fieldNames.toSet
-    val missing = stableCols.filterNot(probe.contains)
-    if (missing.nonEmpty) {
-      // RENAMED tables whose files carry parquet FIELD IDS (real
-      // Iceberg writers always stamp them) upgrade to id-resolution
-      // (r16): the scan schema annotates each column's Iceberg field
-      // id and Spark's parquet readers match by id — old-name files
-      // read their real data positionally, exactly the batch reader's
-      // rename rule. Id-less files (hive-migrated / graft exports)
-      // keep the loud refusal toward readIceberg's name-mapping path.
-      val conf = spark.sparkContext.hadoopConfiguration
-      val allIdStamped = files.forall { f =>
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new HPath(f), conf))
-        try {
-          val sc = rdr.getFooter.getFileMetaData.getSchema
-          (0 until sc.getFieldCount).forall(i => sc.getType(i).getId != null)
-        } finally rdr.close()
-      }
-      if (!allIdStamped)
+    def snapshot(id: Long): Seq[String] = {
+      val recs = listRecords(id)
+      if (recs.exists(_._1 != 0L))
         throw new IllegalStateException(
-          s"iceberg stream over $path: data files lack declared columns " +
-            s"${missing.mkString(", ")} (identity partition values in " +
-            "manifest metadata, or an id-less rename) — read this table " +
-            "batch-side via readIceberg")
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-      val b = scanBatch(files, IcebergInterop.annotateFieldIds(schema,
-        IcebergInterop.currentSchemaNode(md, path)))
-      currentBatch = b
-      return b.planInputPartitions()
+          s"$label: the table carries row-level " +
+            "delete files — a merge-on-read state cannot stream " +
+            "append-only; read it batch-side via readIceberg")
+      recs.flatMap { case (_, mp, _) =>
+        dataFiles(mp).collect { case (e, df) if longOf(e.get("status")) != 2L =>
+          df.get("file_path").toString }
+      }.distinct
     }
-    val b = scanBatch(files)
-    currentBatch = b
-    b.planInputPartitions()
+
+    def commit(id: Long): TailCommit = {
+      val s = snap(id)
+      // schema gate, the graft source's restart-safe rule: a snapshot
+      // whose schema ADDS columns the plan lacks refuses (the fixed-schema
+      // scan would silently drop them; a restarted stream plans with the
+      // widened schema), a NARROWER one (a restarted stream's catch-up)
+      // null-fills like additive evolution
+      if (s.has("schema-id")) {
+        val sid = s.get("schema-id").asInt()
+        val added = schemas.filter(_.path("schema-id").asInt(-1) == sid)
+          .flatMap(fieldNames).toSet -- schema.fieldNames.toSet
+        if (added.nonEmpty)
+          throw new IllegalStateException(
+            s"$label: snapshot $id changes the " +
+              s"table schema (added ${added.toSeq.sorted.mkString(", ")}) " +
+              "— restart the stream to pick up the new schema")
+      }
+      val op = s.path("summary").path("operation").asText("")
+      // `replace` (Iceberg's compaction operation) and the graft mirror's
+      // `compact`/`cluster` rewrite the same rows into new files —
+      // invisible to a stream by Iceberg's own source contract. Anything
+      // else non-append is a row-level change. Delete manifests CARRIED
+      // from older snapshots don't make an append a change: position
+      // deletes reference files that existed before, and equality deletes
+      // strike only LOWER data sequence numbers — neither can touch this
+      // snapshot's added rows. Only a delete manifest it ADDED does.
+      if (op == "replace" || op.startsWith("compact") || op.startsWith("cluster"))
+        return TailCommit.Invisible
+      lazy val recs = listRecords(id)
+      if (op != "append" || recs.exists(r => r._1 != 0L && r._3 == id))
+        return TailCommit.Change(s"snapshot $id is operation '$op'")
+      // carried delete manifests contribute no streamed files (and may
+      // hold non-parquet DV entries) — data only
+      TailCommit.Append(recs.filter(_._1 == 0L).flatMap { case (_, mp, addedBy) =>
+        dataFiles(mp).collect {
+          case (e, df) if longOf(e.get("status")) == 1L &&
+              fieldOpt(e, "snapshot_id").map(longOf).getOrElse(addedBy) == id =>
+            df.get("file_path").toString
+        }
+      }.distinct)
+    }
+
+    def scan(files: Seq[String]): Batch = {
+      val version = md.path("format-version").asInt(1)
+      if (version > 3) refuse(path, "is format version 4+")
+      // v3 streams like v2 (appends only; MoR states refuse at batch 0,
+      // DV-writing snapshots are change snapshots) — except column
+      // DEFAULT VALUES, which a fixed-schema scan would null-fill
+      def hasDefault(node: JsonNode): Boolean =
+        node.path("fields").elements().asScala.exists(f =>
+          (f.has("initial-default") && !f.get("initial-default").isNull) ||
+            (f.path("type").isObject && hasDefault(f.path("type"))))
+      if (version == 3 && (schemas ++ Option(md.get("schema"))).exists(hasDefault))
+        refuse(path, "declares Iceberg v3 column default values — a " +
+          "fixed-schema stream would null-fill them")
+      // Footer probe (the batch reader's stable-columns rule): columns
+      // present in EVERY retained schema version must come FROM the files
+      // — identity partition values living only in manifest metadata, or
+      // renames, would null-fill through this fixed-schema scan. Columns
+      // ADDED by schema evolution are legitimately absent from older
+      // files (a restarted stream's catch-up batch spans them) and
+      // null-fill by name, matching Iceberg's by-id semantics.
+      val stableCols = schema.fieldNames.toSeq.filter(n =>
+        schemas.forall(fieldNames(_).contains(n)))
+      val conf = spark.sparkContext.hadoopConfiguration
+      val missing = files.headOption.toSeq.flatMap { f =>
+        val probe = graft.sources.FooterSchema.of(conf, f).fieldNames.toSet
+        stableCols.filterNot(probe.contains)
+      }
+      val scanSchema = if (missing.isEmpty) schema else {
+        // RENAMED tables whose files carry parquet FIELD IDS (real Iceberg
+        // writers always stamp them) upgrade to id-resolution: the scan
+        // schema annotates each column's Iceberg field id and Spark's
+        // parquet readers match by id — old-name files read their real
+        // data positionally, the batch reader's rename rule. Id-less
+        // files (hive-migrated / graft exports) refuse toward
+        // readIceberg's name-mapping path.
+        val allIdStamped = files.forall { f =>
+          val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new HPath(f), conf))
+          try {
+            val sc = rdr.getFooter.getFileMetaData.getSchema
+            (0 until sc.getFieldCount).forall(i => sc.getType(i).getId != null)
+          } finally rdr.close()
+        }
+        if (!allIdStamped)
+          throw new IllegalStateException(
+            s"$label: data files lack declared columns " +
+              s"${missing.mkString(", ")} (identity partition values in " +
+              "manifest metadata, or an id-less rename) — read this table " +
+              "batch-side via readIceberg")
+        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+        IcebergInterop.annotateFieldIds(schema, IcebergInterop.currentSchemaNode(md, path))
+      }
+      ParquetTableBridge.scanBuilder(spark, "iceberg-stream", files, scanSchema,
+        options).build().toBatch
+    }
   }
-
-  private def scanBatch(files: Seq[String],
-      scanSchema: StructType = schema): Batch =
-    ParquetTableBridge.scanBuilder(spark, "iceberg-stream", files, scanSchema,
-      options).build().toBatch
-
-  // factory from the same per-batch scan (see DeltaMicroBatchStream)
-  @volatile private var currentBatch: Batch = _
-  override def createReaderFactory(): PartitionReaderFactory =
-    (if (currentBatch != null) currentBatch else scanBatch(Nil))
-      .createReaderFactory()
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }

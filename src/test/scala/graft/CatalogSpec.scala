@@ -697,35 +697,34 @@ class CatalogSpec extends AnyFunSuite {
   test("micro-batch stream honors the engine-passed ReadLimit") {
     import spark.implicits._
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    import graft.sources.v2.{GraftMicroBatchStream, GraftOffset}
-    val path = tmpDir("graft_rl_").toString + "/t"
-    val t = graft.sources.GraftTable.create(spark, path,
-      Seq((1L, "a")).toDF("id", "v"))
-    t.append(Seq((2L, "b")).toDF("id", "v"))
-    t.append(Seq((3L, "c")).toDF("id", "v"))
-    t.append(Seq((4L, "d")).toDF("id", "v")) // latest version = 3
-    def mk(opts: Map[String, String]) = new GraftMicroBatchStream(spark, path,
-      t.read().schema,
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        scala.jdk.CollectionConverters.MapHasAsJava(opts).asJava))
-    // the engine may pass a limit the source never declared (e.g.
-    // Trigger.AvailableNow wrapping) — it must be honored, not
-    // re-derived from the source's own option
-    val bare = mk(Map.empty)
-    assert(bare.latestOffset(GraftOffset(0), ReadLimit.maxFiles(1))
-      .asInstanceOf[GraftOffset].version == 1)
-    assert(bare.latestOffset(GraftOffset(0), ReadLimit.compositeLimit(
-        Array(ReadLimit.maxFiles(2), ReadLimit.maxFiles(1))))
-      .asInstanceOf[GraftOffset].version == 1)
-    assert(bare.latestOffset(GraftOffset(0), ReadLimit.allAvailable())
-      .asInstanceOf[GraftOffset].version == 3)
-    // allAvailable falls back to the source's own maxCommitsPerTrigger
-    val opt = mk(Map("maxCommitsPerTrigger" -> "2"))
-    assert(opt.latestOffset(GraftOffset(0), ReadLimit.allAvailable())
-      .asInstanceOf[GraftOffset].version == 2)
-    // the initial snapshot is one indivisible batch regardless of limit
-    assert(opt.latestOffset(GraftOffset(-1), ReadLimit.maxFiles(1))
-      .asInstanceOf[GraftOffset].version == 3)
+    for (t <- TailFormats.all(spark)) {
+      (2L to 4L).foreach(i => t.append(Seq((i, s"v$i")).toDF("id", "v")))
+      val k = t.keys // four keys: the export, then three appends
+      def mk(opts: Map[String, String]) = TailFormats.stream(t, opts)
+      def end(s: graft.sources.v2.LogTailStream, start: Long, limit: ReadLimit) =
+        s.latestOffset(s.deserializeOffset(t.json(start)), limit).json
+      // the engine may pass a limit the source never declared (e.g.
+      // Trigger.AvailableNow wrapping) — it must be honored, not
+      // re-derived from the source's own option
+      val bare = mk(Map.empty)
+      assert(end(bare, k(0), ReadLimit.maxFiles(1)) == t.json(k(1)), t.name)
+      assert(end(bare, k(0), ReadLimit.compositeLimit(
+        Array(ReadLimit.maxFiles(2), ReadLimit.maxFiles(1)))) == t.json(k(1)), t.name)
+      assert(end(bare, k(0), ReadLimit.allAvailable()) == t.json(k(3)), t.name)
+      // allAvailable falls back to the source's own per-trigger cap
+      val opt = mk(Map(t.capOption -> "2"))
+      assert(end(opt, k(0), ReadLimit.allAvailable()) == t.json(k(2)), t.name)
+      // the initial snapshot is one indivisible batch regardless of limit
+      assert(end(opt, -1L, ReadLimit.maxFiles(1)) == t.json(k(3)), t.name)
+      // Trigger.AvailableNow pins the drain end when it is prepared: a
+      // commit landing after that is not admitted by this run
+      val now = mk(Map.empty)
+      now.prepareForTriggerAvailableNow()
+      t.append(Seq((5L, "e")).toDF("id", "v"))
+      assert(end(now, k(0), ReadLimit.allAvailable()) == t.json(k(3)), t.name)
+      assert(end(now, k(3), ReadLimit.allAvailable()) == t.json(k(3)), t.name)
+      assert(end(mk(Map.empty), k(3), ReadLimit.allAvailable()) == t.json(k(4)), t.name)
+    }
   }
 
   test("streaming read fails loudly on a mid-stream column rename") {

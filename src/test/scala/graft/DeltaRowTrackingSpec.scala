@@ -287,59 +287,35 @@ class DeltaRowTrackingSpec extends AnyFunSuite {
 class AvailableNowSpec extends AnyFunSuite {
   import TestSpark._
 
-  test("Delta stream drains a multi-commit tail in bounded batches") {
-    import spark.implicits._
-    val t = GraftTable.create(spark, tmp("graft_an_src_"),
-      Seq((1L, "a")).toDF("id", "v"))
-    val target = tmp("graft_an_delta_")
-    DeltaInterop.exportSnapshot(t, target)
-    val ckpt = tmpDir("graft_an_ck_").toString
-    val outDir = tmpDir("graft_an_out_").toString
-    def drain(): org.apache.spark.sql.streaming.StreamingQuery = {
-      val q = spark.readStream.format("graft.sources.v2.DeltaSource")
-        .option("maxCommitsPerTrigger", "1").load(target)
-        .writeStream.format("parquet")
-        .option("checkpointLocation", ckpt).option("path", outDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.awaitTermination()
-      q
+  for ((format, title) <- Seq(
+      "graft" -> "graft-table stream drains under AvailableNow in bounded batches",
+      "delta" -> "Delta stream drains a multi-commit tail in bounded batches",
+      "iceberg" -> "Iceberg stream drains a multi-commit tail in bounded batches")) {
+    test(title) {
+      import spark.implicits._
+      val t = TailFormats.all(spark).find(_.name == format).get
+      val ckpt = tmpDir("graft_an_ck_").toString
+      val outDir = tmpDir("graft_an_out_").toString
+      def drain(): org.apache.spark.sql.streaming.StreamingQuery = {
+        val q = spark.readStream.format(t.format)
+          .option(t.capOption, "1").load(t.path)
+          .writeStream.format("parquet")
+          .option("checkpointLocation", ckpt).option("path", outDir)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .outputMode("append").start()
+        q.awaitTermination()
+        q
+      }
+      drain() // batch 0 = the indivisible initial snapshot
+      // a 4-commit TAIL accumulates; the catch-up must admit it in
+      // per-trigger-bounded batches, not one unbounded batch
+      (2 to 5).foreach(i => t.append(Seq((i.toLong, s"v$i")).toDF("id", "v")))
+      val q2 = drain()
+      assert(spark.read.parquet(outDir).count() == 5)
+      val batches = q2.recentProgress.toSeq.filter(_.numInputRows > 0)
+      assert(batches.size >= 4,
+        s"expected a bounded multi-batch drain, got ${batches.size}")
     }
-    drain() // batch 0 = the indivisible initial snapshot
-    // a 4-commit TAIL accumulates; the catch-up must admit it in
-    // maxCommitsPerTrigger-bounded batches, not one unbounded batch
-    (2 to 5).foreach(i => DeltaInterop.appendToDelta(
-      Seq((i.toLong, s"v$i")).toDF("id", "v"), target))
-    val q2 = drain()
-    assert(spark.read.parquet(outDir).count() == 5)
-    val batches = q2.recentProgress.toSeq.filter(_.numInputRows > 0)
-    assert(batches.size >= 4,
-      s"expected a bounded multi-batch drain, got ${batches.size}")
-  }
-
-  test("graft-table stream drains under AvailableNow in bounded batches") {
-    import spark.implicits._
-    val t = GraftTable.create(spark, tmp("graft_an_g_"),
-      Seq((1L, "a")).toDF("id", "v"))
-    val ckpt = tmpDir("graft_ang_ck_").toString
-    val outDir = tmpDir("graft_ang_out_").toString
-    def drain(): org.apache.spark.sql.streaming.StreamingQuery = {
-      val q = spark.readStream.format("graft.sources.v2.GraftSource")
-        .option("maxCommitsPerTrigger", "1").load(t.root)
-        .writeStream.format("parquet")
-        .option("checkpointLocation", ckpt).option("path", outDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.awaitTermination()
-      q
-    }
-    drain()
-    (2 to 4).foreach(i => t.append(Seq((i.toLong, s"v$i")).toDF("id", "v")))
-    val q2 = drain()
-    assert(spark.read.parquet(outDir).count() == 4)
-    val batches = q2.recentProgress.toSeq.filter(_.numInputRows > 0)
-    assert(batches.size >= 3,
-      s"expected a bounded multi-batch drain, got ${batches.size}")
   }
 
   test("maxBytesPerTrigger: skewed commit sizes drain in byte-bounded batches") {
